@@ -27,17 +27,26 @@ CHAIN_PLUS = {
 }
 
 
-@pytest.mark.parametrize("method", ["linear", "doubling"])
-def test_closure_plus(spark, method, monkeypatch):
-    # force the distributed loop so linear/doubling stay covered now that
-    # the r6 single-task fast path would otherwise absorb small graphs
-    # (the fast path has its own differential suite, test_local_closure.py)
+@pytest.mark.parametrize("phase", ["linear", "doubling"])
+def test_closure_plus(spark, phase, monkeypatch):
+    # force the distributed loop (the single-task fast path has its own
+    # differential suite, test_local_closure.py). "linear" closes within the
+    # one-hop prefix; "doubling" is a chain long enough that the loop also
+    # runs its reach ⋈ reach rounds after AUTO_SWITCH_ROUND
     monkeypatch.setattr(closure, "LOCAL_EDGE_BOUND", 0)
+    if phase == "linear":
+        pairs, want = CHAIN, CHAIN_PLUS
+    else:
+        depth = closure.AUTO_SWITCH_ROUND + 8
+        chain = [(f"n{i:02d}", f"n{i + 1:02d}") for i in range(depth)]
+        pairs = chain + [("x", "y")]
+        want = {(a, b) for i, (a, _) in enumerate(chain) for _, b in chain[i:]}
+        want |= {("x", "y")}
     got = {
         (r.subj, r.obj)
-        for r in closure.transitive_closure(_pairs(spark, CHAIN), method=method).collect()
+        for r in closure.transitive_closure(_pairs(spark, pairs)).collect()
     }
-    assert got == CHAIN_PLUS
+    assert got == want
 
 
 def test_closure_star_includes_identity(spark):

@@ -100,34 +100,3 @@ def test_fused_contradictions_equal_per_rule(spark, fixture_docs_df):
     assert fs == want
     assert len(fs) > 0
 
-
-def test_fire_pairs_all_is_hash_join(spark):
-    """The all-shapes pair fusion must stay a (broadcast/sort-merge/shuffled)
-    HASH join: its composite key mixes a j1-CASE on the build side with the
-    exploded tag+key on the probe side, and if a refactor ever makes a key
-    non-side-separable Catalyst silently demotes the plan to a nested loop
-    — a catastrophe at scale this pins against."""
-    import re
-
-    from zelph_spark.reasoning.fused import fire_pairs_all, fuse_rules
-
-    edges = spark.createDataFrame(
-        [("Q1", "P31", "Q2"), ("Q2", "P279", "Q3")],
-        "subj string, pred string, obj string",
-    )
-    groups = fuse_rules([r for r in Rz.wikidata_rules() if not r.negated])
-    shaped = [(sh, s) for sh, specs in groups.pairs.items() for s in specs]
-    out = fire_pairs_all(edges, edges, shaped)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    joins = re.findall(
-        r"BroadcastHashJoin|SortMergeJoin|ShuffledHashJoin"
-        r"|BroadcastNestedLoopJoin|CartesianProduct",
-        plan,
-    )
-    assert joins, plan
-    assert "BroadcastNestedLoopJoin" not in joins
-    assert "CartesianProduct" not in joins
-    # and it still deduces the instance-of-subclass fact the pair rules
-    # encode ((X P31 C), (C P279 D) => (X P31 D))
-    got = {(r.subj, r.pred, r.obj) for r in out.collect()}
-    assert ("Q1", "P31", "Q3") in got

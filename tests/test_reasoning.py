@@ -220,7 +220,7 @@ def test_query_mode_returns_bindings(spark, fixture_facts):
 
 
 # ---------------------------------------------------------------------------
-# Transitive-closure acceleration (split_transitive + closure injection)
+# Transitivity through the plain semi-naive loop
 # ---------------------------------------------------------------------------
 
 META_TRANS = R(
@@ -230,61 +230,34 @@ META_TRANS = R(
 )
 
 
-def test_split_transitive_shapes():
-    from zelph_spark.reasoning import split_transitive
-
-    const = R("t-const", [P("?a", "p", "?b"), P("?b", "p", "?c")], P("?a", "p", "?c"))
-    # disqualified: consequence predicate differs / negated / repeated var
-    other = R("plain", [P("?a", "q", "?b")], P("?b", "q2", "?a"))
-    notrans = R(
-        "not-trans", [P("?a", "p", "?b"), P("?b", "p", "?c")], P("?a", "q", "?c")
-    )
-    sp = split_transitive([const, META_TRANS, other, notrans])
-    assert sp.const_preds == {"p"}
-    assert sp.memberships == [("~", "Trans")]
-    assert [r.rule_id for r in sp.rest] == ["plain", "not-trans"]
-    assert split_transitive([other, notrans]) is None
-
-
 def test_transitive_doubling_differential_deep_chain(spark):
-    """Deep chain under the wikidata-style meta-rule: closure injection and
-    the plain loop produce the identical fixpoint (confluence), both match
-    the Datalog oracle, and the accelerated driver loop quiesces in 2
-    rounds (saturate + verify) regardless of chain depth."""
+    """Deep chain under the wikidata-style meta-rule: the fixpoint matches
+    the Datalog oracle, and the loop quiesces in O(log depth) rounds — the
+    delta joins the full extent at the other position, so path length
+    doubles per round."""
     depth = 48
     facts = [(f"n{i:03d}", "p", f"n{i + 1:03d}") for i in range(depth)]
     facts += [("p", "~", "Trans")]
-    edges = _df(spark, facts)
-    fast = run_fixpoint(edges, [META_TRANS], transitive_doubling=True)
-    slow = run_fixpoint(edges, [META_TRANS], transitive_doubling=False)
-    got = _edge_set(fast.edges)
-    assert got == _edge_set(slow.edges)
+    res = run_fixpoint(_df(spark, facts), [META_TRANS])
+    got = _edge_set(res.edges)
     assert got == oracle.stratified_fixpoint(set(map(tuple, facts)), [META_TRANS])
-    assert fast.iterations <= 2
-    # the DEFAULT (plain) loop is already O(log d): the delta joins the
-    # full extent at the other position, doubling path length per round
-    assert slow.iterations <= 2 + math.ceil(math.log2(depth))
-    assert verify_fixpoint(fast, [META_TRANS])
+    assert res.iterations <= 2 + math.ceil(math.log2(depth))
+    assert verify_fixpoint(res, [META_TRANS])
 
 
 def test_transitive_membership_discovered_mid_fixpoint(spark):
     """The transitive-predicate SET is data and can grow during the run
     (e.g. wikidata.zph's transitive-inverse rule): a membership fact
-    deduced in round 1 must trigger closure injection for its predicate."""
+    deduced in round 1 must make the meta-rule close its predicate."""
     mark = R("mark", [P("?P", "mark", "yes")], P("?P", "~", "Trans"))
     depth = 16
     facts = [(f"m{i:02d}", "p", f"m{i + 1:02d}") for i in range(depth)]
     facts += [("p", "mark", "yes")]
-    edges = _df(spark, facts)
-    fast = run_fixpoint(edges, [META_TRANS, mark], transitive_doubling=True)
-    slow = run_fixpoint(edges, [META_TRANS, mark], transitive_doubling=False)
-    got = _edge_set(fast.edges)
-    assert got == _edge_set(slow.edges)
+    res = run_fixpoint(_df(spark, facts), [META_TRANS, mark])
+    got = _edge_set(res.edges)
     assert got == oracle.stratified_fixpoint(
         set(map(tuple, facts)), [META_TRANS, mark]
     )
-    # round 0: mark fires; round 1: p discovered + closed; round 2: quiesce
-    assert fast.iterations <= 3
     assert ("m00", "p", f"m{depth:02d}") in got
 
 
@@ -294,41 +267,26 @@ def test_transitive_const_shape_differential(spark):
     )
     facts = [("w", "part", "x"), ("x", "part", "y"), ("y", "part", "z"),
              ("q", "other", "w")]
-    edges = _df(spark, facts)
-    fast = run_fixpoint(edges, [part_of], transitive_doubling=True)
-    slow = run_fixpoint(edges, [part_of], transitive_doubling=False)
-    got = _edge_set(fast.edges)
-    assert got == _edge_set(slow.edges)
+    res = run_fixpoint(_df(spark, facts), [part_of])
+    got = _edge_set(res.edges)
+    assert got == oracle.stratified_fixpoint(set(facts), [part_of])
     assert ("w", "part", "z") in got
-    assert verify_fixpoint(fast, [part_of])
+    assert verify_fixpoint(res, [part_of])
 
 
-def test_bucketed_base_differential_and_catalog_hygiene(spark, monkeypatch):
-    """The bucketed-base anti-join split ((cand \\ base) \\ deltas, base read
-    from a bucketed+sorted table so its side never re-exchanges) must be
-    invisible semantically: identical fixpoint output vs the plain
-    union-anti-join path, and no zelph_fix_base_* table may survive in the
-    session catalog (the files live in the per-run scratch dir, which is
-    deleted — a leaked catalog entry would poison later saveAsTable calls)."""
+def test_taxonomy_fixpoint_matches_oracle(spark):
+    """A taxonomy with a transitive subclass chain under the full wikidata
+    ruleset: the default loop (per-round anti-join against base plus the
+    accumulated deltas) matches the Datalog oracle."""
     facts = sorted(
         {(f"Q{i}", "P31", f"Q{100 + i % 7}") for i in range(40)}
         | {(f"Q{100 + i}", "P279", f"Q{100 + i + 1}") for i in range(6)}
         | {("P279", "~", "Trans")}
     )
-    edges = _df(spark, facts)
-    monkeypatch.setenv("ZELPH_FIXPOINT_BUCKET_BASE", "1")
-    on = run_fixpoint(edges, Rz.wikidata_rules())
-    monkeypatch.setenv("ZELPH_FIXPOINT_BUCKET_BASE", "0")
-    off = run_fixpoint(edges, Rz.wikidata_rules())
-    got = _edge_set(on.edges)
-    assert got == _edge_set(off.edges)
+    res = run_fixpoint(_df(spark, facts), Rz.wikidata_rules())
+    got = _edge_set(res.edges)
     assert got == oracle.stratified_fixpoint(set(facts), Rz.wikidata_rules())
-    assert on.iterations == off.iterations
-    leftovers = [
-        t.name for t in spark.catalog.listTables()
-        if t.name.startswith("zelph_fix_base_")
-    ]
-    assert leftovers == []
+    assert verify_fixpoint(res, Rz.wikidata_rules())
 
 
 def test_inherit_factoring_differential(spark, monkeypatch):
@@ -364,10 +322,9 @@ def test_inherit_factoring_differential(spark, monkeypatch):
     assert verify_fixpoint(fast, Rz.wikidata_rules())
 
 
-def test_fuse_shape_mode_differential(spark, monkeypatch):
-    """[r6] The per-shape fused evaluation (new default — measured faster
-    at both 300k- and 4.4M-fact scales) and the packed all-shapes variant
-    must produce identical fixpoints on a corpus that exercises every pair
+def test_fuse_shape_mode_differential(spark):
+    """[r6] The per-shape fused evaluation (one join pair per (j1, j2)
+    shape) matches the Datalog oracle on a corpus that exercises every pair
     shape in the wikidata ruleset plus singles, NAF-free recursion and the
     inheritance interleaving."""
     chain = [(f"N{i}", "P279", f"N{i+1}") for i in range(6)]
@@ -378,11 +335,6 @@ def test_fuse_shape_mode_differential(spark, monkeypatch):
            ("A", "P461", "B"), ("A", "P31", "KA"),
            ("C", "P1696", "D"), ("C", "P31", "KC")}
     )
-    edges = _df(spark, facts)
-    monkeypatch.setenv("ZELPH_FUSE_ALL_SHAPES", "0")
-    per_shape = run_fixpoint(edges, Rz.wikidata_rules())
-    monkeypatch.setenv("ZELPH_FUSE_ALL_SHAPES", "1")
-    all_shapes = run_fixpoint(edges, Rz.wikidata_rules())
-    got = _edge_set(per_shape.edges)
-    assert got == _edge_set(all_shapes.edges)
+    res = run_fixpoint(_df(spark, facts), Rz.wikidata_rules())
+    got = _edge_set(res.edges)
     assert got == oracle.stratified_fixpoint(set(facts), Rz.wikidata_rules())

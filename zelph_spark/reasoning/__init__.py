@@ -1,5 +1,5 @@
 from .compiler import bind_condition, compile_rule_body, evaluate_query, project_consequence
-from .fixpoint import FixpointResult, evaluate_contradictions, run_fixpoint, split_transitive, verify_fixpoint
+from .fixpoint import FixpointResult, evaluate_contradictions, run_fixpoint, verify_fixpoint
 
 __all__ = [
     "bind_condition",
@@ -9,6 +9,5 @@ __all__ = [
     "FixpointResult",
     "evaluate_contradictions",
     "run_fixpoint",
-    "split_transitive",
     "verify_fixpoint",
 ]

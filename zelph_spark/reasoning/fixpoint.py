@@ -17,8 +17,9 @@ the distributed analog of ``Reasoning::run`` (``reasoning.cpp:57-211``) and
 - NAF rules form stratum 2 (``reasoning.cpp:102-161``): they run only at
   positive quiescence; anything they deduce re-opens the positive stratum,
   and the alternation repeats until the NAF round is silent;
-- every round localCheckpoints the full and delta frames — fixpoint lineage
-  otherwise grows linearly and re-executes from scratch (§7 hard part 1);
+- every round lands its delta as parquet and reads ``full`` back as base
+  plus the delta files — fixpoint lineage otherwise grows linearly and
+  re-executes from scratch (§7 hard part 1);
 - contradiction rules (consequence ``!``) never feed the delta: they are
   evaluated once at the end against the saturated graph and returned as a
   (rule_id, bindings) DataFrame — the distributed form of zelph's counted
@@ -31,6 +32,10 @@ deduce nothing new.
 
 from __future__ import annotations
 
+import os
+import shutil
+import tempfile
+import time
 from dataclasses import dataclass, field
 from functools import reduce
 
@@ -108,93 +113,6 @@ def _distinct_preds(df: DataFrame) -> set:
     return {r.pred for r in df.select("pred").distinct().collect()}
 
 
-@dataclass
-class TransitiveSplit:
-    """Transitivity rules factored out for closure-slice acceleration."""
-
-    rest: list  # the remaining positive rules (fired normally)
-    const_preds: set  # p from (?a p ?b),(?b p ?c) => (?a p ?c)
-    memberships: list  # (M, t) from the meta shape below
-
-
-def split_transitive(rules: list[Rule]):
-    """Factor transitivity out of a ruleset so the driver can saturate each
-    transitive predicate with :func:`zelph_spark.closure.transitive_closure`
-    (the adaptive linear->doubling strategy) instead of rediscovering paths
-    through the generic rule machinery every round.
-
-    Recognized shapes (anything else stays in ``rest``):
-
-    - const:  ``(?a p ?b), (?b p ?c) => (?a p ?c)`` with constant ``p`` —
-      the predicate is transitive statically;
-    - meta:   ``(?r M t), (?x ?r ?y), (?y ?r ?z) => (?x ?r ?z)`` with
-      constant ``M``/``t`` (wikidata.zph line 36: ``?R ~ transitive``) —
-      the transitive-predicate SET is data: ``{r | (r M t) in facts}`` and
-      can GROW during the fixpoint (e.g. the transitive-inverse rule), so
-      membership is re-resolved from each delta.
-
-    Returns ``None`` when nothing was factored (caller keeps the plain
-    loop). Guards: negation, inequality, extra consequences and fresh
-    variables all disqualify — those need the general path.
-    """
-    rest: list = []
-    const_preds: set = set()
-    memberships: list = []
-    for r in rules:
-        if (
-            r.negated
-            or r.unequals
-            or r.is_contradiction
-            or r.extra_consequences
-            or r.fresh_vars
-        ):
-            rest.append(r)
-            continue
-        cons = r.consequence
-        conds = r.conditions
-        matched = False
-        if len(conds) == 2 and not is_var(conds[0].pred):
-            c1, c2 = conds
-            a, b, c = c1.subj, c1.obj, c2.obj
-            if (
-                c1.pred == c2.pred
-                and c2.subj == b
-                and all(is_var(t) for t in (a, b, c))
-                and len({a, b, c}) == 3
-                and (cons.subj, cons.pred, cons.obj) == (a, c1.pred, c)
-            ):
-                const_preds.add(c1.pred)
-                matched = True
-        elif len(conds) == 3:
-            for mi in range(3):
-                m = conds[mi]
-                chain = [conds[i] for i in range(3) if i != mi]
-                if is_var(m.pred) or is_var(m.obj) or not is_var(m.subj):
-                    continue
-                rv = m.subj
-                for c1, c2 in (chain, chain[::-1]):
-                    x, y, z = c1.subj, c1.obj, c2.obj
-                    if (
-                        c1.pred == rv
-                        and c2.pred == rv
-                        and c2.subj == y
-                        and all(is_var(t) for t in (x, y, z))
-                        and len({x, y, z, rv}) == 4
-                        and (cons.subj, cons.pred, cons.obj) == (x, rv, z)
-                    ):
-                        memberships.append((m.pred, m.obj))
-                        matched = True
-                        break
-                if matched:
-                    break
-        if not matched:
-            rest.append(r)
-    if not const_preds and not memberships:
-        return None
-    return TransitiveSplit(rest=rest, const_preds=const_preds,
-                           memberships=memberships)
-
-
 @dataclass(frozen=True)
 class InheritSpec:
     """A factored chain-inheritance rule (?K p ?P),(?X s ?K) => (?X p ?P)."""
@@ -222,8 +140,9 @@ def split_inherit(rules: list[Rule]):
     repeated application of the factored rule.
 
     Guards: negation, inequality, contradiction, extra consequences and
-    fresh variables disqualify; p == s is plain transitivity (split_transitive
-    territory), repeated variables inside a condition disqualify.
+    fresh variables disqualify; p == s is plain transitivity (left to the
+    semi-naive loop, which already doubles path length per round), repeated
+    variables inside a condition disqualify.
     Returns (rest, specs)."""
     rest: list = []
     specs: list[InheritSpec] = []
@@ -289,39 +208,6 @@ def _var_pred_guards(rules: list[Rule]):
                         pairs.append(key)
                     break
     return guards, pairs
-
-
-def _materialize(df: DataFrame, scratch: str | None, name: str) -> DataFrame:
-    """Cut lineage AND reset Catalyst size statistics.
-
-    ``localCheckpoint`` alone carries the origin plan's estimated
-    sizeInBytes forward (verified on Spark 4.1: a checkpointed join's stats
-    are the PRODUCT of its inputs' carried stats). In an iterative fixpoint
-    the delta feeds back into the next round's joins, so the estimate
-    compounds exponentially and the driver ends up multiplying BigIntegers
-    with millions of digits inside SizeInBytesOnlyStatsPlanVisitor — a
-    single-threaded stall that dwarfs the actual cluster work. A parquet
-    round-trip gives the next round a scan with REAL file statistics.
-    """
-    if scratch is None:
-        return df.localCheckpoint()
-    path = f"{scratch}/{name}"
-    df.write.mode("overwrite").parquet(path)
-    return df.sparkSession.read.parquet(path)
-
-
-def _new_facts(
-    candidates: DataFrame | None,
-    known: DataFrame,
-    scratch: str | None = None,
-    name: str = "delta",
-) -> DataFrame | None:
-    if candidates is None:
-        return None
-    out = candidates.dropDuplicates(EDGE_COLS).join(
-        known, on=EDGE_COLS, how="left_anti"
-    )
-    return _materialize(out, scratch, name)
 
 
 def deduced_wrong_contradictions(
@@ -411,35 +297,26 @@ def run_fixpoint(
     max_iter: int = 100,
     fuse: bool = True,
     wrong_facts: DataFrame | None = None,
-    transitive_doubling: bool | None = None,
 ) -> FixpointResult:
     """Saturate ``edges`` (string or long ids — any equality-joinable type)
     under ``rules``; then evaluate ``contradiction_rules`` once.
 
-    ``transitive_doubling``: factor transitivity rules (const and meta
-    shapes, :func:`split_transitive`) out of the per-round machinery and
-    saturate each transitive predicate's slice with the adaptive
-    linear->doubling closure instead. The semi-naive loop ALREADY doubles
-    path length per round (the delta joins the full extent at the other
-    position), so this cannot change round asymptotics — both modes are
-    O(log diameter) rounds — and measurement says it does not beat the
-    plain loop's round cost either: the injected closure pays its own
-    join-per-doubling PLUS a second anti-join materialization per driver
-    round, which on a 512-deep chain makes it 1.8x SLOWER warm
-    (tools/tc_chain_bench.py) and at best a tie on the sf0.1 taxonomy.
-    Kept as an opt-in experiment (default False / ZELPH_TC_DOUBLING=1);
-    the fixpoint output is identical either way (transitive saturation is
-    confluent with the other rules), pinned by tests/test_reasoning.py
-    differential cases.
+    One semi-naive loop does the work (module docstring). Transitivity
+    rules need no special path: the delta joins the full extent at the
+    other condition position, so path length doubles per round and a chain
+    of depth d quiesces in O(log d) rounds. Chain-inheritance rules are the
+    one factored shape (:func:`split_inherit`, ``ZELPH_INHERIT_DOUBLING``).
+
+    ``semi_naive=False`` re-fires every rule over the full extent each
+    round (the classic reference path); ``fuse=False`` evaluates every rule
+    through its own plan branch instead of the shape-fused rules tables.
+    Both exist as differential references and give the identical fixpoint.
 
     ``wrong_facts``: triples asserted with prob < 0.5 ("known to be wrong",
     network.hpp:65-94). They participate in the input ``edges`` like any
     fact (reference-verified: unification ignores probabilities) but any
     rule firing that re-deduces one is reported as a contradiction instead
     of a deduction (reasoning_deduce.cpp:289-292)."""
-    import shutil
-    import tempfile
-
     scratch = tempfile.mkdtemp(prefix="zelph_fixpoint_")
     spark = edges.sparkSession
     # Size-first AQE coalescing for the loop's lifetime: with the default
@@ -448,27 +325,12 @@ def run_fixpoint(
     # the ~40 rule branches schedules full-width stages — pure task-launch
     # overhead on tail rounds. Size-first collapses tiny shuffles to one
     # partition while leaving genuinely large rounds wide.
-    import os
-
-    if transitive_doubling is None:
-        # Default OFF — measured, not assumed: warm A/B at local[8]
-        # (tools/tc_chain_bench.py) has the plain loop at 17.8 s vs 32.8 s
-        # injected on a 512-deep chain (the injection pays a second
-        # materialization per round), and a tie (~30 vs ~32 s) on the
-        # sf0.1 taxonomy workload. The plain loop already quiesces in
-        # O(log d) rounds (10 rounds @ depth 512, pinned by
-        # test_plain_loop_log_rounds) because the delta joins the FULL
-        # extent at the other position. ZELPH_TC_DOUBLING=1 opts in.
-        transitive_doubling = os.environ.get("ZELPH_TC_DOUBLING", "0") == "1"
-
     loop_conf = {
         "spark.sql.adaptive.coalescePartitions.parallelismFirst": "false",
         # AQE stays ON (measured: disabling it raised a 100k fixpoint from
         # 63s to 85s at local[8] — the runtime partition coalescing is worth
-        # more than the re-planning latency it costs). Knob kept for skew
-        # experiments.
-        "spark.sql.adaptive.enabled":
-            "false" if os.environ.get("ZELPH_FIXPOINT_AQE") == "0" else "true",
+        # more than the re-planning latency it costs)
+        "spark.sql.adaptive.enabled": "true",
     }
     # conf.get(k, None) returns None for keys never EXPLICITLY set (it does
     # not fall back to the registered default), so restore must UNSET those
@@ -482,7 +344,7 @@ def run_fixpoint(
     try:
         return _run_fixpoint_inner(
             edges, rules, contradiction_rules, semi_naive, max_iter, scratch,
-            fuse, wrong_facts, transitive_doubling,
+            fuse, wrong_facts,
         )
     finally:
         for k, v in old.items():
@@ -497,54 +359,19 @@ def run_fixpoint(
 
 def _run_fixpoint_inner(
     edges, rules, contradiction_rules, semi_naive, max_iter, scratch, fuse,
-    wrong_facts=None, transitive_doubling=True,
+    wrong_facts=None,
 ) -> FixpointResult:
     spark = edges.sparkSession
     base = edges.select(*EDGE_COLS).dropDuplicates(EDGE_COLS).localCheckpoint()
-    # Bucketed copy of base for the per-round anti-join (opt-in,
-    # ZELPH_FIXPOINT_BUCKET_BASE=1): cand \ full splits into
-    # (cand \ base) \ deltas, and a base written ONCE as a bucketed+sorted
-    # table joins with NO exchange and NO sort on its side every round.
-    # MEASURED A TIE at 200k docs — default OFF (A/B, same host, probes
-    # 3.9-4.3 s both legs, 56 rounds, identical outputs: fixpoint 399.7 s
-    # plain vs 407.5 s bucketed): at sandbox scale base is broadcast-small,
-    # so the anti-join never shuffled the full extent to begin with and the
-    # bucketed write+scan is pure overhead. The win exists only where base
-    # exceeds the broadcast threshold AND the shuffle is network-bound —
-    # i.e. the multi-executor shape — so the knob is for spark-submit runs,
-    # not the local bench. Differential-pinned either way
-    # (tests/test_reasoning.py::test_bucketed_base_differential...).
-    import os as _os
-    import uuid as _uuid
-
-    base_b = None
-    base_tbl = None
-    if _os.environ.get("ZELPH_FIXPOINT_BUCKET_BASE", "0") == "1":
-        base_tbl = f"zelph_fix_base_{_uuid.uuid4().hex[:10]}"
-        # bucket count == shuffle partitions so the candidate side's
-        # dropDuplicates exchange already matches the bucketed layout and
-        # the anti-join inserts NO further exchange on either side
-        n_buckets = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-        (
-            base.write.mode("overwrite")
-            .option("path", f"{scratch}/base_bucketed")
-            .bucketBy(n_buckets, *EDGE_COLS)
-            .sortBy(*EDGE_COLS)
-            .saveAsTable(base_tbl)
-        )
-        base_b = spark.table(base_tbl)
     positive = [r for r in rules if not r.negated]
     naf_rules = [r for r in rules if r.negated]
-    tsplit = split_transitive(positive) if transitive_doubling else None
-    if tsplit is not None:
-        positive = tsplit.rest
     # [r6] chain-inheritance factoring (split_inherit docstring): the
     # factored rules leave the per-round machinery entirely and are applied
     # as complete closure images at positive quiescence. Default ON
     # (measured: collapses the 56-round / 496 s sf1.0 e2e fixpoint tail);
     # ZELPH_INHERIT_DOUBLING=0 restores the plain loop.
     inherit_specs: list[InheritSpec] = []
-    if _os.environ.get("ZELPH_INHERIT_DOUBLING", "1") == "1":
+    if os.environ.get("ZELPH_INHERIT_DOUBLING", "1") == "1":
         positive, inherit_specs = split_inherit(positive)
     groups = fuse_rules(positive) if fuse else None
     per_rule = groups.leftover if groups is not None else positive
@@ -572,46 +399,6 @@ def _run_fixpoint_inner(
     def _guard_update(row):
         for i, key in enumerate(guard_pairs):
             guard_doms[key].update(row[f"_guard{i}"])
-
-    # --- transitive-closure acceleration (see run_fixpoint docstring) ---
-    tset: set = set(tsplit.const_preds) if tsplit else set()
-
-    def _new_members(df, df_preds=None) -> set:
-        """Predicates newly declared transitive by facts in ``df`` (tiny:
-        membership facts are per-PREDICATE declarations, a handful of rows).
-        ``df_preds``: when the caller already knows ``df``'s predicate set
-        (delta Observation metrics), membership specs whose predicate is
-        absent are skipped — most rounds then pay ZERO extra jobs."""
-        out: set = set()
-        for mp, mo in (tsplit.memberships if tsplit else []):
-            if df_preds is not None and mp not in df_preds:
-                continue
-            out |= {
-                r.subj
-                for r in df.filter(
-                    (F.col("pred") == F.lit(mp)) & (F.col("obj") == F.lit(mo))
-                )
-                .select("subj")
-                .distinct()
-                .collect()
-            }
-        return out - tset
-
-    def _closure_cands(full, preds) -> list:
-        """Fully saturate every dirty transitive predicate's slice in ONE
-        grouped adaptive linear->doubling closure (pred rides the join key,
-        so job count per internal round is constant in the predicate count);
-        candidate rows are anti-joined against known facts by
-        materialize_new like any rule firing. Injecting the COMPLETE
-        closure keeps a predicate quiescent until some OTHER rule adds an
-        edge to it (which shows up in the RULE delta's pred set — see
-        materialize_round — and marks it dirty again)."""
-        from ..closure import transitive_closure
-
-        sl = full.filter(F.col("pred").isin(*preds)).select(
-            "pred", "subj", "obj"
-        )
-        return [transitive_closure(sl, group=("pred",)).select(*EDGE_COLS)]
 
     def _guard_ok(rule):
         """Conservative var-pred domain check: skip a rule only when some
@@ -670,32 +457,31 @@ def _run_fixpoint_inner(
         delta_paths.clear()
         delta_paths.append(path)
 
-    def anti_targets(extra=None):
-        r"""The current known-fact set as separate anti-join targets:
-        bucketed base (exchange- and sort-free side) + accumulated deltas
-        (the only part that still shuffles) [+ the sibling delta when the
-        closure lands second]. (A \ (B u C)) == (A \ B) \ C."""
-        t = [base if base_b is None else base_b]
-        if delta_paths:
-            t.append(spark.read.parquet(*delta_paths))
-        if extra is not None:
-            t.append(extra)
-        return t
-
-    def materialize_new(cand, targets, name):
-        """Dedup candidates, anti-join against known facts, land as parquet;
+    def materialize_new(cand, name):
+        r"""Dedup candidates, anti-join against known facts, land as parquet;
         returns (delta_df, path, n_rows, pred_set) with exactly ONE job:
         row count and delta-predicate set ride the write job as Observation
-        metrics instead of a second scan. ``targets``: list of DataFrames
-        whose union is the known-fact set (kept separate so the bucketed
-        base side never re-shuffles)."""
+        metrics instead of a second scan. The known-fact set is anti-joined
+        as its parts, base then the accumulated deltas:
+        (A \ (B u C)) == (A \ B) \ C.
+
+        The parquet round-trip, not a localCheckpoint, also resets Catalyst
+        size statistics: a checkpointed join carries the PRODUCT of its
+        inputs' estimated sizes forward (verified on Spark 4.1), and since
+        each delta feeds the next round's joins the estimate compounds until
+        the driver stalls multiplying multi-million-digit BigIntegers. A scan
+        of the written files carries real file statistics instead."""
         from pyspark.sql import Observation
 
         if cand is None:
             return None, None, 0, set()
-        out = cand.dropDuplicates(EDGE_COLS)
-        for t in targets:
-            out = out.join(t, on=EDGE_COLS, how="left_anti")
+        out = cand.dropDuplicates(EDGE_COLS).join(
+            base, on=EDGE_COLS, how="left_anti"
+        )
+        if delta_paths:
+            out = out.join(
+                spark.read.parquet(*delta_paths), on=EDGE_COLS, how="left_anti"
+            )
         obs = Observation()
         out = out.observe(
             obs,
@@ -711,51 +497,6 @@ def _run_fixpoint_inner(
         m = obs.get
         _guard_update(m)
         return spark.read.parquet(path), path, m["n"], set(m["preds"])
-
-    def materialize_round(cand_rules, clo_cands, targets, name):
-        """Land rule candidates and closure candidates as SEPARATE deltas
-        so dirty-tracking keys off the RULE delta alone. The closure's own
-        output must not re-mark its predicate dirty — that re-ran the whole
-        closure over the already-saturated slice on every following round
-        (a pure waste; each re-close converges in one internal join but
-        still pays planning + a shuffle per round) — while rule-produced
-        facts on a transitive predicate (e.g. wikidata.zph's
-        transitive-inverse rule) still must, or the factored-out
-        transitivity would never compose them. Even with this fix the
-        injected mode measures 1.8x slower than the plain loop on a
-        512-deep chain (tools/tc_chain_bench.py), hence default OFF.
-        ``targets``: anti_targets()-style list. Returns
-        (delta, paths, n, delta_preds, rule_preds)."""
-        d_r, p_r, n_r, preds_r = materialize_new(cand_rules, targets, name)
-        if not clo_cands:
-            return d_r, ([p_r] if n_r else []), n_r, preds_r, preds_r
-        known = targets if (d_r is None or n_r == 0) else targets + [d_r]
-        d_c, p_c, n_c, preds_c = materialize_new(
-            _union_all(clo_cands), known, f"{name}_clo"
-        )
-        paths = [p for p, n in ((p_r, n_r), (p_c, n_c)) if n]
-        if d_r is None or n_r == 0:
-            return d_c, paths, n_c, preds_c, preds_r
-        if d_c is None or n_c == 0:
-            return d_r, paths, n_r, preds_r, preds_r
-        return (
-            d_r.unionByName(d_c), paths, n_r + n_c,
-            preds_r | preds_c, preds_r,
-        )
-
-    import time as _time
-
-    debug_preds = _os.environ.get("ZELPH_FIXPOINT_DEBUG") == "1"
-
-    def _debug_pred_counts(d):
-        """Measurement-only (ZELPH_FIXPOINT_DEBUG=1): per-pred delta counts
-        into the log — one extra tiny job per round, never on by default."""
-        if not debug_preds or d is None:
-            return None
-        return {
-            str(r.pred): r.n
-            for r in d.groupBy("pred").agg(F.count(F.lit(1)).alias("n")).collect()
-        }
 
     full = base
     log: list[dict] = []
@@ -776,33 +517,20 @@ def _run_fixpoint_inner(
         _guard_update(base.agg(*_guard_metrics()).collect()[0])
 
     # classic first pass (reasoning_seminaive.cpp:236-242)
-    _t0 = _time.time()
-    cand0 = fire_all(full, present=present)
-    clo0: list = []
-    if tsplit:
-        tset |= _new_members(base)
-        dirty0 = {p for p in tset if p in present}
-        if dirty0:
-            clo0 = _closure_cands(full, dirty0)
-    delta, dpaths, n_delta, delta_preds, rule_preds = materialize_round(
-        cand0, clo0, anti_targets(), "delta_0"
+    _t0 = time.time()
+    delta, dpath, n_delta, delta_preds = materialize_new(
+        fire_all(full, present=present), "delta_0"
     )
-    from pyspark.storagelevel import StorageLevel
-
-    cache_full = _os.environ.get("ZELPH_FIXPOINT_CACHE_FULL", "0") == "1"
-    prev_cached_full = None
     plan_sec = None
     while iterations < max_iter:
         iterations += 1
         entry = {"iter": iterations, "stratum": "positive", "new": n_delta,
-                 "sec": round(_time.time() - _t0, 2)}
-        if debug_preds:
-            entry["pred_counts"] = _debug_pred_counts(delta)
+                 "sec": round(time.time() - _t0, 2)}
         if plan_sec is not None:
             entry["plan_sec"] = plan_sec
             plan_sec = None
         log.append(entry)
-        _t0 = _time.time()
+        _t0 = time.time()
         if n_delta == 0:
             # positive quiescence -> pending chain-inheritance images first
             # (split_inherit): complete s+ ⨝ p-facts in ONE injected delta
@@ -816,7 +544,7 @@ def _run_fixpoint_inner(
             if todo:
                 from ..closure import transitive_closure
 
-                _ti = _time.time()
+                _ti = time.time()
                 clo_sec = 0.0
                 cands = []
                 todo_full = [inherit_full_needed[sp] for sp in todo]
@@ -847,7 +575,7 @@ def _run_fixpoint_inner(
                             "parallelismFirst"
                         )
                         spark.conf.set(_pf, "true")
-                        _tc = _time.time()
+                        _tc = time.time()
                         try:
                             img = closure_image(
                                 full.filter(
@@ -859,7 +587,7 @@ def _run_fixpoint_inner(
                             )
                         finally:
                             spark.conf.set(_pf, "false")
-                        clo_sec += _time.time() - _tc
+                        clo_sec += time.time() - _tc
                         cands.append(
                             img.select(
                                 "subj", F.lit(sp.p).alias("pred"), "obj"
@@ -877,7 +605,7 @@ def _run_fixpoint_inner(
                         # closure computation only
                         _pf = "spark.sql.adaptive.coalescePartitions.parallelismFirst"
                         spark.conf.set(_pf, "true")
-                        _tc = _time.time()
+                        _tc = time.time()
                         try:
                             clo = transitive_closure(
                                 full.filter(
@@ -886,7 +614,7 @@ def _run_fixpoint_inner(
                             )
                         finally:
                             spark.conf.set(_pf, "false")
-                        clo_sec += _time.time() - _tc
+                        clo_sec += time.time() - _tc
                         inherit_clo[sp.s] = clo
                     if inherit_full_needed[sp]:
                         src = full.filter(F.col("pred") == F.lit(sp.p))
@@ -924,7 +652,7 @@ def _run_fixpoint_inner(
                 }
                 just_injected = {sp for sp in todo if sp.p not in _shared_p}
                 inh_new, ipath, n_inh, inh_preds = materialize_new(
-                    _union_all(cands), anti_targets(), f"inherit_{iterations}"
+                    _union_all(cands), f"inherit_{iterations}"
                 )
                 # timing under "inject_sec", NOT "sec": the injection time is
                 # already inside the next positive entry's round timer, and
@@ -932,7 +660,7 @@ def _run_fixpoint_inner(
                 # a "sec" here would double-count
                 log.append(
                     {"iter": iterations, "stratum": "inherit", "new": n_inh,
-                     "inject_sec": round(_time.time() - _ti, 2),
+                     "inject_sec": round(time.time() - _ti, 2),
                      "clo_sec": round(clo_sec, 2),
                      "specs": [
                          f"{sp.rule_id}:{'full' if fn else 'incr'}"
@@ -940,8 +668,7 @@ def _run_fixpoint_inner(
                      ]}
                 )
                 if n_inh:
-                    delta, dpaths, n_delta = inh_new, [ipath], n_inh
-                    delta_preds = rule_preds = inh_preds
+                    delta, dpath, n_delta, delta_preds = inh_new, ipath, n_inh, inh_preds
                     continue
             # -> deferred NAF stratum (R9)
             if not naf_rules:
@@ -949,7 +676,7 @@ def _run_fixpoint_inner(
             naf_new, npath, n_naf, naf_preds = materialize_new(
                 _fire_positive([r for r in naf_rules if _guard_ok(r)],
                                full, present_preds=present),
-                anti_targets(), f"naf_{iterations}",
+                f"naf_{iterations}",
             )
             log.append({"iter": iterations, "stratum": "naf", "new": n_naf})
             if n_naf == 0:
@@ -957,35 +684,21 @@ def _run_fixpoint_inner(
             # NAF deductions re-open the positive stratum. The union into
             # `full` / total_new happens ONCE at the loop top like any other
             # delta (a pre-union here double-counted and duplicated rows).
-            delta, dpaths, n_delta = naf_new, [npath], n_naf
-            delta_preds = rule_preds = naf_preds
+            delta, dpath, n_delta, delta_preds = naf_new, npath, n_naf, naf_preds
             continue
         total_new += n_delta
-        delta_paths.extend(dpaths)
+        delta_paths.append(dpath)
         maybe_compact()
         full = full_df()
-        if cache_full:
-            # MEASURED SLOWER at 200k docs — default OFF (A/B, same host,
-            # 56 rounds: cached 572.6 s vs uncached 462.6, slower in BOTH
-            # the 100k-fact mid rounds (8.5 vs 6.8 s) and the <5k tail
-            # (11.6 vs 9.9 s)): building the columnar CachedBatches every
-            # round costs more than the ~7 parquet re-decodes it saves —
-            # the scan is cheap, the per-round cache WRITE is not. Kept as
-            # an opt-in (ZELPH_FIXPOINT_CACHE_FULL=1) for cluster shapes
-            # where executor-local decode is the bottleneck.
-            full = full.persist(StorageLevel.MEMORY_AND_DISK)
-            if prev_cached_full is not None:
-                prev_cached_full.unpersist(blocking=False)
-            prev_cached_full = full
         present |= delta_preds
         for sp in inherit_specs:
             if sp.p in delta_preds and sp not in just_injected:
-                inherit_pending[sp].extend(dpaths)
+                inherit_pending[sp].append(dpath)
             if sp.s in delta_preds:
                 inherit_clo.pop(sp.s, None)
                 inherit_full_needed[sp] = True
         just_injected = set()
-        _tp = _time.time()
+        _tp = time.time()
         if semi_naive:
             # broadcast the delta side when it is small: every rule-position
             # branch then becomes a broadcast hash join and the full extent
@@ -996,41 +709,27 @@ def _run_fixpoint_inner(
             cand = fire_all(full, seed, delta_preds, present)
         else:
             cand = fire_all(full, present=present)
-        clo: list = []
-        if tsplit:
-            nm = _new_members(delta, delta_preds)
-            tset |= nm
-            dirty = {p for p in ((rule_preds & tset) | nm) if p in present}
-            if dirty:
-                clo = _closure_cands(full, dirty)
         # plan_sec: driver-side DataFrame/plan construction (Catalyst
         # analysis runs per transformation over py4j) — the part of a round
         # that does NOT shrink with more executors and does not grow with
         # data; the rest of the round's 'sec' is the one materialize job.
         # A round's numbers land on the NEXT iteration's log entry (the
         # round timer resets at append time).
-        plan_sec = round(_time.time() - _tp, 2)
-        delta, dpaths, n_delta, delta_preds, rule_preds = materialize_round(
-            cand, clo, anti_targets(), f"delta_{iterations}"
+        plan_sec = round(time.time() - _tp, 2)
+        delta, dpath, n_delta, delta_preds = materialize_new(
+            cand, f"delta_{iterations}"
         )
 
     # detach the result from the scratch dir (deleted by the caller): one
     # final materialization of the deltas instead of one per round; base is
     # already checkpointed and is not re-copied
-    _t0 = _time.time()
-    if prev_cached_full is not None:
-        prev_cached_full.unpersist(blocking=False)
+    _t0 = time.time()
     if delta_paths:
         full = base.unionByName(
             spark.read.parquet(*delta_paths).localCheckpoint()
         )
-    log.append({"stratum": "detach", "sec": round(_time.time() - _t0, 2)})
-    if base_tbl is not None:
-        # the bucketed base's files live under scratch (deleted by the
-        # caller); drop the catalog entry so sessions reused across many
-        # fixpoint calls don't accumulate dead external tables
-        spark.sql(f"DROP TABLE IF EXISTS {base_tbl}")
-    _t0 = _time.time()
+    log.append({"stratum": "detach", "sec": round(time.time() - _t0, 2)})
+    _t0 = time.time()
     contradictions = evaluate_contradictions(
         full, contradiction_rules or [], present_preds=present
     )
@@ -1043,7 +742,7 @@ def _run_fixpoint_inner(
                 full, rules, wrong_facts, present_preds=present
             )
         )
-    log.append({"stratum": "contra-plan", "sec": round(_time.time() - _t0, 2)})
+    log.append({"stratum": "contra-plan", "sec": round(time.time() - _t0, 2)})
     deduced = full.join(base, on=EDGE_COLS, how="left_anti")
     return FixpointResult(
         edges=full,
@@ -1100,5 +799,7 @@ def verify_fixpoint(result: FixpointResult, rules: list[Rule]) -> bool:
     cand = _fire_positive(positive + naf_rules, result.edges)
     if cand is None:
         return True
-    leftover = _new_facts(cand, result.edges)
-    return leftover.count() == 0
+    leftover = cand.dropDuplicates(EDGE_COLS).join(
+        result.edges, on=EDGE_COLS, how="left_anti"
+    )
+    return leftover.isEmpty()

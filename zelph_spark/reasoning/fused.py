@@ -267,77 +267,6 @@ def fire_pairs(
     )
 
 
-_PAIR_ALL_SCHEMA = _PAIR_SCHEMA + ", j1 string, j2 string"
-
-
-def fire_pairs_all(
-    edges1: DataFrame, edges2: DataFrame, shaped: list
-) -> DataFrame | None:
-    """EVERY pair shape in one two-join plan — plan size constant in rule
-    count AND shape count (one call instead of one per (j1, j2) shape;
-    driver plan construction is a measurable share of a fixpoint round).
-
-    The shape rides the rules table as (j1, j2) columns. The c1-side join
-    key is a j1-CASE over (_s1, _o1) — an expression of left-side columns
-    only. The c2 side cannot do the same (its CASE would mix the left's j2
-    with right columns, which no longer separates by side and would demote
-    the equi-join to a nested loop), so it is EXPLODED into its two key
-    candidates tagged with the position: the join is then the fully
-    separable (pb = _p2) & (j2 = _j2k) & (key1 = _k2) hash join. The probe
-    side carries 2x rows through one join instead of 1x rows through one
-    join per shape."""
-    if not shaped:
-        return None
-    rt = _rules_table(
-        edges1,
-        [(s["rule_id"], _v(s["pa"]), _v(s["pb"]), _v(s["c1s"]), _v(s["c1o"]),
-          _v(s["c2s"]), _v(s["c2o"]), _v(s["outp"]), s["outs"],
-          _v(s["outs_c"]), s["outo"], _v(s["outo_c"]), j1, j2)
-         for (j1, j2), s in shaped],
-        _PAIR_ALL_SCHEMA,
-    )
-    e1 = edges1.select(
-        F.col("subj").alias("_s1"), F.col("pred").alias("_p1"),
-        F.col("obj").alias("_o1"),
-    )
-    left = e1.join(rt, e1["_p1"] == rt["pa"]).filter(
-        (F.col("c1s").isNull() | (F.col("_s1") == F.col("c1s")))
-        & (F.col("c1o").isNull() | (F.col("_o1") == F.col("c1o")))
-    )
-    key1 = F.when(F.col("j1") == "subj", F.col("_s1")).otherwise(F.col("_o1"))
-    e2k = edges2.select(
-        F.col("subj").alias("_s2"), F.col("pred").alias("_p2"),
-        F.col("obj").alias("_o2"),
-        F.explode(
-            F.array(
-                F.struct(
-                    F.lit("subj").alias("j"), F.col("subj").alias("k")
-                ),
-                F.struct(F.lit("obj").alias("j"), F.col("obj").alias("k")),
-            )
-        ).alias("_kk"),
-    ).select(
-        "_s2", "_p2", "_o2",
-        F.col("_kk.j").alias("_j2k"), F.col("_kk.k").alias("_k2"),
-    )
-    out = left.join(
-        e2k,
-        (F.col("pb") == F.col("_p2"))
-        & (F.col("j2") == F.col("_j2k"))
-        & (key1 == F.col("_k2")),
-    ).filter(
-        (F.col("c2s").isNull() | (F.col("_s2") == F.col("c2s")))
-        & (F.col("c2o").isNull() | (F.col("_o2") == F.col("c2o")))
-    )
-    return out.select(
-        _out_col("outs", "outs_c", F.col("_s1"), F.col("_o1"),
-                 F.col("_s2"), F.col("_o2")).alias("subj"),
-        F.col("outp").alias("pred"),
-        _out_col("outo", "outo_c", F.col("_s1"), F.col("_o1"),
-                 F.col("_s2"), F.col("_o2")).alias("obj"),
-    )
-
-
 def fire_fused(
     groups: FusedGroups,
     full: DataFrame,
@@ -359,52 +288,27 @@ def fire_fused(
             out = [s for s in out if s[delta_key] in delta_preds]
         return out
 
-    import os
-
-    # Default OFF (r6 re-measurement at two scales, order-controlled A/B):
-    # the all-shapes probe explode carries 2x rows through ONE join with a
-    # wider (pb, j2-tag string, key) key, and that costs more than the
-    # extra per-shape branches save — taxonomy fixpoint 300k facts: 8.1 s
-    # per-shape vs 9.2 all-shapes warm (empty round 1.9 vs 3.3 s); e2e
-    # 200k-doc fixpoint 4.4M facts: 76.3/78.4 s per-shape vs 92.4/114.4
-    # all-shapes (both leg orders, identical outputs 924,853/4,423,929).
-    # Shape count is bounded at 4, so per-shape plan construction stays
-    # constant-size in the RULE count either way — the r5 motivation for
-    # fusing (S5 thousand-rule sets) is preserved by the rules table, not
-    # by the shape packing. ZELPH_FUSE_ALL_SHAPES=1 restores all-shapes.
-    all_shapes = os.environ.get("ZELPH_FUSE_ALL_SHAPES", "0") == "1"
+    # Pairs fire per (j1, j2) shape. Packing all four shapes into one join
+    # measured slower (it carries 2x rows through a wider key), and the
+    # shape count is bounded at 4, so plan size stays constant in the RULE
+    # count either way: the rules table, not shape packing, is what keeps
+    # thousand-rule sets cheap (A/B in BASELINE.md).
     outs = []
     if delta is None:
         outs.append(fire_single(full, keep(groups.single, ["pa"])))
-        if all_shapes:
-            outs.append(fire_pairs_all(full, full, [
-                (shape, s) for shape, specs in groups.pairs.items()
-                for s in keep(specs, ["pa", "pb"])
-            ]))
-        else:
-            for shape, specs in groups.pairs.items():
-                outs.append(
-                    fire_pairs(full, full, shape, keep(specs, ["pa", "pb"]))
-                )
+        for shape, specs in groups.pairs.items():
+            outs.append(
+                fire_pairs(full, full, shape, keep(specs, ["pa", "pb"]))
+            )
     else:
         outs.append(fire_single(delta, keep(groups.single, ["pa"], "pa")))
-        if all_shapes:
-            outs.append(fire_pairs_all(delta, full, [
-                (shape, s) for shape, specs in groups.pairs.items()
-                for s in keep(specs, ["pa", "pb"], "pa")
-            ]))
-            outs.append(fire_pairs_all(full, delta, [
-                (shape, s) for shape, specs in groups.pairs.items()
-                for s in keep(specs, ["pa", "pb"], "pb")
-            ]))
-        else:
-            for shape, specs in groups.pairs.items():
-                outs.append(fire_pairs(
-                    delta, full, shape, keep(specs, ["pa", "pb"], "pa")
-                ))
-                outs.append(fire_pairs(
-                    full, delta, shape, keep(specs, ["pa", "pb"], "pb")
-                ))
+        for shape, specs in groups.pairs.items():
+            outs.append(fire_pairs(
+                delta, full, shape, keep(specs, ["pa", "pb"], "pa")
+            ))
+            outs.append(fire_pairs(
+                full, delta, shape, keep(specs, ["pa", "pb"], "pb")
+            ))
     return [o for o in outs if o is not None]
 
 
