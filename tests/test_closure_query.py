@@ -6,7 +6,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from zelph_spark import closure, query
+from zelph_spark import closure, query, single_task
 from zelph_spark.rules import P
 
 
@@ -33,7 +33,7 @@ def test_closure_plus(spark, phase, monkeypatch):
     # differential suite, test_local_closure.py). "linear" closes within the
     # one-hop prefix; "doubling" is a chain long enough that the loop also
     # runs its reach ⋈ reach rounds after AUTO_SWITCH_ROUND
-    monkeypatch.setattr(closure, "LOCAL_EDGE_BOUND", 0)
+    monkeypatch.setattr(single_task, "LOCAL_ROWS", 0)
     if phase == "linear":
         pairs, want = CHAIN, CHAIN_PLUS
     else:

@@ -1,8 +1,10 @@
-"""Single-task closure fast path (r6, closure.py::_closure_kernel).
+"""Single-task closure fast path (closure.py kernels run through
+single_task.run_single_task).
 
 The fast path must be output-identical to the distributed doubling loop on
 every graph shape, fall back to the distributed loop when its pair cap
-overflows, and handle non-integer node ids (factorize densification).
+overflows (without failing a task), and handle non-integer node ids
+(factorize densification).
 """
 
 from __future__ import annotations
@@ -11,7 +13,7 @@ import numpy as np
 import pandas as pd
 import pytest
 
-from zelph_spark import closure
+from zelph_spark import closure, single_task
 
 
 def _pairs(spark, pairs):
@@ -25,11 +27,12 @@ GRAPHS = {
     "tree": [(i, i // 2) for i in range(2, 500)],
     "dupes": [(0, 1), (0, 1), (1, 2)],
     "self_loop": [(0, 0), (0, 1)],
+    "deep_chain": [(i, i + 1) for i in range(100)],
 }
 
 
 def _closure_set(spark, edges, bound, monkeypatch, cap=None):
-    monkeypatch.setattr(closure, "LOCAL_EDGE_BOUND", bound)
+    monkeypatch.setattr(single_task, "LOCAL_ROWS", bound)
     if cap is not None:
         monkeypatch.setattr(closure, "LOCAL_PAIR_CAP", cap)
     df = closure.transitive_closure(_pairs(spark, edges))
@@ -53,7 +56,7 @@ def test_local_string_ids(spark, monkeypatch):
 
 def test_overflow_falls_back_to_distributed(spark, monkeypatch):
     # a 10-pair cap cannot hold the 500-edge tree's closure: the kernel
-    # raises, _local_closure returns None, and the distributed loop must
+    # overflows, the runner declines, and the distributed loop must
     # produce the complete closure anyway
     edges = GRAPHS["tree"]
     via_fallback = _closure_set(spark, edges, 2_000_000, monkeypatch, cap=10)
@@ -61,8 +64,32 @@ def test_overflow_falls_back_to_distributed(spark, monkeypatch):
     assert via_fallback == dist
 
 
+def test_overflow_leaves_no_failed_task(spark, monkeypatch):
+    # the kernel's overflow comes back as data, not as a task failure that
+    # spark.task.maxFailures would retry
+    edges = GRAPHS["tree"]
+    sc = spark.sparkContext
+    group = "test-overflow-no-failed-task"
+    sc.setJobGroup(group, "closure kernel overflow")
+    try:
+        via_fallback = _closure_set(
+            spark, edges, 2_000_000, monkeypatch, cap=10
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    tracker = sc.statusTracker()
+    stages = [
+        tracker.getStageInfo(sid)
+        for jid in tracker.getJobIdsForGroup(group)
+        for sid in tracker.getJobInfo(jid).stageIds
+    ]
+    assert stages
+    assert sum(st.numFailedTasks for st in stages if st) == 0
+    assert via_fallback == _closure_set(spark, edges, 0, monkeypatch)
+
+
 @pytest.mark.parametrize("include_start", [False, True])
-@pytest.mark.parametrize("name", ["chain", "cycle", "tree"])
+@pytest.mark.parametrize("name", ["chain", "cycle", "tree", "deep_chain"])
 def test_seeded_targets_local_matches_distributed(
     spark, name, include_start, monkeypatch
 ):
@@ -74,7 +101,7 @@ def test_seeded_targets_local_matches_distributed(
     )
 
     def run(bound):
-        monkeypatch.setattr(closure, "LOCAL_EDGE_BOUND", bound)
+        monkeypatch.setattr(single_task, "LOCAL_ROWS", bound)
         df = closure.transitive_targets(
             _pairs(spark, edges), seeds, include_start=include_start
         )
@@ -88,7 +115,7 @@ def test_seeded_targets_overflow_falls_back(spark, monkeypatch):
     seeds = spark.createDataFrame(pd.DataFrame({"node": [2, 3]}))
 
     def run(bound, cap=None):
-        monkeypatch.setattr(closure, "LOCAL_EDGE_BOUND", bound)
+        monkeypatch.setattr(single_task, "LOCAL_ROWS", bound)
         if cap is not None:
             monkeypatch.setattr(closure, "LOCAL_PAIR_CAP", cap)
         df = closure.transitive_targets(_pairs(spark, edges), seeds)
@@ -109,7 +136,7 @@ def test_closure_image_local_matches_fallback(spark, name, monkeypatch):
     )
 
     def run(bound):
-        monkeypatch.setattr(closure, "LOCAL_EDGE_BOUND", bound)
+        monkeypatch.setattr(single_task, "LOCAL_ROWS", bound)
         df = closure.closure_image(_pairs(spark, edges), facts)
         return {(r.subj, r.obj) for r in df.collect()}
 
@@ -117,7 +144,7 @@ def test_closure_image_local_matches_fallback(spark, name, monkeypatch):
     fallback = run(0)
     assert local == fallback
     # cross-check against the unfused plan
-    monkeypatch.setattr(closure, "LOCAL_EDGE_BOUND", 0)
+    monkeypatch.setattr(single_task, "LOCAL_ROWS", 0)
     clo = closure.transitive_closure(_pairs(spark, edges))
     import pyspark.sql.functions as F
 
@@ -139,13 +166,13 @@ def test_closure_image_overflow_falls_back(spark, monkeypatch):
         pd.DataFrame([(i, 9000 + i) for i in range(2, 60)],
                      columns=["subj", "obj"])
     )
-    monkeypatch.setattr(closure, "LOCAL_EDGE_BOUND", 2_000_000)
+    monkeypatch.setattr(single_task, "LOCAL_ROWS", 2_000_000)
     monkeypatch.setattr(closure, "LOCAL_PAIR_CAP", 5)
     via_fallback = {
         (r.subj, r.obj)
         for r in closure.closure_image(_pairs(spark, edges), facts).collect()
     }
-    monkeypatch.setattr(closure, "LOCAL_EDGE_BOUND", 0)
+    monkeypatch.setattr(single_task, "LOCAL_ROWS", 0)
     monkeypatch.setattr(closure, "LOCAL_PAIR_CAP", 67108864)
     dist = {
         (r.subj, r.obj)

@@ -1,8 +1,9 @@
-"""Single-task connected-components fast path (r6, canon._local_components).
+"""Single-task connected-components fast path (canon._components_kernel
+run through single_task.run_single_task).
 
 Must be output-identical to the distributed min-propagation loop for every
 graph shape and id type, including the min-VALUE (not min-factorize-code)
-representative choice.
+representative choice, which rests on the runner's sorted factorize.
 """
 
 from __future__ import annotations
@@ -10,7 +11,7 @@ from __future__ import annotations
 import pandas as pd
 import pytest
 
-from zelph_spark import canon
+from zelph_spark import canon, single_task
 
 
 def _pairs(spark, pairs):
@@ -27,7 +28,7 @@ GRAPHS = {
 
 
 def _cc(spark, pairs, bound, monkeypatch):
-    monkeypatch.setattr(canon, "LOCAL_CC_BOUND", bound)
+    monkeypatch.setattr(single_task, "LOCAL_ROWS", bound)
     df = canon.connected_components(_pairs(spark, pairs))
     return {(r.node, r.comp) for r in df.collect()}
 

@@ -24,85 +24,48 @@ the distributed-friendly equivalent of the exception, same information).
 
 from __future__ import annotations
 
-import os as _os
-
 from pyspark.sql import DataFrame, functions as F
 
-# [r6] Single-task components fast path (guide §4.2, same adaptive pattern
-# as closure.py's LOCAL_EDGE_BOUND): when the symmetrized same-as pair set
-# provably fits one task, the O(log n)-round shuffle loop collapses into
-# one numpy scatter-min label-propagation kernel. Past the bound the
-# distributed loop runs unchanged (the pair set is tiny relative to the
-# edge table at any scale, but the fallback keeps the 100TB posture).
-LOCAL_CC_BOUND = int(_os.environ.get("ZELPH_LOCAL_CC_EDGES", "2000000"))
+from .single_task import run_single_task
 
 
-def _local_components(sym: DataFrame) -> DataFrame:
-    """Min-label components of the symmetrized edge list in ONE task.
-
-    Identical output contract to the distributed loop: one (node, comp) row
-    per distinct node in ``sym``, comp = minimum reachable node id under
-    the id type's natural order. Python string order is code-point order
-    and UTF-8 byte order preserves code points, so pandas min == Spark's
-    UTF8_BINARY min for string ids.
+def _components_kernel(s, d, n):
+    """Min-label components of a symmetric edge list over dense ids
+    ``0..n-1``: returns each id's component label, the smallest id in its
+    component. Under the runner's ``sort=True`` codes the smallest code is
+    the smallest node id, so the labels map straight back to the
+    distributed loop's min-value representative.
     """
-    from pyspark.sql import types as T
+    import numpy as np
 
-    node_t = sym.schema["src"].dataType
-    schema = T.StructType(
-        [T.StructField("node", node_t), T.StructField("comp", node_t)]
-    )
-
-    def compute(batches):
-        import numpy as np
-        import pandas as pd
-
-        parts = [b for b in batches]
-        if not parts:
-            return
-        pdf = pd.concat(parts, ignore_index=True)
-        codes, uniques = pd.factorize(
-            pd.concat([pdf["src"], pdf["dst"]], ignore_index=True)
-        )
-        m = len(pdf)
-        s = codes[:m]
-        d = codes[m:]
-        n = len(uniques)
-        labels = np.arange(n, dtype=np.int64)
-        while True:  # terminates: labels decrease monotonically per pass
-            old = labels.copy()
-            # propagate the smaller label across every (symmetric) edge
-            np.minimum.at(labels, s, labels[d])
-            # pointer-jump to a fixpoint: label <- label's label
-            while True:
-                nxt = labels[labels]
-                if np.array_equal(nxt, labels):
-                    break
-                labels = nxt
-            if np.array_equal(labels, old):
+    labels = np.arange(n, dtype=np.int64)
+    while True:  # terminates: labels decrease monotonically per pass
+        old = labels.copy()
+        # propagate the smaller label across every (symmetric) edge
+        np.minimum.at(labels, s, labels[d])
+        # pointer-jump to a fixpoint: label <- label's label
+        while True:
+            nxt = labels[labels]
+            if np.array_equal(nxt, labels):
                 break
-        # factorize codes are first-appearance order, NOT value order, so
-        # the component representative is the per-root MIN VALUE, not the
-        # min code's value
-        u = pd.Series(uniques)
-        comp_val = u.groupby(labels).transform("min")
-        out = pd.DataFrame({"node": u, "comp": comp_val})
-        for i in range(0, len(out), 1_000_000):
-            yield out.iloc[i : i + 1_000_000]
-
-    return (
-        sym.repartition(1).mapInPandas(compute, schema=schema).localCheckpoint()
-    )
+            labels = nxt
+        if np.array_equal(labels, old):
+            return labels
 
 
-def connected_components(
-    pairs: DataFrame, max_iter: int = 50
-) -> DataFrame:
+def connected_components(pairs: DataFrame) -> DataFrame:
     """pairs(a, b) -> (node, comp) where comp = min node id reachable.
 
-    Works for any orderable id type (long or string). Converges in
-    O(log n) rounds via min-propagation + pointer jumping; edge sets under
-    LOCAL_CC_BOUND take the single-task kernel (_local_components) instead.
+    Works for any orderable id type (long or string). Pair sets that fit
+    one task take the single-task kernel (:func:`_components_kernel` via
+    :func:`zelph_spark.single_task.run_single_task`, guide §4.2): the
+    O(log n)-round shuffle loop collapses into one numpy scatter-min label
+    propagation. Past the runner's bounds the distributed loop converges in
+    O(log n) rounds via min-propagation + pointer jumping (the pair set is
+    tiny relative to the edge table at any scale, but the fallback keeps
+    the 100TB posture). Python string order is code-point order and UTF-8
+    byte order preserves code points, so the kernel's pandas order equals
+    Spark's UTF8_BINARY min for string ids.
     """
     if pairs.isEmpty():
         t = pairs.schema["a"].dataType.simpleString()
@@ -114,15 +77,20 @@ def connected_components(
         .distinct()
         .localCheckpoint()
     )
-    if LOCAL_CC_BOUND > 0 and sym.count() <= LOCAL_CC_BOUND:
-        return _local_components(sym)
+    local, _ = run_single_task(
+        [sym],
+        lambda c, n: (range(n), _components_kernel(*c[0], n)),
+        ["node", "comp"],
+    )
+    if local is not None:
+        return local
     labels = (
         sym.select(F.col("src").alias("node"))
         .distinct()
         .withColumn("comp", F.col("node"))
         .localCheckpoint()
     )
-    for _ in range(max_iter):
+    while True:
         # min over neighbours' current labels
         nbr_min = (
             sym.join(labels, sym.dst == labels.node)

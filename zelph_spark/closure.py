@@ -12,8 +12,9 @@ One adaptive loop, mirroring the direct-scan-vs-index adaptivity: the
 first ``AUTO_SWITCH_ROUND`` rounds expand one hop (frontier ⋈ base, the BFS
 analog — cheapest per round, and shallow taxonomies finish here); later
 rounds join the frontier against everything reached so far, so a deep chain
-costs O(log diameter) further rounds instead of one per level. Edge sets
-under ``LOCAL_EDGE_BOUND`` skip the loop for a single-task numpy kernel.
+costs O(log diameter) further rounds instead of one per level. Inputs that
+fit one task skip the loop: :func:`zelph_spark.single_task.run_single_task`
+runs the numpy kernels below and declines to the loop past its bounds.
 
 Every round localCheckpoints (lineage cut) and dedups *before* expanding —
 hub fan-out otherwise explodes the frontier. The per-predicate input should
@@ -24,9 +25,11 @@ splits skewed hubs.
 
 from __future__ import annotations
 
-import os as _os
+from itertools import count
 
 from pyspark.sql import DataFrame, functions as F
+
+from .single_task import run_single_task
 
 PAIR = ["subj", "obj"]
 
@@ -34,50 +37,15 @@ PAIR = ["subj", "obj"]
 AUTO_SWITCH_ROUND = 3
 
 # [r6] Single-task closure fast path (guide §4.2 "hand whole batches to
-# vectorized native libraries"): when the EDGE SET provably fits one task
-# (row-count bound, same adaptive pattern as the broadcast hints below),
-# the whole doubling loop collapses into one numpy kernel inside one
-# mapInPandas task — ~9 driver-scheduled rounds of 1-3M-row shuffles become
-# one job. Past the edge bound, or if the kernel's pair cap overflows
-# mid-computation (dense graphs whose closure explodes), the distributed
-# loop runs unchanged, so 100TB-scale inputs keep the shuffle/spill plan.
-LOCAL_EDGE_BOUND = int(_os.environ.get("ZELPH_LOCAL_CLOSURE_EDGES", "2000000"))
+# vectorized native libraries"): when the inputs fit one task, the whole
+# loop collapses into one numpy kernel inside one mapInPandas task — ~9
+# driver-scheduled rounds of 1-3M-row shuffles become one job. Past the
+# runner's row budget, or if the kernel's pair cap overflows mid-computation
+# (dense graphs whose closure explodes), the distributed loop runs
+# unchanged, so 100TB-scale inputs keep the shuffle/spill plan.
 LOCAL_PAIR_CAP = 67108864
-_OVERFLOW_MARK = "ZELPH_LOCAL_CLOSURE_OVERFLOW"
-_OVERFLOW_MARK_IMG = "ZELPH_LOCAL_CLOSURE_IMAGE_OVERFLOW"
-
-
-def _count_and_nulls(df: DataFrame) -> tuple:
-    """One agg job over a (subj, obj) DF: (row count, null-keyed rows)."""
-    row = df.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(
-            F.when(
-                F.col("subj").isNull() | F.col("obj").isNull(), 1
-            ).otherwise(0)
-        ).alias("nn"),
-    ).collect()[0]
-    return row.n, row.nn or 0
-
-
-def _run_one_task(df: DataFrame, compute, schema) -> tuple:
-    """repartition(1) + mapInPandas + eager checkpoint for the kernel
-    fast paths. repartition, not coalesce: coalesce(1) would collapse the
-    UPSTREAM scan/filter to one task too. Returns (result, None) or, when
-    the kernel raised an overflow mark, (None, mark) so the caller can
-    fall back to its distributed plan. Cluster note: a deterministic
-    overflow failure is retried spark.task.maxFailures times before
-    surfacing (local mode fails fast); the caps are sized so overflow is
-    the rare path."""
-    out = df.repartition(1).mapInPandas(compute, schema=schema)
-    try:
-        return out.localCheckpoint(), None
-    except Exception as e:
-        s = str(e)
-        for m in (_OVERFLOW_MARK_IMG, _OVERFLOW_MARK):
-            if m in s:
-                return None, m
-        raise
+_OVERFLOW = "closure overflow"
+_OVERFLOW_IMG = "image overflow"
 
 
 def _closure_kernel(src, dst, cap, seeds=None):
@@ -100,7 +68,7 @@ def _closure_kernel(src, dst, cap, seeds=None):
     closure pairs, so the pair cap itself bounds rounds at sqrt(2*cap)
     (~11.6k) rounds of per-round work that shrinks with delta.
 
-    Raises OverflowError(_OVERFLOW_MARK) when any intermediate exceeds
+    Raises OverflowError(_OVERFLOW) when any intermediate exceeds
     ``cap`` pairs so the caller can fall back to the shuffle plan.
     """
     import numpy as np
@@ -109,7 +77,7 @@ def _closure_kernel(src, dst, cap, seeds=None):
         return src, dst
     n = int(max(src.max(), dst.max())) + 1
     if n * n >= (1 << 62):  # pair-key encoding would overflow int64
-        raise OverflowError(_OVERFLOW_MARK)
+        raise OverflowError(_OVERFLOW)
     base = np.unique(src.astype(np.int64) * n + dst.astype(np.int64))
     # base sorted by key == sorted by subject: searchsorted-ready as-is
     base_s = base // n
@@ -142,7 +110,7 @@ def _closure_kernel(src, dst, cap, seeds=None):
         cnt = hi - lo
         total = int(cnt.sum())
         if total > cap:
-            raise OverflowError(_OVERFLOW_MARK)
+            raise OverflowError(_OVERFLOW)
         if total == 0:
             break
         # gather build rows lo[i]:hi[i] for each delta row i (CSR-style)
@@ -160,7 +128,7 @@ def _closure_kernel(src, dst, cap, seeds=None):
         if len(new) == 0:
             break
         if reach_total + len(new) > cap:
-            raise OverflowError(_OVERFLOW_MARK)
+            raise OverflowError(_OVERFLOW)
         pieces.append(new)
         # geometric piece merging: pieces are pairwise-disjoint sorted
         # sets, so a merge is just sort(concat); merging while the new
@@ -180,52 +148,10 @@ def _closure_kernel(src, dst, cap, seeds=None):
     return out // n, out % n
 
 
-def _local_closure(base: DataFrame):
-    """Run _closure_kernel in one mapInPandas task over ``base``.
-
-    Returns the checkpointed closure DataFrame, or None when the kernel
-    overflowed its pair cap (caller falls back to the distributed loop).
-    Node ids of any type are densified with pandas factorize inside the
-    task; null-keyed rows pass through untouched (they never compose —
-    join equality with null is never true in the distributed plan either).
-    """
-
-    def compute(batches):
-        import numpy as np
-        import pandas as pd
-
-        parts = [b for b in batches]
-        if not parts:
-            return
-        pdf = pd.concat(parts, ignore_index=True)
-        scol, ocol = pdf.columns[0], pdf.columns[1]
-        null_mask = pdf[scol].isna() | pdf[ocol].isna()
-        work = pdf[~null_mask]
-        codes, uniques = pd.factorize(
-            pd.concat([work[scol], work[ocol]], ignore_index=True)
-        )
-        m = len(work)
-        s_out, o_out = _closure_kernel(
-            codes[:m].astype(np.int64), codes[m:].astype(np.int64),
-            LOCAL_PAIR_CAP,
-        )
-        out = pd.DataFrame(
-            {scol: uniques.take(s_out), ocol: uniques.take(o_out)}
-        )
-        if null_mask.any():
-            out = pd.concat([out, pdf[null_mask]], ignore_index=True)
-        for i in range(0, len(out), 1_000_000):
-            yield out.iloc[i : i + 1_000_000]
-
-    return _run_one_task(base, compute, base.schema)[0]
-
-
 def transitive_closure(
     pairs: DataFrame,
-    max_iter: int = 64,
     prepared: bool = False,
     local_ok: bool = True,
-    sized: tuple | None = None,
 ) -> DataFrame:
     """All (subj, obj) with a directed path subj ->+ obj ('+' closure).
 
@@ -243,8 +169,7 @@ def transitive_closure(
 
     ``local_ok=False`` skips the single-task fast path (a caller whose own
     kernel already overflowed passes this so the doomed kernel is not
-    re-run); ``sized=(n_rows, n_null_rows)`` hands over an already-known
-    base size so the sizing agg is not repeated.
+    re-run).
 
     [r6] Two structural costs of the original loop removed (guide §2.3/§2.4):
 
@@ -264,6 +189,18 @@ def transitive_closure(
     base = (
         pairs if prepared else pairs.select(*PAIR).distinct().localCheckpoint()
     )
+    # [r6] single-task fast path (see _closure_kernel); null-keyed edge sets
+    # keep the distributed plan (a null-obj edge composes under a non-null
+    # join key in the shuffle plan, which the kernel's dense coding does not
+    # reproduce)
+    if local_ok:
+        cap = LOCAL_PAIR_CAP
+        local, _ = run_single_task(
+            [base], lambda c, n: _closure_kernel(*c[0], cap), PAIR
+        )
+        if local is not None:
+            return local
+
     pieces = [base]  # reach = union of pieces; each piece checkpointed once
 
     def reach_df():
@@ -282,40 +219,13 @@ def transitive_closure(
     # loop tracks |reach| exactly and broadcast-hints both reach-side
     # joins below the same 2M-row bound the fixpoint uses for its delta;
     # past the bound it falls back to the shuffle plan unchanged.
-    reach_rows = [None]  # None = unknown (prepared base), disables the hint
+    reach_rows = base.count()
 
     def _reach(df):
-        if reach_rows[0] is not None and reach_rows[0] <= 2_000_000:
-            return F.broadcast(df)
-        return df
-
-    # [r6] single-task fast path (see _closure_kernel): bounded edge sets
-    # skip the driver loop entirely; truncated max_iter calls and null-keyed
-    # edge sets keep the distributed plan (a max_iter cap changes the
-    # contract, and a null-obj edge composes under a non-null join key in
-    # the shuffle plan, which the kernel's dense coding does not
-    # reproduce). The null count rides the same single agg job that sizes
-    # the edge set.
-    eligible = max_iter >= 64 and LOCAL_EDGE_BOUND > 0 and local_ok
-    n_edges = n_nulls = None
-    if sized is not None:
-        n_edges, n_nulls = sized
-    elif not prepared or eligible:
-        n_edges, n_nulls = _count_and_nulls(base)
-    if n_edges is not None:
-        # a known size also enables the reach broadcast hint for prepared
-        # bases whose fast path declines (nulls/overflow) — the fallback
-        # loop would otherwise run unhinted
-        reach_rows[0] = n_edges
-
-    if eligible:
-        if n_edges <= LOCAL_EDGE_BOUND and n_nulls == 0:
-            local = _local_closure(base)
-            if local is not None:
-                return local
+        return F.broadcast(df) if reach_rows <= 2_000_000 else df
 
     delta = base
-    for rnd in range(max_iter):
+    for rnd in count():
         # rename the build side instead of DataFrame aliases: delta and
         # base can be the SAME checkpointed plan, and alias-based self-joins
         # hit attribute-reuse resolution failures (key not found: subj#N)
@@ -335,9 +245,8 @@ def transitive_closure(
             return reach_df()
         pieces.append(new)
         delta = new
-        if reach_rows[0] is not None and reach_rows[0] <= 2_000_000:
-            reach_rows[0] += new.count()
-    return reach_df()
+        if reach_rows <= 2_000_000:
+            reach_rows += new.count()
 
 
 def closure_with_start(pairs: DataFrame, prepared: bool = False) -> DataFrame:
@@ -355,9 +264,9 @@ def _image_kernel(es, eo, fs, fo, cap):
     """Image of the transitive closure: all (X, P) with X ->+ K over the
     (es, eo) edge list and (K, P) in the (fs, fo) fact list, without
     materializing the closure outside this function. Dense int ids.
-    Raises OverflowError past ``cap``: _OVERFLOW_MARK from the closure
+    Raises OverflowError past ``cap``: _OVERFLOW from the closure
     stage (the closure itself does not fit — retrying it locally is
-    pointless), _OVERFLOW_MARK_IMG from the image stage (the closure
+    pointless), _OVERFLOW_IMG from the image stage (the closure
     fits; only the fused gather overflowed).
     """
     import numpy as np
@@ -374,7 +283,7 @@ def _image_kernel(es, eo, fs, fo, cap):
     cnt = hi - lo
     total = int(cnt.sum())
     if total > cap:
-        raise OverflowError(_OVERFLOW_MARK_IMG)
+        raise OverflowError(_OVERFLOW_IMG)
     if total == 0:
         return cs[:0], co[:0]
     idx = np.repeat(lo, cnt) + (
@@ -382,7 +291,7 @@ def _image_kernel(es, eo, fs, fo, cap):
     )
     n = int(max(int(cs.max()), int(fo_sorted.max()))) + 1
     if n * n >= (1 << 62):
-        raise OverflowError(_OVERFLOW_MARK_IMG)
+        raise OverflowError(_OVERFLOW_IMG)
     img = np.unique(np.repeat(cs, cnt) * n + fo_sorted[idx])
     return img // n, img % n
 
@@ -395,90 +304,29 @@ def closure_image(pairs: DataFrame, facts: DataFrame) -> DataFrame:
     shipping it out of the kernel task and shuffling it into a join costs
     more than the image itself. Falls back to
     ``transitive_closure(pairs) ⨝ facts`` (the r6-start plan) when the
-    edge set exceeds the bound, carries null keys, or the kernel
-    overflows. Both inputs are (subj, obj) DataFrames of one id type;
-    null-keyed FACT rows are ignored on both paths.
+    runner declines (id types, null edge keys, edges + facts over its row
+    budget) or the kernel overflows. Both inputs are (subj, obj)
+    DataFrames; null-keyed FACT rows are ignored on both paths.
     """
-    from pyspark.sql import types as T
-
-    subj_t = pairs.schema["subj"].dataType
-    types = {
-        subj_t, pairs.schema["obj"].dataType,
-        facts.schema["subj"].dataType, facts.schema["obj"].dataType,
-    }
-    eligible = LOCAL_EDGE_BOUND > 0 and len(types) == 1
     base = pairs.select(*PAIR).distinct().localCheckpoint()
-    sized = None
-    closure_overflowed = False
-    if eligible:
-        sized = _count_and_nulls(base)
-        n_edges, n_nulls = sized
-        if n_edges <= LOCAL_EDGE_BOUND and n_nulls == 0:
-            schema = T.StructType(
-                [
-                    T.StructField("subj", subj_t),
-                    T.StructField("obj", facts.schema["obj"].dataType),
-                ]
-            )
-            tagged = base.select(
-                F.lit(0).alias("_k"), F.col("subj"), F.col("obj")
-            ).unionByName(
-                facts.select(
-                    F.lit(1).alias("_k"), F.col("subj"), F.col("obj")
-                ).where(
-                    F.col("subj").isNotNull() & F.col("obj").isNotNull()
-                )
-            )
-
-            def compute(batches):
-                import numpy as np
-                import pandas as pd
-
-                parts = [b for b in batches]
-                if not parts:
-                    return
-                pdf = pd.concat(parts, ignore_index=True)
-                edges = pdf[pdf["_k"] == 0]
-                fact = pdf[pdf["_k"] == 1]
-                m = len(edges)
-                codes, uniques = pd.factorize(
-                    pd.concat(
-                        [
-                            edges["subj"], edges["obj"],
-                            fact["subj"], fact["obj"],
-                        ],
-                        ignore_index=True,
-                    )
-                )
-                k = len(fact)
-                s_out, o_out = _image_kernel(
-                    codes[:m].astype(np.int64),
-                    codes[m : 2 * m].astype(np.int64),
-                    codes[2 * m : 2 * m + k].astype(np.int64),
-                    codes[2 * m + k :].astype(np.int64),
-                    LOCAL_PAIR_CAP,
-                )
-                out = pd.DataFrame(
-                    {"subj": uniques.take(s_out), "obj": uniques.take(o_out)}
-                )
-                for i in range(0, len(out), 1_000_000):
-                    yield out.iloc[i : i + 1_000_000]
-
-            result, mark = _run_one_task(tagged, compute, schema)
-            if result is not None:
-                return result
-            # closure-stage overflow: the same kernel inside
-            # transitive_closure would grind to the identical overflow —
-            # skip straight to the distributed loop. Image-stage overflow:
-            # the closure itself fits, so its fast path stays worthwhile
-            # and only the join goes distributed.
-            closure_overflowed = mark == _OVERFLOW_MARK
-    clo = transitive_closure(
-        base, prepared=True, local_ok=not closure_overflowed, sized=sized
-    )
-    right = facts.where(
+    facts = facts.where(
         F.col("subj").isNotNull() & F.col("obj").isNotNull()
-    ).select(F.col("subj").alias("_k"), F.col("obj").alias("obj"))
+    ).select(*PAIR)
+    cap = LOCAL_PAIR_CAP
+    img, reason = run_single_task(
+        [base, facts], lambda c, n: _image_kernel(*c[0], *c[1], cap), PAIR
+    )
+    if img is not None:
+        return img
+    # closure-stage overflow: the same kernel inside transitive_closure
+    # would grind to the identical overflow — skip straight to the
+    # distributed loop. Otherwise (image-stage overflow, facts over the
+    # budget) the closure alone may still fit, so only the join goes
+    # distributed.
+    clo = transitive_closure(
+        base, prepared=True, local_ok=reason != _OVERFLOW
+    )
+    right = facts.select(F.col("subj").alias("_k"), "obj")
     return (
         clo.select("subj", F.col("obj").alias("_k"))
         .join(right, "_k")
@@ -487,69 +335,10 @@ def closure_image(pairs: DataFrame, facts: DataFrame) -> DataFrame:
     )
 
 
-def _local_targets(base: DataFrame, start: DataFrame):
-    """Seeded forward closure in one mapInPandas task (r6, guide §4.2).
-
-    Same shape as :func:`_local_closure` but the kernel's initial delta is
-    the seed-restricted base slice. The seed set rides into the single
-    task as tagged rows unioned onto the edge set. Returns None when the
-    kernel overflows (caller falls back to the distributed frontier loop).
-    The caller guarantees subj/obj/seed share one id type (the tagged
-    union needs it).
-    """
-    from pyspark.sql import types as T
-
-    subj_t = base.schema["subj"].dataType
-    schema = T.StructType(
-        [T.StructField("start", subj_t), T.StructField("node", subj_t)]
-    )
-    seed_col = start.columns[0]
-    tagged = base.select(
-        F.lit(0).alias("_k"), F.col("subj"), F.col("obj")
-    ).unionByName(
-        start.select(
-            F.lit(1).alias("_k"),
-            F.col(seed_col).alias("subj"),
-            F.col(seed_col).alias("obj"),
-        )
-    )
-
-    def compute(batches):
-        import numpy as np
-        import pandas as pd
-
-        parts = [b for b in batches]
-        if not parts:
-            return
-        pdf = pd.concat(parts, ignore_index=True)
-        edges = pdf[pdf["_k"] == 0]
-        seeds = pdf[pdf["_k"] == 1]["subj"].dropna()
-        m = len(edges)
-        codes, uniques = pd.factorize(
-            pd.concat(
-                [edges["subj"], edges["obj"], seeds], ignore_index=True
-            )
-        )
-        s_out, o_out = _closure_kernel(
-            codes[:m].astype(np.int64),
-            codes[m : 2 * m].astype(np.int64),
-            LOCAL_PAIR_CAP,
-            seeds=codes[2 * m :].astype(np.int64),
-        )
-        out = pd.DataFrame(
-            {"start": uniques.take(s_out), "node": uniques.take(o_out)}
-        )
-        for i in range(0, len(out), 1_000_000):
-            yield out.iloc[i : i + 1_000_000]
-
-    return _run_one_task(tagged, compute, schema)[0]
-
-
 def transitive_targets(
     pairs: DataFrame,
     start: DataFrame,
     include_start: bool = False,
-    max_iter: int = 64,
     prepared: bool = False,
 ) -> DataFrame:
     """Forward closure from a seed set (zelph.cpp:267-281): returns
@@ -558,27 +347,28 @@ def transitive_targets(
     base = (
         pairs if prepared else pairs.select(*PAIR).distinct().localCheckpoint()
     )
-    # [r6] single-task fast path, same eligibility rules as
-    # transitive_closure (bounded edge set, no null keys) plus one id
-    # type across subj/obj/seed — checked BEFORE the sizing agg so a
-    # type mismatch costs no job
-    if (
-        LOCAL_EDGE_BOUND > 0
-        and max_iter >= 64
-        and base.schema["subj"].dataType == base.schema["obj"].dataType
-        and start.schema[0].dataType == base.schema["subj"].dataType
-    ):
-        n_edges, n_nulls = _count_and_nulls(base)
-        if n_edges <= LOCAL_EDGE_BOUND and n_nulls == 0:
-            visited = _local_targets(base, start)
-            if visited is not None:
-                if include_start:
-                    seeds = start.select(
-                        F.col(start.columns[0]).alias("start"),
-                        F.col(start.columns[0]).alias("node"),
-                    )
-                    visited = visited.unionByName(seeds).distinct()
-                return visited
+    # [r6] single-task fast path: the kernel's initial delta is the
+    # seed-restricted base slice; the seeds ride into the task as a second
+    # input
+    cap = LOCAL_PAIR_CAP
+    visited, _ = run_single_task(
+        [base, start.select("node").where(F.col("node").isNotNull())],
+        lambda c, n: _closure_kernel(*c[0], cap, seeds=c[1][0]),
+        ["start", "node"],
+    )
+    if visited is None:
+        visited = _targets_loop(base, start)
+    if include_start:
+        seeds = start.select(
+            F.col("node").alias("start"), F.col("node").alias("node")
+        )
+        visited = visited.unionByName(seeds).distinct()
+    return visited
+
+
+def _targets_loop(base: DataFrame, start: DataFrame) -> DataFrame:
+    """Distributed frontier loop of :func:`transitive_targets`, run until
+    no new (start, node) pair appears."""
     frontier = (
         start.select(F.col("node").alias("subj"))
         .distinct()
@@ -598,7 +388,7 @@ def transitive_targets(
             out = out.unionByName(p)
         return out
 
-    for _ in range(max_iter):
+    while True:
         step = (
             frontier.join(base, frontier.node == base.subj)
             .select("start", F.col("obj").alias("node"))
@@ -608,16 +398,9 @@ def transitive_targets(
             visited_df(), on=["start", "node"], how="left_anti"
         ).localCheckpoint()
         if new.isEmpty():
-            break
+            return visited_df()
         pieces.append(new)
         frontier = new
-    visited = visited_df()
-    if include_start:
-        seeds = start.select(
-            F.col("node").alias("start"), F.col("node").alias("node")
-        )
-        visited = visited.unionByName(seeds).distinct()
-    return visited
 
 
 def transitive_sources(pairs: DataFrame, start: DataFrame, **kw) -> DataFrame:
