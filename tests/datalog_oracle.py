@@ -50,15 +50,15 @@ def _eval_body(facts: set[Triple], rule: Rule) -> list[dict]:
 
 
 def _fire(facts: set[Triple], rule: Rule) -> set[Triple]:
-    cons = rule.consequence
     out = set()
     for b in _eval_body(facts, rule):
-        out.add(
-            tuple(
-                b[t] if is_var(t) else t
-                for t in (cons.subj, cons.pred, cons.obj)
+        for cons in rule.consequences:
+            out.add(
+                tuple(
+                    b[t] if is_var(t) else t
+                    for t in (cons.subj, cons.pred, cons.obj)
+                )
             )
-        )
     return out
 
 

@@ -4,11 +4,19 @@ per-rule path (differential, like naive-vs-semi-naive)."""
 from __future__ import annotations
 
 import pandas as pd
+import pytest
 
 import datalog_oracle as oracle
-from zelph_spark import extract, rules as Rz
+from zelph_spark import extract, rules as Rz, single_task
 from zelph_spark.reasoning import run_fixpoint
 from zelph_spark.reasoning.fused import fuse_rules
+
+
+@pytest.fixture(autouse=True)
+def _distributed_loop(monkeypatch):
+    """The fused rule tables live in the distributed loop: keep the
+    fixpoint off the in-task kernel."""
+    monkeypatch.setattr(single_task, "LOCAL_ROWS", 0)
 
 
 def test_fuse_classification():

@@ -72,12 +72,13 @@ def _n_constants(pat: Pattern) -> int:
     return sum(0 if is_var(getattr(pat, c)) else 1 for c in _POSITIONS)
 
 
-def order_conditions(rule: Rule) -> list[int]:
+def order_conditions(rule: Rule, first: int | None = None) -> list[int]:
     """Greedy selective-first ordering of the positive conditions
     (reasoning.cpp:279-468): seed with the most-constant condition
     (variable-predicate conditions penalized — they scan every extent,
     unification.cpp:433-444), then prefer maximal variable overlap with the
-    bound set, then more constants."""
+    bound set, then more constants. ``first`` pins the seed condition
+    instead (the in-task evaluator starts from the delta position)."""
 
     def base_score(i: int) -> tuple:
         pat = rule.conditions[i]
@@ -86,7 +87,7 @@ def order_conditions(rule: Rule) -> list[int]:
     remaining = list(rule.positive)
     if not remaining:
         return []
-    ordered = [max(remaining, key=base_score)]
+    ordered = [max(remaining, key=base_score) if first is None else first]
     remaining.remove(ordered[0])
     bound = set(rule.conditions[ordered[0]].variables)
     while remaining:

@@ -28,6 +28,19 @@ the distributed analog of ``Reasoning::run`` (``reasoning.cpp:57-211``) and
 :func:`verify_fixpoint` ports the reference's semi-naive safety net
 (``reasoning_seminaive.cpp:386-407``): one classic pass over the result must
 deduce nothing new.
+
+Before any of that, a bounded positive stratum runs in one task instead:
+:func:`zelph_spark.reasoning.kernel.saturate` through
+:func:`zelph_spark.single_task.run_single_task`, over two inputs, the
+distinct edges and the rule constants (so a constant no fact mentions
+still gets a code). The saturated set is then ``base ∪ deduced`` and the
+contradiction sweep runs distributed over it as above. The loop above runs
+instead, unchanged, on any decline: a ruleset outside the kernel's
+fragment (NAF, ``unequals``, fresh variables), ``semi_naive=False`` or
+``fuse=False`` (the differential reference legs), mismatched id types,
+null ids, inputs over ``single_task.LOCAL_ROWS``, or a kernel overflow past
+``kernel.ROW_CAP``. It is the only path at 100 TB. The first
+``fixpoint_log`` entry records the choice (stratum ``kernel``).
 """
 
 from __future__ import annotations
@@ -39,9 +52,12 @@ import time
 from dataclasses import dataclass, field
 from functools import reduce
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.accumulators import AccumulatorParam
+from pyspark.sql import DataFrame, Observation, functions as F, types as T
 
-from ..rules import Rule, is_var
+from ..rules import Rule, is_var, resolve_rules, rule_constants
+from ..single_task import run_single_task
+from . import kernel
 from .compiler import compile_rule_body, project_consequence
 from .fused import fire_contradictions_fused, fire_fused, fuse_contradiction_rules, fuse_rules
 
@@ -294,14 +310,14 @@ def run_fixpoint(
     rules: list[Rule],
     contradiction_rules: list[Rule] | None = None,
     semi_naive: bool = True,
-    max_iter: int = 100,
     fuse: bool = True,
     wrong_facts: DataFrame | None = None,
 ) -> FixpointResult:
     """Saturate ``edges`` (string or long ids — any equality-joinable type)
     under ``rules``; then evaluate ``contradiction_rules`` once.
 
-    One semi-naive loop does the work (module docstring). Transitivity
+    A fact set that fits one task saturates in the in-task kernel; any
+    other runs the semi-naive loop (module docstring). Transitivity
     rules need no special path: the delta joins the full extent at the
     other condition position, so path length doubles per round and a chain
     of depth d quiesces in O(log d) rounds. Chain-inheritance rules are the
@@ -343,8 +359,8 @@ def run_fixpoint(
         spark.conf.set(k, v)
     try:
         return _run_fixpoint_inner(
-            edges, rules, contradiction_rules, semi_naive, max_iter, scratch,
-            fuse, wrong_facts,
+            edges, rules, contradiction_rules, semi_naive, scratch, fuse,
+            wrong_facts,
         )
     finally:
         for k, v in old.items():
@@ -357,12 +373,88 @@ def run_fixpoint(
         shutil.rmtree(scratch, ignore_errors=True)
 
 
+class _MaxParam(AccumulatorParam):
+    """Keep the largest update. The kernel runs in one task, so a retried
+    or recomputed attempt reports the same value instead of adding it a
+    second time."""
+
+    def zero(self, value):
+        return 0
+
+    def addInPlace(self, a, b):
+        return max(a, b)
+
+
+def _kernel_fixpoint(base: DataFrame, rules: list[Rule]):
+    """Saturate ``base`` in one task (module docstring). Returns
+    ``(deduced, (rounds, n_deduced))``, or ``(None, reason)``."""
+    if not kernel.in_fragment(rules):
+        return None, "fragment"
+    spark = base.sparkSession
+    id_t = base.schema["subj"].dataType
+    py_t = (
+        str if isinstance(id_t, T.StringType)
+        else int if isinstance(id_t, T.IntegralType) else None
+    )
+    consts = sorted(rule_constants(rules))
+    if py_t is None or any(type(c) is not py_t for c in consts):
+        return None, "types"
+    # literals, not createDataFrame: a DataFrame made from a Python list
+    # has no size estimate, and the unknown size would reach every plan
+    # over the saturated edges (the contradiction sweep's joins)
+    const_df = spark.range(1).select(
+        F.explode(
+            F.array(*[F.lit(c) for c in consts]).cast(T.ArrayType(id_t))
+        ).alias("c")
+    )
+    cap = kernel.ROW_CAP
+    sc = spark.sparkContext
+    rounds, n_new = (sc.accumulator(0, _MaxParam()) for _ in range(2))
+
+    def run(codes, n):
+        import numpy as np
+
+        (s, p, o), (c,) = codes
+        # codes follow id order, so the sorted distinct constant codes line
+        # up with the sorted constants
+        coded = resolve_rules(rules, dict(zip(consts, np.unique(c).tolist())))
+        ds, dp, do, r = kernel.saturate(s, p, o, n, coded, cap)
+        rounds.add(r)
+        n_new.add(len(ds))
+        return ds, dp, do
+
+    deduced, reason = run_single_task([base, const_df], run, EDGE_COLS)
+    if deduced is None:
+        return None, reason
+    return deduced, (rounds.value, n_new.value)
+
+
 def _run_fixpoint_inner(
-    edges, rules, contradiction_rules, semi_naive, max_iter, scratch, fuse,
+    edges, rules, contradiction_rules, semi_naive, scratch, fuse,
     wrong_facts=None,
 ) -> FixpointResult:
     spark = edges.sparkSession
     base = edges.select(*EDGE_COLS).dropDuplicates(EDGE_COLS).localCheckpoint()
+    if semi_naive and fuse:
+        _t0 = time.time()
+        deduced, info = _kernel_fixpoint(base, rules)
+        if deduced is not None:
+            rounds, n_new = info
+            log = [{"iter": rounds, "stratum": "kernel", "new": n_new,
+                    "sec": round(time.time() - _t0, 2)}]
+            full = base.unionByName(deduced)
+            # the predicate set in one scan without a shuffle
+            obs = Observation()
+            full.observe(obs, F.collect_set("pred").alias("preds")).write.format(
+                "noop"
+            ).mode("overwrite").save()
+            return _finish(
+                full, deduced, set(obs.get["preds"]), rules,
+                contradiction_rules, wrong_facts, rounds, n_new, log,
+            )
+        log = [{"stratum": "kernel", "declined": info}]
+    else:
+        log = [{"stratum": "kernel", "declined": "reference leg"}]
     positive = [r for r in rules if not r.negated]
     naf_rules = [r for r in rules if r.negated]
     # [r6] chain-inheritance factoring (split_inherit docstring): the
@@ -471,8 +563,6 @@ def _run_fixpoint_inner(
         each delta feeds the next round's joins the estimate compounds until
         the driver stalls multiplying multi-million-digit BigIntegers. A scan
         of the written files carries real file statistics instead."""
-        from pyspark.sql import Observation
-
         if cand is None:
             return None, None, 0, set()
         out = cand.dropDuplicates(EDGE_COLS).join(
@@ -499,7 +589,6 @@ def _run_fixpoint_inner(
         return spark.read.parquet(path), path, m["n"], set(m["preds"])
 
     full = base
-    log: list[dict] = []
     iterations = 0
     total_new = 0
     present = _distinct_preds(base)  # O2 extent restriction, kept current
@@ -522,7 +611,7 @@ def _run_fixpoint_inner(
         fire_all(full, present=present), "delta_0"
     )
     plan_sec = None
-    while iterations < max_iter:
+    while True:
         iterations += 1
         entry = {"iter": iterations, "stratum": "positive", "new": n_delta,
                  "sec": round(time.time() - _t0, 2)}
@@ -729,6 +818,19 @@ def _run_fixpoint_inner(
             spark.read.parquet(*delta_paths).localCheckpoint()
         )
     log.append({"stratum": "detach", "sec": round(time.time() - _t0, 2)})
+    deduced = full.join(base, on=EDGE_COLS, how="left_anti")
+    return _finish(
+        full, deduced, present, rules, contradiction_rules, wrong_facts,
+        iterations, total_new, log,
+    )
+
+
+def _finish(
+    full, deduced, present, rules, contradiction_rules, wrong_facts,
+    iterations, n_deduced, log,
+) -> FixpointResult:
+    """Plan the contradiction sweep over the saturated ``full`` and wrap
+    the result."""
     _t0 = time.time()
     contradictions = evaluate_contradictions(
         full, contradiction_rules or [], present_preds=present
@@ -743,13 +845,12 @@ def _run_fixpoint_inner(
             )
         )
     log.append({"stratum": "contra-plan", "sec": round(time.time() - _t0, 2)})
-    deduced = full.join(base, on=EDGE_COLS, how="left_anti")
     return FixpointResult(
         edges=full,
         deduced=deduced,
         contradictions=contradictions,
         iterations=iterations,
-        n_deduced=total_new,
+        n_deduced=n_deduced,
         log=log,
     )
 
