@@ -20,6 +20,12 @@ def _pairs(spark, pairs):
     return spark.createDataFrame(pd.DataFrame(pairs, columns=["subj", "obj"]))
 
 
+def _facts(spark, triples):
+    return spark.createDataFrame(
+        pd.DataFrame(triples, columns=["subj", "pred", "obj"])
+    )
+
+
 GRAPHS = {
     "chain": [(i, i + 1) for i in range(20)],
     "cycle": [(0, 1), (1, 2), (2, 0), (2, 3)],
@@ -127,18 +133,20 @@ def test_seeded_targets_overflow_falls_back(spark, monkeypatch):
 @pytest.mark.parametrize("name", ["chain", "cycle", "tree", "hub"])
 def test_closure_image_local_matches_fallback(spark, name, monkeypatch):
     edges = GRAPHS[name]
-    # facts on some closure targets, some absent nodes, plus duplicates
+    # facts of two preds on some closure targets, some absent nodes, plus
+    # duplicates; one (K, P) carried under both preds
     nodes = sorted({n for e in edges for n in e})
-    fact_rows = [(nodes[i], 10_000 + i) for i in range(0, len(nodes), 3)]
-    fact_rows += [(8888, 1), (nodes[0], 10_000)]  # absent K; duplicate P
-    facts = spark.createDataFrame(
-        pd.DataFrame(fact_rows, columns=["subj", "obj"])
-    )
+    fact_rows = [
+        (nodes[i], 7001 + i % 2, 10_000 + i) for i in range(0, len(nodes), 3)
+    ]
+    fact_rows += [(8888, 7001, 1), (nodes[0], 7001, 10_000)]  # absent K; dup
+    fact_rows += [(nodes[0], 7002, 10_000)]
+    facts = _facts(spark, fact_rows)
 
     def run(bound):
         monkeypatch.setattr(single_task, "LOCAL_ROWS", bound)
         df = closure.closure_image(_pairs(spark, edges), facts)
-        return {(r.subj, r.obj) for r in df.collect()}
+        return {tuple(r) for r in df.collect()}
 
     local = run(2_000_000)
     fallback = run(0)
@@ -148,12 +156,12 @@ def test_closure_image_local_matches_fallback(spark, name, monkeypatch):
     clo = closure.transitive_closure(_pairs(spark, edges))
     import pyspark.sql.functions as F
 
-    right = facts.select(F.col("subj").alias("_k"), "obj")
+    right = facts.select(F.col("subj").alias("_k"), "pred", "obj")
     manual = {
-        (r.subj, r.obj)
+        tuple(r)
         for r in clo.select("subj", F.col("obj").alias("_k"))
         .join(right, "_k")
-        .select("subj", "obj")
+        .select("subj", "pred", "obj")
         .distinct()
         .collect()
     }
@@ -162,23 +170,31 @@ def test_closure_image_local_matches_fallback(spark, name, monkeypatch):
 
 def test_closure_image_overflow_falls_back(spark, monkeypatch):
     edges = GRAPHS["tree"]
-    facts = spark.createDataFrame(
-        pd.DataFrame([(i, 9000 + i) for i in range(2, 60)],
-                     columns=["subj", "obj"])
-    )
+    facts = _facts(spark, [(i, 7001 + i % 2, 9000 + i) for i in range(2, 60)])
     monkeypatch.setattr(single_task, "LOCAL_ROWS", 2_000_000)
     monkeypatch.setattr(closure, "LOCAL_PAIR_CAP", 5)
     via_fallback = {
-        (r.subj, r.obj)
+        tuple(r)
         for r in closure.closure_image(_pairs(spark, edges), facts).collect()
     }
     monkeypatch.setattr(single_task, "LOCAL_ROWS", 0)
     monkeypatch.setattr(closure, "LOCAL_PAIR_CAP", 67108864)
     dist = {
-        (r.subj, r.obj)
+        tuple(r)
         for r in closure.closure_image(_pairs(spark, edges), facts).collect()
     }
     assert via_fallback == dist
+
+
+def test_image_kernel_one_row_per_pred():
+    # X=0 reaches K=1 and K=2, and both carry P=9 under preds 5 and 6:
+    # (0, 9) comes back once per pred, not once per K; no Spark
+    es, eo = np.array([0, 0, 3]), np.array([1, 2, 0])
+    fs, fp, fo = (np.array(a) for a in ([1, 2, 1, 2], [5, 5, 6, 6], [9] * 4))
+    x, p, o = closure._image_kernel(es, eo, fs, fp, fo, 1000)
+    assert sorted(zip(x.tolist(), p.tolist(), o.tolist())) == [
+        (0, 5, 9), (0, 6, 9), (3, 5, 9), (3, 6, 9)
+    ]
 
 
 def test_kernel_deep_chain_and_cycle_selfpairs():

@@ -18,6 +18,7 @@ from zelph_spark.reasoning import (
     run_fixpoint,
     verify_fixpoint,
 )
+from zelph_spark.reasoning.fixpoint import split_inherit
 from zelph_spark.rules import P, R
 
 
@@ -202,6 +203,26 @@ def test_naf_deduction_reopens_positive_stratum(spark):
     assert res.n_deduced == len(got) - len(facts)
 
 
+def test_naf_p_facts_inherit_after_an_empty_injection(spark):
+    """An inheritance injection that lands nothing must not exempt its spec
+    from the NAF delta that follows: p facts a NAF rule deduces still
+    inherit down the s chain. The NAF rule keeps the kernel out, so the
+    distributed loop runs."""
+    inherit = R("hp-inherit", [P("?K", "HP", "?P"), P("?X", "SUB", "?K")],
+                P("?X", "HP", "?P"))
+    naf = R("flag-hp", [P("?X", "FLAG", "?Y"), P("?X", "BLOCK", "?Y")],
+            P("?X", "HP", "?Y"), negated=(1,))
+    rules = [inherit, naf]
+    facts = [("N1", "SUB", "N0"), ("N0", "HP", "A"), ("N1", "HP", "A"),
+             ("N0", "FLAG", "B")]
+    res = run_fixpoint(_df(spark, facts), rules)
+    assert res.log[0] == {"stratum": "kernel", "declined": "fragment"}
+    got = _edge_set(res.edges)
+    assert ("N1", "HP", "B") in got
+    assert got == oracle.stratified_fixpoint(set(facts), rules)
+    assert verify_fixpoint(res, rules)
+
+
 def test_unequal_guard(spark):
     """!= guard blocks same-value bindings (test_reasoning.cpp:387,551)."""
     facts = [("a", "r", "b"), ("b", "r", "b")]
@@ -311,12 +332,13 @@ def test_taxonomy_fixpoint_matches_oracle(spark, monkeypatch):
 
 def test_inherit_factoring_differential(spark, monkeypatch):
     """[r6] Chain-inheritance factoring (split_inherit + deferred closure-
-    image injection) must be invisible semantically: identical fixpoint
-    output vs the plain per-round loop AND vs the independent Datalog
-    oracle, on a corpus that exercises a DEEP subclass chain (one s-hop per
-    round in the plain loop, one injection in the factored one), the
-    haspart-isa interleaving, and the facet variant of the same shape.
-    Both legs run the distributed loop."""
+    image injection) must be invisible semantically: the loop's fixpoint
+    equals the independent Datalog oracle on a corpus that exercises a DEEP
+    subclass chain (one injection instead of one s-hop per round), the
+    haspart-isa interleaving, and the facet variant of the same shape. The
+    facet specs share s = P1269, so one closure_image call serves several
+    of them, and later injections read only the p facts landed since the
+    last one: both facts sources run through the one injection path."""
     monkeypatch.setattr(single_task, "LOCAL_ROWS", 0)
     chain = [(f"N{i}", "P279", f"N{i+1}") for i in range(9)]
     facts = sorted(
@@ -325,13 +347,8 @@ def test_inherit_factoring_differential(spark, monkeypatch):
            ("N0", "P31", "K0"), ("F0", "P1269", "N3"),
            ("A", "P461", "N5"), ("A", "P31", "KA")}
     )
-    edges = _df(spark, facts)
-    monkeypatch.setenv("ZELPH_INHERIT_DOUBLING", "1")
-    fast = run_fixpoint(edges, Rz.wikidata_rules())
-    monkeypatch.setenv("ZELPH_INHERIT_DOUBLING", "0")
-    slow = run_fixpoint(edges, Rz.wikidata_rules())
-    got = _edge_set(fast.edges)
-    assert got == _edge_set(slow.edges)
+    res = run_fixpoint(_df(spark, facts), Rz.wikidata_rules())
+    got = _edge_set(res.edges)
     assert got == oracle.stratified_fixpoint(set(facts), Rz.wikidata_rules())
     # the deep chain actually inherited: the bottom subclass carries the
     # top's part, transitively lifted to its class too
@@ -339,9 +356,19 @@ def test_inherit_factoring_differential(spark, monkeypatch):
     assert ("N0", "P527", "KX") in got
     # facet inheritance (same factored shape, s = P1269) composed as well
     assert ("F0", "P527", "PARTX") in got
-    # the factored loop quiesces in far fewer rounds than the chain depth
-    assert fast.iterations < slow.iterations
-    assert verify_fixpoint(fast, Rz.wikidata_rules())
+    # the factored loop quiesces in fewer rounds than the chain is deep
+    assert res.iterations < len(chain)
+    s_of = {sp.rule_id: sp.s for sp in split_inherit(Rz.wikidata_rules())[1]}
+    injections = [
+        [spec.rsplit(":", 1) for spec in e["specs"]]
+        for e in res.log if e.get("stratum") == "inherit"
+    ]
+    assert any(
+        sum(s_of[rule_id] == Rz.FACET for rule_id, _ in inj) > 1
+        for inj in injections
+    )
+    assert any(kind == "incr" for inj in injections for _, kind in inj)
+    assert verify_fixpoint(res, Rz.wikidata_rules())
 
 
 def test_fuse_shape_mode_differential(spark, monkeypatch):

@@ -8,7 +8,7 @@ import pandas as pd
 from zelph_spark import closure, single_task
 
 CHAIN = [(i, i + 1) for i in range(20)]
-FACTS = [(i, 1000 + i) for i in range(30)]
+FACTS = [(i, 500 + i % 2, 1000 + i) for i in range(30)]
 
 
 def _df(spark, rows, columns=("subj", "obj")):
@@ -31,17 +31,18 @@ def test_fits_returns_result_and_sizes(spark):
 def test_facts_side_counts_toward_budget(spark, monkeypatch):
     # the 20 edges alone fit a 40-row budget; edges + 30 facts do not
     monkeypatch.setattr(single_task, "LOCAL_ROWS", 40)
-    edges, facts = _df(spark, CHAIN), _df(spark, FACTS)
+    edges = _df(spark, CHAIN)
+    facts = _df(spark, FACTS, ("subj", "pred", "obj"))
     out, reason = single_task.run_single_task(
         [edges, facts],
         lambda c, n: closure._image_kernel(*c[0], *c[1], 10_000),
-        closure.PAIR,
+        closure.TRIPLE,
     )
     assert (out, reason) == (None, "budget")
     # closure_image falls back to closure ⨝ facts with the same answer
-    got = {(r.subj, r.obj) for r in closure.closure_image(edges, facts).collect()}
+    got = {tuple(r) for r in closure.closure_image(edges, facts).collect()}
     reach = {(a, b) for a in range(21) for b in range(a + 1, 21)}
-    want = {(x, p) for x, k in reach for k2, p in FACTS if k == k2}
+    want = {(x, p, o) for x, k in reach for k2, p, o in FACTS if k == k2}
     assert got == want
 
 

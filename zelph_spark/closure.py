@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, functions as F
 from .single_task import run_single_task
 
 PAIR = ["subj", "obj"]
+TRIPLE = ["subj", "pred", "obj"]
 
 
 AUTO_SWITCH_ROUND = 3
@@ -260,10 +261,12 @@ def closure_with_start(pairs: DataFrame, prepared: bool = False) -> DataFrame:
     return plus.unionByName(ident).distinct()
 
 
-def _image_kernel(es, eo, fs, fo, cap):
-    """Image of the transitive closure: all (X, P) with X ->+ K over the
-    (es, eo) edge list and (K, P) in the (fs, fo) fact list, without
-    materializing the closure outside this function. Dense int ids.
+def _image_kernel(es, eo, fs, fp, fo, cap):
+    """Image of the transitive closure: all (X, p, P) with X ->+ K over the
+    (es, eo) edge list and (K, p, P) in the (fs, fp, fo) fact list, without
+    materializing the closure outside this function. Dense int ids; facts
+    of several predicates share the one closure, and each (X, P) comes back
+    once per predicate that reaches it.
     Raises OverflowError past ``cap``: _OVERFLOW from the closure
     stage (the closure itself does not fit — retrying it locally is
     pointless), _OVERFLOW_IMG from the image stage (the closure
@@ -273,11 +276,10 @@ def _image_kernel(es, eo, fs, fo, cap):
 
     cs, co = _closure_kernel(es, eo, cap)
     if len(cs) == 0 or len(fs) == 0:
-        return cs[:0], co[:0]
+        return cs[:0], cs[:0], co[:0]
     # facts CSR sorted by K
     order = np.argsort(fs, kind="stable")
     fs_sorted = fs[order]
-    fo_sorted = fo[order]
     lo = np.searchsorted(fs_sorted, co, side="left")
     hi = np.searchsorted(fs_sorted, co, side="right")
     cnt = hi - lo
@@ -285,36 +287,42 @@ def _image_kernel(es, eo, fs, fo, cap):
     if total > cap:
         raise OverflowError(_OVERFLOW_IMG)
     if total == 0:
-        return cs[:0], co[:0]
-    idx = np.repeat(lo, cnt) + (
-        np.arange(total) - np.repeat(np.cumsum(cnt) - cnt, cnt)
-    )
-    n = int(max(int(cs.max()), int(fo_sorted.max()))) + 1
-    if n * n >= (1 << 62):
+        return cs[:0], cs[:0], co[:0]
+    idx = order[
+        np.repeat(lo, cnt)
+        + (np.arange(total) - np.repeat(np.cumsum(cnt) - cnt, cnt))
+    ]
+    # dedup within each predicate on the rank-prefixed key (rank·n + X)·n + P
+    preds, rank = np.unique(fp, return_inverse=True)
+    n = int(max(int(cs.max()), int(fo.max()))) + 1
+    if len(preds) * n * n >= (1 << 62):
         raise OverflowError(_OVERFLOW_IMG)
-    img = np.unique(np.repeat(cs, cnt) * n + fo_sorted[idx])
-    return img // n, img % n
+    img = np.unique((rank[idx] * n + np.repeat(cs, cnt)) * n + fo[idx])
+    return img // n % n, preds[img // (n * n)], img % n
 
 
 def closure_image(pairs: DataFrame, facts: DataFrame) -> DataFrame:
-    """DISTINCT (X, P) such that X ->+ K over ``pairs`` and (K, P) in
-    ``facts`` — the chain-inheritance image s+ ⨝ p-facts (fixpoint.py
-    split_inherit) WITHOUT materializing s+ when the single-task path is
-    eligible: the multi-million-pair closure is an intermediate only, so
-    shipping it out of the kernel task and shuffling it into a join costs
-    more than the image itself. Falls back to
-    ``transitive_closure(pairs) ⨝ facts`` (the r6-start plan) when the
-    runner declines (id types, null edge keys, edges + facts over its row
-    budget) or the kernel overflows. Both inputs are (subj, obj)
-    DataFrames; null-keyed FACT rows are ignored on both paths.
+    """DISTINCT (subj, pred, obj) such that subj ->+ K over ``pairs`` and
+    (K, pred, obj) in ``facts`` — the chain-inheritance image s+ ⨝ p-facts
+    (fixpoint.py split_inherit), for every p of the facts at once, WITHOUT
+    materializing s+ when the single-task path is eligible: the
+    multi-million-pair closure is an intermediate only, so shipping it out
+    of the kernel task and shuffling it into a join costs more than the
+    image itself. Falls back to ``transitive_closure(pairs) ⨝ facts`` when
+    the runner declines (id types, null edge keys, edges + facts over its
+    row budget) or the kernel overflows. ``pairs`` is (subj, obj), ``facts``
+    is (subj, pred, obj); fact rows with a null id are ignored on both
+    paths.
     """
     base = pairs.select(*PAIR).distinct().localCheckpoint()
     facts = facts.where(
-        F.col("subj").isNotNull() & F.col("obj").isNotNull()
-    ).select(*PAIR)
+        F.col("subj").isNotNull()
+        & F.col("pred").isNotNull()
+        & F.col("obj").isNotNull()
+    ).select(*TRIPLE)
     cap = LOCAL_PAIR_CAP
     img, reason = run_single_task(
-        [base, facts], lambda c, n: _image_kernel(*c[0], *c[1], cap), PAIR
+        [base, facts], lambda c, n: _image_kernel(*c[0], *c[1], cap), TRIPLE
     )
     if img is not None:
         return img
@@ -326,11 +334,11 @@ def closure_image(pairs: DataFrame, facts: DataFrame) -> DataFrame:
     clo = transitive_closure(
         base, prepared=True, local_ok=reason != _OVERFLOW
     )
-    right = facts.select(F.col("subj").alias("_k"), "obj")
+    right = facts.select(F.col("subj").alias("_k"), "pred", "obj")
     return (
         clo.select("subj", F.col("obj").alias("_k"))
         .join(right, "_k")
-        .select("subj", "obj")
+        .select(*TRIPLE)
         .distinct()
     )
 

@@ -14,9 +14,17 @@ the distributed analog of ``Reasoning::run`` (``reasoning.cpp:57-211``) and
   in the delta (variable-predicate conditions always seed — they are
   delta-safe here, unlike the reference's O7 fallback, because the
   relational evaluation has no nested-conjunction special case);
+- chain-inheritance rules (:func:`split_inherit`) leave the per-round
+  machinery: at positive quiescence each chain predicate s that some spec
+  needs gets ONE :func:`zelph_spark.closure.closure_image` call, s+ ⨝ the
+  union of those specs' p facts (the whole p slice for a spec whose s
+  changed since its last injection, else the delta files that landed p
+  facts since then); the images land as one delta that re-opens the
+  positive stratum;
 - NAF rules form stratum 2 (``reasoning.cpp:102-161``): they run only at
-  positive quiescence; anything they deduce re-opens the positive stratum,
-  and the alternation repeats until the NAF round is silent;
+  positive quiescence, after the inheritance images; anything they deduce
+  re-opens the positive stratum, and the alternation repeats until the NAF
+  round is silent;
 - every round lands its delta as parquet and reads ``full`` back as base
   plus the delta files — fixpoint lineage otherwise grows linearly and
   re-executes from scratch (§7 hard part 1);
@@ -45,7 +53,6 @@ null ids, inputs over ``single_task.LOCAL_ROWS``, or a kernel overflow past
 
 from __future__ import annotations
 
-import os
 import shutil
 import tempfile
 import time
@@ -55,6 +62,7 @@ from functools import reduce
 from pyspark.accumulators import AccumulatorParam
 from pyspark.sql import DataFrame, Observation, functions as F, types as T
 
+from ..closure import closure_image
 from ..rules import Rule, is_var, resolve_rules, rule_constants
 from ..single_task import run_single_task
 from . import kernel
@@ -62,6 +70,7 @@ from .compiler import compile_rule_body, project_consequence
 from .fused import fire_contradictions_fused, fire_fused, fuse_contradiction_rules, fuse_rules
 
 EDGE_COLS = ["subj", "pred", "obj"]
+_PARALLELISM_FIRST = "spark.sql.adaptive.coalescePartitions.parallelismFirst"
 
 
 @dataclass
@@ -153,7 +162,9 @@ def split_inherit(rules: list[Rule]):
     internally, never emitted as facts), injected at positive quiescence.
     Confluence of positive Datalog makes any such schedule reach the
     identical fixpoint; the injection only derives facts derivable by
-    repeated application of the factored rule.
+    repeated application of the factored rule. Specs that share s share
+    one closure: the loop makes one ``closure_image`` call per distinct s,
+    whose facts carry each spec's p in their pred column.
 
     Guards: negation, inequality, contradiction, extra consequences and
     fresh variables disqualify; p == s is plain transitivity (left to the
@@ -321,7 +332,9 @@ def run_fixpoint(
     rules need no special path: the delta joins the full extent at the
     other condition position, so path length doubles per round and a chain
     of depth d quiesces in O(log d) rounds. Chain-inheritance rules are the
-    one factored shape (:func:`split_inherit`, ``ZELPH_INHERIT_DOUBLING``).
+    one factored shape: the loop always applies them as closure images at
+    positive quiescence (:func:`split_inherit`); the kernel runs them as
+    ordinary rules.
 
     ``semi_naive=False`` re-fires every rule over the full extent each
     round (the classic reference path); ``fuse=False`` evaluates every rule
@@ -342,7 +355,7 @@ def run_fixpoint(
     # overhead on tail rounds. Size-first collapses tiny shuffles to one
     # partition while leaving genuinely large rounds wide.
     loop_conf = {
-        "spark.sql.adaptive.coalescePartitions.parallelismFirst": "false",
+        _PARALLELISM_FIRST: "false",
         # AQE stays ON (measured: disabling it raised a 100k fixpoint from
         # 63s to 85s at local[8] — the runtime partition coalescing is worth
         # more than the re-planning latency it costs)
@@ -457,14 +470,9 @@ def _run_fixpoint_inner(
         log = [{"stratum": "kernel", "declined": "reference leg"}]
     positive = [r for r in rules if not r.negated]
     naf_rules = [r for r in rules if r.negated]
-    # [r6] chain-inheritance factoring (split_inherit docstring): the
-    # factored rules leave the per-round machinery entirely and are applied
-    # as complete closure images at positive quiescence. Default ON
-    # (measured: collapses the 56-round / 496 s sf1.0 e2e fixpoint tail);
-    # ZELPH_INHERIT_DOUBLING=0 restores the plain loop.
-    inherit_specs: list[InheritSpec] = []
-    if os.environ.get("ZELPH_INHERIT_DOUBLING", "1") == "1":
-        positive, inherit_specs = split_inherit(positive)
+    # chain-inheritance rules leave the per-round machinery and land as
+    # complete closure images at positive quiescence (split_inherit)
+    positive, inherit_specs = split_inherit(positive)
     groups = fuse_rules(positive) if fuse else None
     per_rule = groups.leftover if groups is not None else positive
     # [r6] variable-predicate domain guards (_var_pred_guards docstring):
@@ -592,16 +600,13 @@ def _run_fixpoint_inner(
     iterations = 0
     total_new = 0
     present = _distinct_preds(base)  # O2 extent restriction, kept current
-    # Inheritance-injection bookkeeping: a spec re-injects when its s slice
-    # changed (closure invalid -> FULL re-image) or when OTHER rules landed
-    # new p facts since its last injection (incremental image over exactly
-    # those delta files). An injection's own output is inherit-closed, so it
-    # never re-triggers the spec — unless another spec shares the same p
-    # (cross-composition needs the ping-pong).
-    inherit_clo: dict = {}  # s -> checkpointed s+ closure, reused until s changes
+    # Inheritance-injection bookkeeping: a spec re-injects in FULL when its
+    # s slice changed, or incrementally over the delta files that landed
+    # new p facts since its last injection. Its own injection delta
+    # (inherit_own) is the one delta it skips.
     inherit_full_needed = {sp: True for sp in inherit_specs}
     inherit_pending: dict = {sp: [] for sp in inherit_specs}
-    just_injected: set = set()
+    inherit_own: dict = {}
     if guard_pairs:
         _guard_update(base.agg(*_guard_metrics()).collect()[0])
 
@@ -622,139 +627,62 @@ def _run_fixpoint_inner(
         _t0 = time.time()
         if n_delta == 0:
             # positive quiescence -> pending chain-inheritance images first
-            # (split_inherit): complete s+ ⨝ p-facts in ONE injected delta
-            # instead of one s-hop per round. A non-empty injection re-opens
-            # the positive stratum exactly like a NAF delta.
+            # (split_inherit), one closure_image per chain predicate s. A
+            # non-empty injection re-opens the positive stratum.
             todo = [
                 sp for sp in inherit_specs
                 if (inherit_full_needed[sp] or inherit_pending[sp])
                 and sp.p in present and sp.s in present
             ]
             if todo:
-                from ..closure import transitive_closure
-
                 _ti = time.time()
-                clo_sec = 0.0
-                cands = []
-                todo_full = [inherit_full_needed[sp] for sp in todo]
-                # when several FULL specs share one s-predicate, fusing
-                # would recompute the s+ closure once per spec; the cached
-                # transitive_closure path amortizes it across them instead
-                _full_s = [sp.s for sp in todo if inherit_full_needed[sp]]
-                _shared_s = {s for s in _full_s if _full_s.count(s) > 1}
+                facts_by_s: dict = {}
+                specs = []
                 for sp in todo:
-                    clo = inherit_clo.get(sp.s)
-                    if (
-                        clo is None
-                        and inherit_full_needed[sp]
-                        and sp.s not in _shared_s
-                    ):
-                        # [r6] FULL injection with no cached closure: the
-                        # fused closure_image computes s+ ⨝ p inside one
-                        # task without materializing the multi-million-row
-                        # s+ (or falls back to the closure+join plan past
-                        # its bounds). inherit_clo stays unpopulated — a
-                        # later incremental injection for this spec
-                        # computes the closure then (rare: only shared-p
-                        # ping-pong or new s facts reach that path).
-                        from ..closure import closure_image
-
-                        _pf = (
-                            "spark.sql.adaptive.coalescePartitions."
-                            "parallelismFirst"
-                        )
-                        spark.conf.set(_pf, "true")
-                        _tc = time.time()
-                        try:
-                            img = closure_image(
-                                full.filter(
-                                    F.col("pred") == F.lit(sp.s)
-                                ).select("subj", "obj"),
-                                full.filter(
-                                    F.col("pred") == F.lit(sp.p)
-                                ).select("subj", "obj"),
-                            )
-                        finally:
-                            spark.conf.set(_pf, "false")
-                        clo_sec += time.time() - _tc
-                        cands.append(
-                            img.select(
-                                "subj", F.lit(sp.p).alias("pred"), "obj"
-                            )
-                        )
-                        inherit_full_needed[sp] = False
-                        inherit_pending[sp] = []
-                        continue
-                    if clo is None:
-                        # the loop's size-first AQE coalescing (right for the
-                        # tiny tail-round shuffles) starves the closure's
-                        # multi-million-row self-joins of parallelism —
-                        # measured 59.7 s vs 21.2 s standalone on the same
-                        # 87k-edge slice; restore parallelism-first for the
-                        # closure computation only
-                        _pf = "spark.sql.adaptive.coalescePartitions.parallelismFirst"
-                        spark.conf.set(_pf, "true")
-                        _tc = time.time()
-                        try:
-                            clo = transitive_closure(
-                                full.filter(
-                                    F.col("pred") == F.lit(sp.s)
-                                ).select("subj", "obj")
-                            )
-                        finally:
-                            spark.conf.set(_pf, "false")
-                        clo_sec += time.time() - _tc
-                        inherit_clo[sp.s] = clo
+                    # the whole p slice when s changed, else only the p
+                    # facts landed since this spec's last injection
                     if inherit_full_needed[sp]:
-                        src = full.filter(F.col("pred") == F.lit(sp.p))
+                        src, kind = full, "full"
                     else:
-                        # incremental: only p facts landed since this spec's
-                        # last injection can produce unseen image rows
-                        src = spark.read.parquet(
-                            *inherit_pending[sp]
-                        ).filter(F.col("pred") == F.lit(sp.p))
-                    # null-keyed fact rows are ignored — keeps this branch
-                    # consistent with closure_image (engine facts are
-                    # non-null by construction, so this filters nothing)
-                    src = src.where(
-                        F.col("subj").isNotNull() & F.col("obj").isNotNull()
-                    ).select(
-                        F.col("subj").alias("_k"), F.col("obj").alias("obj")
+                        src, kind = spark.read.parquet(*inherit_pending[sp]), "incr"
+                    facts_by_s.setdefault(sp.s, []).append(
+                        src.filter(F.col("pred") == F.lit(sp.p))
                     )
-                    cands.append(
-                        clo.select("subj", F.col("obj").alias("_k"))
-                        .join(src, "_k")
-                        .select(
-                            "subj", F.lit(sp.p).alias("pred"), "obj"
-                        )
-                    )
+                    specs.append(f"{sp.rule_id}:{kind}")
                     inherit_full_needed[sp] = False
                     inherit_pending[sp] = []
-                # an injection's output is inherit-closed for its OWN spec,
-                # so the spec skips its own delta — EXCEPT when another spec
-                # with the same p was co-injected this round: each needs the
-                # other's new p facts, so shared-p specs keep ping-ponging
-                # through pending until both quiesce
-                _shared_p = {
-                    p for p in (sp.p for sp in todo)
-                    if sum(1 for sp in todo if sp.p == p) > 1
-                }
-                just_injected = {sp for sp in todo if sp.p not in _shared_p}
+                # the loop's size-first AQE coalescing starves the closure's
+                # multi-million-row self-joins of parallelism (measured
+                # 59.7 s vs 21.2 s standalone on the same 87k-edge slice)
+                spark.conf.set(_PARALLELISM_FIRST, "true")
+                try:
+                    cands = [
+                        closure_image(
+                            full.filter(F.col("pred") == F.lit(s))
+                            .select("subj", "obj"),
+                            _union_all(facts),
+                        )
+                        for s, facts in facts_by_s.items()
+                    ]
+                finally:
+                    spark.conf.set(_PARALLELISM_FIRST, "false")
+                clo_sec = time.time() - _ti
                 inh_new, ipath, n_inh, inh_preds = materialize_new(
                     _union_all(cands), f"inherit_{iterations}"
                 )
-                # timing under "inject_sec", NOT "sec": the injection time is
-                # already inside the next positive entry's round timer, and
-                # bench.py's fixpoint_secs sums "sec" over iter entries —
-                # a "sec" here would double-count
+                # an injection's output is inherit-closed for its OWN spec,
+                # so the spec skips exactly this delta — unless another spec
+                # with the same p was co-injected: each needs the other's new
+                # p facts, so shared-p specs ping-pong through pending
+                for sp in todo:
+                    if [t.p for t in todo].count(sp.p) == 1:
+                        inherit_own[sp] = ipath
+                # "inject_sec", not "sec": bench.py sums "sec" over iter
+                # entries, and the next positive entry's timer holds this
                 log.append(
                     {"iter": iterations, "stratum": "inherit", "new": n_inh,
                      "inject_sec": round(time.time() - _ti, 2),
-                     "clo_sec": round(clo_sec, 2),
-                     "specs": [
-                         f"{sp.rule_id}:{'full' if fn else 'incr'}"
-                         for sp, fn in zip(todo, todo_full)
-                     ]}
+                     "clo_sec": round(clo_sec, 2), "specs": specs}
                 )
                 if n_inh:
                     delta, dpath, n_delta, delta_preds = inh_new, ipath, n_inh, inh_preds
@@ -781,12 +709,10 @@ def _run_fixpoint_inner(
         full = full_df()
         present |= delta_preds
         for sp in inherit_specs:
-            if sp.p in delta_preds and sp not in just_injected:
+            if sp.p in delta_preds and inherit_own.get(sp) != dpath:
                 inherit_pending[sp].append(dpath)
             if sp.s in delta_preds:
-                inherit_clo.pop(sp.s, None)
                 inherit_full_needed[sp] = True
-        just_injected = set()
         _tp = time.time()
         if semi_naive:
             # broadcast the delta side when it is small: every rule-position
