@@ -1,5 +1,6 @@
-"""Fused rule evaluation: must be observationally identical to the
-per-rule path (differential, like naive-vs-semi-naive)."""
+"""Fused rule evaluation: the shape classifier, and the fused deductions
+and contradictions of the distributed loop against the independent Datalog
+oracle (``datalog_oracle``)."""
 
 from __future__ import annotations
 
@@ -9,7 +10,7 @@ import pytest
 import datalog_oracle as oracle
 from zelph_spark import extract, rules as Rz, single_task
 from zelph_spark.reasoning import run_fixpoint
-from zelph_spark.reasoning.fused import fuse_rules
+from zelph_spark.reasoning.fused import fuse_contradiction_rules, fuse_rules
 
 
 @pytest.fixture(autouse=True)
@@ -44,12 +45,8 @@ def test_fused_equals_unfused_on_fixture(spark, fixture_docs_df):
             columns=["subj", "pred", "obj"],
         )
     )
-    fused = run_fixpoint(base, Rz.wikidata_rules(), fuse=True)
-    plain = run_fixpoint(base, Rz.wikidata_rules(), fuse=False)
+    fused = run_fixpoint(base, Rz.wikidata_rules())
     fset = {(r.subj, r.pred, r.obj) for r in fused.edges.collect()}
-    pset = {(r.subj, r.pred, r.obj) for r in plain.edges.collect()}
-    assert fset == pset
-    # and both equal the independent oracle
     want = oracle.stratified_fixpoint(
         {(r.subj, r.pred, r.obj) for r in base.collect()}, Rz.wikidata_rules()
     )
@@ -73,7 +70,7 @@ def test_fused_with_constant_consequence_and_filters(spark):
     df = spark.createDataFrame(
         pd.DataFrame(facts, columns=["subj", "pred", "obj"])
     )
-    res = run_fixpoint(df, rules, fuse=True)
+    res = run_fixpoint(df, rules)
     got = {(r.subj, r.pred, r.obj) for r in res.edges.collect()}
     want = oracle.stratified_fixpoint(set(facts), rules)
     assert got == want
@@ -84,8 +81,9 @@ def test_fused_with_constant_consequence_and_filters(spark):
 
 
 def test_fused_contradictions_equal_per_rule(spark, fixture_docs_df):
-    """Fused contradiction sweep == per-rule sweep == oracle on the
-    saturated fixture graph (rule_id + bindings)."""
+    """Fused contradiction sweep == oracle on the saturated fixture graph
+    (rule_id + bindings); the ruleset fuses a pair shape and leaves the
+    rest per-rule."""
     from zelph_spark.reasoning import evaluate_contradictions
 
     t = extract.triples(extract.extract_all(fixture_docs_df))
@@ -98,11 +96,10 @@ def test_fused_contradictions_equal_per_rule(spark, fixture_docs_df):
     )
     sat = run_fixpoint(base, Rz.wikidata_rules()).edges
     crules = Rz.wikidata_contradiction_rules()
-    fused = evaluate_contradictions(sat, crules, fuse=True)
-    plain = evaluate_contradictions(sat, crules, fuse=False)
+    groups = fuse_contradiction_rules(crules)
+    assert groups.pairs and groups.leftover
+    fused = evaluate_contradictions(sat, crules)
     fs = {(r.rule_id, frozenset(r.bindings.items())) for r in fused.collect()}
-    ps = {(r.rule_id, frozenset(r.bindings.items())) for r in plain.collect()}
-    assert fs == ps
     sat_set = {(r.subj, r.pred, r.obj) for r in sat.collect()}
     want = oracle.contradiction_bindings(sat_set, crules)
     assert fs == want

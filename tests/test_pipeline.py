@@ -132,6 +132,13 @@ def test_pipeline_constraint_rules_swept(spark, fixture_docs_df):
     assert res.counters["stage_secs"]  # per-stage metrics recorded
 
 
+def _contradiction_set(res):
+    return {
+        (r.rule_id, frozenset(r.bindings.items()))
+        for r in res.contradictions.collect()
+    }
+
+
 def test_pipeline_resume_skips_completed_stages(spark, fixture_docs_df, tmp_path):
     """Kill/resume: after a full run, re-running reuses every stage
     checkpoint and produces identical saturated output."""
@@ -139,6 +146,8 @@ def test_pipeline_resume_skips_completed_stages(spark, fixture_docs_df, tmp_path
     dic = spark.createDataFrame(datagen.fixture_qid_dictionary())
     r1 = run_pipeline(spark, fixture_docs_df, str(root), dictionary=dic)
     s1 = {(r.subj, r.pred, r.obj) for r in r1.saturated.collect()}
+    c1 = _contradiction_set(r1)
+    assert c1
     # simulate a killed run that completed only extract+links: drop the rest
     from zelph_spark.checkpoint import StageStore
 
@@ -153,3 +162,11 @@ def test_pipeline_resume_skips_completed_stages(spark, fixture_docs_df, tmp_path
     assert s1 == s2
     man = store.manifest("saturated")
     assert man["rows"] == len(s2)
+    assert "resumed_reasoning" not in r2.counters
+    # every stage complete, saturated included: reasoning resumes from the
+    # stored fixpoint, and its contradiction sweep matches the first run's
+    r3 = run_pipeline(spark, empty_docs, str(root), dictionary=dic)
+    assert r3.counters["resumed_reasoning"]
+    assert "fixpoint_log" not in r3.counters
+    assert {(r.subj, r.pred, r.obj) for r in r3.saturated.collect()} == s1
+    assert _contradiction_set(r3) == c1

@@ -4,6 +4,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+import datalog_oracle as oracle
 from zelph_spark import datagen, statements
 from zelph_spark.rules import Pattern
 
@@ -81,6 +82,7 @@ def test_constraint_rules(spark, tmp_path):
     assert kinds == {"conflicts-with", "none-of"}
     # generated rules actually fire through the engine
     from zelph_spark.reasoning import evaluate_contradictions
+    from zelph_spark.reasoning.fused import fuse_contradiction_rules
     import pandas as pd
 
     edges = spark.createDataFrame(
@@ -92,6 +94,14 @@ def test_constraint_rules(spark, tmp_path):
     cons = evaluate_contradictions(edges, rules)
     fired = {r.rule_id for r in cons.collect()}
     assert fired == {"c-conflict-P9000-P31-Q5", "c-noneof-P9001-Q902"}
+    # both fused shapes bind like the oracle: the none-of rule is a single,
+    # the conflicts-with rule a pair
+    groups = fuse_contradiction_rules(rules)
+    assert no.rule_id in {s["rule_id"] for s in groups.single}
+    assert cw.rule_id in {s["rule_id"] for v in groups.pairs.values() for s in v}
+    got = {(r.rule_id, frozenset(r.bindings.items())) for r in cons.collect()}
+    facts = {(r.subj, r.pred, r.obj) for r in edges.collect()}
+    assert got == oracle.contradiction_bindings(facts, rules)
 
 
 def _disjointness_fixture_lines():

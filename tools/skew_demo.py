@@ -99,8 +99,8 @@ def run_round(edges, groups, salt_buckets: int | None = None):
     the >2M-row path).  With ``salt_buckets`` the hot side is salted and
     the small side exploded, the classic manual skew fix."""
     if salt_buckets is None:
-        # classic full pass: ONE fire_pairs(full, full) branch — the same
-        # join shape a >2M-row semi-naive round takes (fixpoint.py:403-408)
+        # classic full pass: ONE pair-shape join over (full, full) — the
+        # same join a >2M-row semi-naive round takes (no broadcast delta)
         outs = fire_fused(groups, edges)
         assert len(outs) == 1
         out = outs[0]

@@ -30,7 +30,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from . import canon, extract, graph, link, rules as Rz
 from .checkpoint import StageStore, run_stage
-from .reasoning import evaluate_contradictions, run_fixpoint
+from .reasoning import contradiction_sweep, run_fixpoint
 
 
 @dataclass
@@ -198,15 +198,9 @@ def run_pipeline(
             deduced = saturated_ids.join(
                 id_edges, on=["subj", "pred", "obj"], how="left_anti"
             )
-            contradictions = evaluate_contradictions(saturated_ids, long_contras)
-            if known_wrong is not None:
-                from .reasoning.fixpoint import deduced_wrong_contradictions
-
-                contradictions = contradictions.unionByName(
-                    deduced_wrong_contradictions(
-                        saturated_ids, long_rules, known_wrong
-                    )
-                )
+            contradictions = contradiction_sweep(
+                saturated_ids, long_rules, long_contras, known_wrong
+            )
             counters["resumed_reasoning"] = True
         else:
             fp = run_fixpoint(

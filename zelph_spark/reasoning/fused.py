@@ -8,11 +8,23 @@ make the RULES data instead of plan structure: group rules by *shape* and
 evaluate each shape once, joining the edge table against a broadcast
 rules table.
 
+Like zelph, which matches a rule body once and then either inserts the
+consequence or records a ``!`` contradiction (``reasoning_deduce.cpp``),
+deductions and contradictions share one matcher here. :func:`_shape`
+classifies a rule body, :func:`_match` builds the shape's join, and the
+two callers differ only in what they add to the rules table and project
+from the join:
+
+- :func:`fire_fused` (deductions): consequence selectors, projected to
+  ``(subj, pred, obj)`` with :func:`_out_col`;
+- :func:`fire_contradictions_fused` (``=> !`` rules): the variable names,
+  projected to ``(rule_id, bindings)`` with :func:`_bindings_map`.
+
 Fusable shapes (covers every wikidata.zph deduction rule except the three
 variable-predicate meta-rules, which keep the per-rule path):
 
-- ``single``:  (t1s, pa, t1o) => out            — one broadcast join
-- ``pair(j1,j2)``: (t1s, pa, t1o), (t2s, pb, t2o) => out, where the two
+- ``single``:  (t1s, pa, t1o)                   — one broadcast join
+- ``pair(j1,j2)``: (t1s, pa, t1o), (t2s, pb, t2o), where the two
   conditions share exactly one variable sitting at position j1 of c1 and
   j2 of c2 (j ∈ {subj, obj}) — four shapes
 
@@ -34,6 +46,8 @@ from ..rules import Rule, is_var
 # consequence-term selectors
 _SEL_C1S, _SEL_C1O, _SEL_C2S, _SEL_C2O, _SEL_CONST = "1S", "1O", "2S", "2O", "C"
 
+_SINGLE = "single"
+
 
 @dataclass
 class FusedGroups:
@@ -42,117 +56,124 @@ class FusedGroups:
     leftover: list[Rule]
 
 
-def _sel_for(term, c1, c2=None) -> tuple[str, str | None]:
-    """Map a consequence term to a selector over the condition positions."""
+def _const(term):
+    return None if is_var(term) else term
+
+
+def _name(term):
+    return term[1:] if is_var(term) else None
+
+
+def _shape(rule: Rule):
+    """``(shape, spec)`` for a fusable rule body, else None (per-rule path).
+    ``shape`` is ``_SINGLE`` or ``(j1, j2)``; ``spec`` holds the rule id and
+    the condition columns ``pa``/``c1s``/``c1o`` (+ ``pb``/``c2s``/``c2o``).
+    Negation, inequalities, variable predicates, a repeated variable inside
+    one condition and 3+ conditions keep the per-rule path."""
+    conds = rule.conditions
+    if (
+        rule.negated or rule.unequals or len(conds) not in (1, 2)
+        or any(
+            is_var(c.pred) or (is_var(c.subj) and c.subj == c.obj)
+            for c in conds
+        )
+    ):
+        return None
+    c1 = conds[0]
+    spec = {"rule_id": rule.rule_id, "pa": c1.pred,
+            "c1s": _const(c1.subj), "c1o": _const(c1.obj)}
+    if len(conds) == 1:
+        return _SINGLE, spec
+    c2 = conds[1]
+    shared = {t for t in (c1.subj, c1.obj) if is_var(t)} & {
+        t for t in (c2.subj, c2.obj) if is_var(t)
+    }
+    if len(shared) != 1:
+        return None
+    (sv,) = shared
+    spec.update(pb=c2.pred, c2s=_const(c2.subj), c2o=_const(c2.obj))
+    return ("subj" if c1.subj == sv else "obj",
+            "subj" if c2.subj == sv else "obj"), spec
+
+
+def _group(rules: list[Rule], extra) -> FusedGroups:
+    """Split a ruleset by :func:`_shape`; ``extra(rule, shape)`` returns the
+    caller's own rules-table columns, or None to send the rule per-rule."""
+    groups = FusedGroups(single=[], pairs={}, leftover=[])
+    for r in rules:
+        shaped = _shape(r)
+        cols = shaped and extra(r, shaped[0])
+        if not cols:
+            groups.leftover.append(r)
+            continue
+        shape, spec = shaped
+        spec.update(cols)
+        if shape == _SINGLE:
+            groups.single.append(spec)
+        else:
+            groups.pairs.setdefault(shape, []).append(spec)
+    return groups
+
+
+def _sel_for(term, c1, c2=None) -> tuple[str, str | None] | None:
+    """Map a consequence term to a selector over the condition positions
+    (None: the term is bound by no condition)."""
     if not is_var(term):
         return _SEL_CONST, term
-    if c1 is not None:
-        if term == c1.subj:
-            return _SEL_C1S, None
-        if term == c1.obj:
-            return _SEL_C1O, None
-    if c2 is not None:
-        if term == c2.subj:
-            return _SEL_C2S, None
-        if term == c2.obj:
-            return _SEL_C2O, None
-    raise ValueError(f"unbound consequence term {term}")
+    for cond, (s, o) in ((c1, (_SEL_C1S, _SEL_C1O)), (c2, (_SEL_C2S, _SEL_C2O))):
+        if cond is not None and term == cond.subj:
+            return s, None
+        if cond is not None and term == cond.obj:
+            return o, None
+    return None
+
+
+def _consequence_cols(r: Rule, shape) -> dict | None:
+    if (
+        r.is_contradiction or r.extra_consequences or r.fresh_vars
+        or is_var(r.consequence.pred)
+    ):
+        # multi-consequence / fresh-variable rules (R6) need the per-rule
+        # path: fresh-id minting + existence guard
+        return None
+    c = r.consequence
+    subj, obj = (_sel_for(t, *r.conditions) for t in (c.subj, c.obj))
+    if subj is None or obj is None:
+        return None
+    return {"outp": c.pred, "outs": subj[0], "outs_c": subj[1],
+            "outo": obj[0], "outo_c": obj[1]}
+
+
+def _binding_names(r: Rule, shape) -> dict | None:
+    """Variable names of the condition positions; constants, and c2's copy
+    of the shared variable, carry NULL so bindings map keys stay unique."""
+    if not r.is_contradiction:
+        return None
+    c1 = r.conditions[0]
+    names = {"n1s": _name(c1.subj), "n1o": _name(c1.obj)}
+    if shape != _SINGLE:
+        c2 = r.conditions[1]
+        sv = c1.subj if shape[0] == "subj" else c1.obj
+        names["n2s"] = _name(c2.subj) if c2.subj != sv else None
+        names["n2o"] = _name(c2.obj) if c2.obj != sv else None
+    return names
 
 
 def fuse_rules(rules: list[Rule]) -> FusedGroups:
-    """Split a ruleset into fused groups + leftover (per-rule path)."""
-    single: list[dict] = []
-    pairs: dict[tuple[str, str], list[dict]] = {}
-    leftover: list[Rule] = []
-    for r in rules:
-        if r.negated or r.unequals or r.is_contradiction:
-            leftover.append(r)
-            continue
-        if r.extra_consequences or r.fresh_vars:
-            # multi-consequence / fresh-variable rules (R6) need the
-            # per-rule path: fresh-id minting + existence guard
-            leftover.append(r)
-            continue
-        conds = r.conditions
-        if any(is_var(c.pred) for c in conds):
-            leftover.append(r)
-            continue
-        try:
-            if len(conds) == 1:
-                c1 = conds[0]
-                if is_var(r.consequence.pred) or (
-                    is_var(c1.subj) and c1.subj == c1.obj
-                ):
-                    leftover.append(r)
-                    continue
-                ss, sc = _sel_for(r.consequence.subj, c1)
-                os_, oc = _sel_for(r.consequence.obj, c1)
-                single.append({
-                    "rule_id": r.rule_id,
-                    "pa": c1.pred,
-                    "c1s": None if is_var(c1.subj) else c1.subj,
-                    "c1o": None if is_var(c1.obj) else c1.obj,
-                    "outp": r.consequence.pred,
-                    "outs": ss, "outs_c": sc, "outo": os_, "outo_c": oc,
-                })
-                continue
-            if len(conds) == 2:
-                c1, c2 = conds
-                v1 = {t for t in (c1.subj, c1.obj) if is_var(t)}
-                v2 = {t for t in (c2.subj, c2.obj) if is_var(t)}
-                shared = v1 & v2
-                if len(shared) != 1 or is_var(r.consequence.pred):
-                    leftover.append(r)
-                    continue
-                sv = next(iter(shared))
-                # repeated var inside one condition -> per-rule path
-                if c1.subj == c1.obj or c2.subj == c2.obj:
-                    leftover.append(r)
-                    continue
-                j1 = "subj" if c1.subj == sv else "obj"
-                j2 = "subj" if c2.subj == sv else "obj"
-                ss, sc = _sel_for(r.consequence.subj, c1, c2)
-                os_, oc = _sel_for(r.consequence.obj, c1, c2)
-                pairs.setdefault((j1, j2), []).append({
-                    "rule_id": r.rule_id,
-                    "pa": c1.pred, "pb": c2.pred,
-                    "c1s": None if is_var(c1.subj) else c1.subj,
-                    "c1o": None if is_var(c1.obj) else c1.obj,
-                    "c2s": None if is_var(c2.subj) else c2.subj,
-                    "c2o": None if is_var(c2.obj) else c2.obj,
-                    "outp": r.consequence.pred,
-                    "outs": ss, "outs_c": sc, "outo": os_, "outo_c": oc,
-                })
-                continue
-            leftover.append(r)
-        except ValueError:
-            leftover.append(r)
-    return FusedGroups(single=single, pairs=pairs, leftover=leftover)
+    """Split a deduction ruleset into fused groups + leftover (per-rule)."""
+    return _group(rules, _consequence_cols)
 
 
-_SINGLE_SCHEMA = (
-    "rule_id string, pa string, c1s string, c1o string, outp string, "
-    "outs string, outs_c string, outo string, outo_c string"
-)
-_PAIR_SCHEMA = (
-    "rule_id string, pa string, pb string, c1s string, c1o string, "
-    "c2s string, c2o string, outp string, outs string, outs_c string, "
-    "outo string, outo_c string"
-)
+def fuse_contradiction_rules(rules: list[Rule]) -> FusedGroups:
+    """1- and 2-condition constant-predicate contradiction rules fuse;
+    everything else (3-condition patterns, guards, NAF) keeps the per-rule
+    path."""
+    return _group(rules, _binding_names)
 
 
-def _out_col(sel_col, const_col, c1s, c1o, c2s=None, c2o=None):
-    expr = (
-        F.when(F.col(sel_col) == _SEL_C1S, c1s)
-        .when(F.col(sel_col) == _SEL_C1O, c1o)
-    )
-    if c2s is not None:
-        expr = expr.when(F.col(sel_col) == _SEL_C2S, c2s).when(
-            F.col(sel_col) == _SEL_C2O, c2o
-        )
-    return expr.otherwise(F.col(const_col))
-
-
+# rules-table columns after the shape's condition columns (_cond_cols)
+_OUT_COLS = ["outp", "outs", "outs_c", "outo", "outo_c"]
+_NAME_COLS = ["n1s", "n1o", "n2s", "n2o"]
 _VALUE_COLS = ("pa", "pb", "c1s", "c1o", "c2s", "c2o", "outp", "outs_c", "outo_c")
 
 
@@ -195,76 +216,85 @@ def _v(x):
     return None if x is None else str(x)
 
 
-def fire_single(edges: DataFrame, specs: list[dict]) -> DataFrame | None:
-    """All single-condition rules in one broadcast join."""
-    if not specs:
-        return None
-    rt = _rules_table(
-        edges,
-        [(s["rule_id"], _v(s["pa"]), _v(s["c1s"]), _v(s["c1o"]), _v(s["outp"]),
-          s["outs"], _v(s["outs_c"]), s["outo"], _v(s["outo_c"])) for s in specs],
-        _SINGLE_SCHEMA,
-    )
-    e = edges.select(
-        F.col("subj").alias("_s1"), F.col("pred").alias("_p1"),
-        F.col("obj").alias("_o1"),
-    )
-    j = e.join(rt, e["_p1"] == rt["pa"]).filter(
-        (F.col("c1s").isNull() | (F.col("_s1") == F.col("c1s")))
-        & (F.col("c1o").isNull() | (F.col("_o1") == F.col("c1o")))
-    )
-    return j.select(
-        _out_col("outs", "outs_c", F.col("_s1"), F.col("_o1")).alias("subj"),
-        F.col("outp").alias("pred"),
-        _out_col("outo", "outo_c", F.col("_s1"), F.col("_o1")).alias("obj"),
+def _positions(shape) -> list[str]:
+    """The join's condition-position columns, in selector order."""
+    return ["_s1", "_o1"] + ([] if shape == _SINGLE else ["_s2", "_o2"])
+
+
+def _aliased(edges: DataFrame, i: int) -> DataFrame:
+    return edges.select(
+        F.col("subj").alias(f"_s{i}"), F.col("pred").alias(f"_p{i}"),
+        F.col("obj").alias(f"_o{i}"),
     )
 
 
-def fire_pairs(
-    edges1: DataFrame,
-    edges2: DataFrame,
-    shape: tuple[str, str],
-    specs: list[dict],
-) -> DataFrame | None:
-    """All rules of one pair shape in two joins. ``edges1``/``edges2`` let
-    the semi-naive driver bind either side to the delta."""
-    if not specs:
-        return None
-    j1, j2 = shape
+def _consts_ok(i: int):
+    """Condition i's constant subject/object filters (NULL = variable)."""
+    return (
+        (F.col(f"c{i}s").isNull() | (F.col(f"_s{i}") == F.col(f"c{i}s")))
+        & (F.col(f"c{i}o").isNull() | (F.col(f"_o{i}") == F.col(f"c{i}o")))
+    )
+
+
+def _match(
+    edges1: DataFrame, edges2: DataFrame, shape, specs: list[dict],
+    extra_cols: list[str],
+) -> DataFrame:
+    """The one join of a shape: condition 1 over ``edges1`` ⋈ the broadcast
+    rules table (condition + ``extra_cols`` columns), then, for a pair,
+    ⋈ condition 2 over ``edges2`` on (pb, shared key). ``edges1``/
+    ``edges2`` let the semi-naive driver bind either side to the delta."""
+    cols = _cond_cols(shape) + extra_cols
     rt = _rules_table(
         edges1,
-        [(s["rule_id"], _v(s["pa"]), _v(s["pb"]), _v(s["c1s"]), _v(s["c1o"]),
-          _v(s["c2s"]), _v(s["c2o"]), _v(s["outp"]), s["outs"], _v(s["outs_c"]),
-          s["outo"], _v(s["outo_c"])) for s in specs],
-        _PAIR_SCHEMA,
+        [tuple(_v(s[c]) for c in cols) for s in specs],
+        ", ".join(f"{c} string" for c in cols),
     )
-    e1 = edges1.select(
-        F.col("subj").alias("_s1"), F.col("pred").alias("_p1"),
-        F.col("obj").alias("_o1"),
-    )
-    e2 = edges2.select(
-        F.col("subj").alias("_s2"), F.col("pred").alias("_p2"),
-        F.col("obj").alias("_o2"),
-    )
-    left = e1.join(rt, e1["_p1"] == rt["pa"]).filter(
-        (F.col("c1s").isNull() | (F.col("_s1") == F.col("c1s")))
-        & (F.col("c1o").isNull() | (F.col("_o1") == F.col("c1o")))
-    )
+    e1 = _aliased(edges1, 1)
+    out = e1.join(rt, e1["_p1"] == rt["pa"]).filter(_consts_ok(1))
+    if shape == _SINGLE:
+        return out
+    j1, j2 = shape
     key1 = F.col("_s1") if j1 == "subj" else F.col("_o1")
     key2 = F.col("_s2") if j2 == "subj" else F.col("_o2")
-    out = left.join(
-        e2, (F.col("pb") == F.col("_p2")) & (key1 == key2)
-    ).filter(
-        (F.col("c2s").isNull() | (F.col("_s2") == F.col("c2s")))
-        & (F.col("c2o").isNull() | (F.col("_o2") == F.col("c2o")))
+    return out.join(
+        _aliased(edges2, 2), (F.col("pb") == F.col("_p2")) & (key1 == key2)
+    ).filter(_consts_ok(2))
+
+
+def _cond_cols(shape) -> list[str]:
+    if shape == _SINGLE:
+        return ["rule_id", "pa", "c1s", "c1o"]
+    return ["rule_id", "pa", "pb", "c1s", "c1o", "c2s", "c2o"]
+
+
+def _keep(specs, shape, present_preds, delta_key=None, delta_preds=None):
+    """Rules-table prunes: extent restriction (O2 — every condition
+    predicate must have facts at all) and the semi-naive predicate index
+    (the delta-bound condition's predicate must occur in the delta)."""
+    out = specs
+    if present_preds is not None:
+        keys = ["pa"] if shape == _SINGLE else ["pa", "pb"]
+        out = [s for s in out if all(s[k] in present_preds for k in keys)]
+    if delta_key is not None and delta_preds is not None:
+        out = [s for s in out if s[delta_key] in delta_preds]
+    return out
+
+
+def _shapes(groups: FusedGroups):
+    return [(_SINGLE, groups.single), *groups.pairs.items()]
+
+
+def _out_col(sel_col, const_col, c1s, c1o, c2s=None, c2o=None):
+    expr = (
+        F.when(F.col(sel_col) == _SEL_C1S, c1s)
+        .when(F.col(sel_col) == _SEL_C1O, c1o)
     )
-    return out.select(
-        _out_col("outs", "outs_c", F.col("_s1"), F.col("_o1"),
-                 F.col("_s2"), F.col("_o2")).alias("subj"),
-        F.col("outp").alias("pred"),
-        _out_col("outo", "outo_c", F.col("_s1"), F.col("_o1"),
-                 F.col("_s2"), F.col("_o2")).alias("obj"),
-    )
+    if c2s is not None:
+        expr = expr.when(F.col(sel_col) == _SEL_C2S, c2s).when(
+            F.col(sel_col) == _SEL_C2O, c2o
+        )
+    return expr.otherwise(F.col(const_col))
 
 
 def fire_fused(
@@ -274,19 +304,19 @@ def fire_fused(
     delta_preds: set | None = None,
     present_preds: set | None = None,
 ) -> list[DataFrame]:
-    """One round of the fused groups. ``delta=None`` => classic pass; else
-    one branch per delta position (single: 1; pair: 2). Two rule-table
-    prunes: extent restriction (O2 — every condition predicate must have
-    facts at all) and the semi-naive predicate index (the delta-bound
-    condition's predicate must occur in the delta)."""
+    """One round of the fused deduction groups -> (subj, pred, obj) frames.
+    ``delta=None`` => classic pass; else one branch per delta position
+    (single: 1; pair: 2), each pruned by :func:`_keep`."""
 
-    def keep(specs, extent_keys, delta_key=None):
-        out = specs
-        if present_preds is not None:
-            out = [s for s in out if all(s[k] in present_preds for k in extent_keys)]
-        if delta_key is not None and delta_preds is not None:
-            out = [s for s in out if s[delta_key] in delta_preds]
-        return out
+    def fire(e1, e2, shape, specs):
+        if not specs:
+            return None
+        pos = [F.col(c) for c in _positions(shape)]
+        return _match(e1, e2, shape, specs, _OUT_COLS).select(
+            _out_col("outs", "outs_c", *pos).alias("subj"),
+            F.col("outp").alias("pred"),
+            _out_col("outo", "outo_c", *pos).alias("obj"),
+        )
 
     # Pairs fire per (j1, j2) shape. Packing all four shapes into one join
     # measured slower (it carries 2x rows through a wider key), and the
@@ -294,95 +324,16 @@ def fire_fused(
     # count either way: the rules table, not shape packing, is what keeps
     # thousand-rule sets cheap (A/B in BASELINE.md).
     outs = []
-    if delta is None:
-        outs.append(fire_single(full, keep(groups.single, ["pa"])))
-        for shape, specs in groups.pairs.items():
-            outs.append(
-                fire_pairs(full, full, shape, keep(specs, ["pa", "pb"]))
-            )
-    else:
-        outs.append(fire_single(delta, keep(groups.single, ["pa"], "pa")))
-        for shape, specs in groups.pairs.items():
-            outs.append(fire_pairs(
-                delta, full, shape, keep(specs, ["pa", "pb"], "pa")
-            ))
-            outs.append(fire_pairs(
-                full, delta, shape, keep(specs, ["pa", "pb"], "pb")
-            ))
+    for shape, specs in _shapes(groups):
+        if delta is None:
+            outs.append(fire(full, full, shape, _keep(specs, shape, present_preds)))
+            continue
+        outs.append(fire(delta, full, shape, _keep(
+            specs, shape, present_preds, "pa", delta_preds)))
+        if shape != _SINGLE:
+            outs.append(fire(full, delta, shape, _keep(
+                specs, shape, present_preds, "pb", delta_preds)))
     return [o for o in outs if o is not None]
-
-
-# ---------------------------------------------------------------------------
-# Fused contradiction sweep: rule_id + bindings instead of deduced triples.
-# Same shapes, but the projection rebuilds each rule's variable-name ->
-# value map (names ride in the rules table; constants and the duplicate
-# occurrence of the shared variable carry NULL names so map keys stay
-# unique).
-# ---------------------------------------------------------------------------
-
-_CON_SINGLE_SCHEMA = (
-    "rule_id string, pa string, c1s string, c1o string, "
-    "n1s string, n1o string"
-)
-_CON_PAIR_SCHEMA = (
-    "rule_id string, pa string, pb string, c1s string, c1o string, "
-    "c2s string, c2o string, n1s string, n1o string, n2s string, n2o string"
-)
-
-
-def fuse_contradiction_rules(rules: list[Rule]) -> FusedGroups:
-    """1- and 2-condition constant-predicate contradiction rules fuse;
-    everything else (3-condition patterns, guards, NAF) keeps the per-rule
-    path."""
-    single: list[dict] = []
-    pairs: dict[tuple[str, str], list[dict]] = {}
-    leftover: list[Rule] = []
-    for r in rules:
-        if not r.is_contradiction or r.negated or r.unequals:
-            leftover.append(r)
-            continue
-        conds = r.conditions
-        if any(is_var(c.pred) for c in conds) or any(
-            is_var(c.subj) and c.subj == c.obj for c in conds
-        ):
-            leftover.append(r)
-            continue
-        if len(conds) == 1:
-            c1 = conds[0]
-            single.append({
-                "rule_id": r.rule_id, "pa": c1.pred,
-                "c1s": None if is_var(c1.subj) else c1.subj,
-                "c1o": None if is_var(c1.obj) else c1.obj,
-                "n1s": c1.subj[1:] if is_var(c1.subj) else None,
-                "n1o": c1.obj[1:] if is_var(c1.obj) else None,
-            })
-        elif len(conds) == 2:
-            c1, c2 = conds
-            v1 = {t for t in (c1.subj, c1.obj) if is_var(t)}
-            v2 = {t for t in (c2.subj, c2.obj) if is_var(t)}
-            shared = v1 & v2
-            if len(shared) != 1:
-                leftover.append(r)
-                continue
-            sv = next(iter(shared))
-            j1 = "subj" if c1.subj == sv else "obj"
-            j2 = "subj" if c2.subj == sv else "obj"
-            # NULL out c2's copy of the shared variable name (dup map key)
-            n2s = c2.subj[1:] if is_var(c2.subj) and c2.subj != sv else None
-            n2o = c2.obj[1:] if is_var(c2.obj) and c2.obj != sv else None
-            pairs.setdefault((j1, j2), []).append({
-                "rule_id": r.rule_id, "pa": c1.pred, "pb": c2.pred,
-                "c1s": None if is_var(c1.subj) else c1.subj,
-                "c1o": None if is_var(c1.obj) else c1.obj,
-                "c2s": None if is_var(c2.subj) else c2.subj,
-                "c2o": None if is_var(c2.obj) else c2.obj,
-                "n1s": c1.subj[1:] if is_var(c1.subj) else None,
-                "n1o": c1.obj[1:] if is_var(c1.obj) else None,
-                "n2s": n2s, "n2o": n2o,
-            })
-        else:
-            leftover.append(r)
-    return FusedGroups(single=single, pairs=pairs, leftover=leftover)
 
 
 def _bindings_map(entries):
@@ -399,71 +350,17 @@ def fire_contradictions_fused(
     edges: DataFrame, groups: FusedGroups, present_preds: set | None = None
 ) -> list[DataFrame]:
     """Fused contradiction sweep -> [(rule_id, bindings)] frames."""
-    spark = edges.sparkSession
-
-    def keep(specs, keys):
-        if present_preds is None:
-            return specs
-        return [s for s in specs if all(s[k] in present_preds for k in keys)]
-
     outs = []
-    sing = keep(groups.single, ["pa"])
-    if sing:
-        rt = _rules_table(
-            edges,
-            [(s["rule_id"], _v(s["pa"]), _v(s["c1s"]), _v(s["c1o"]),
-              s["n1s"], s["n1o"]) for s in sing],
-            _CON_SINGLE_SCHEMA,
-        )
-        e = edges.select(
-            F.col("subj").alias("_s1"), F.col("pred").alias("_p1"),
-            F.col("obj").alias("_o1"),
-        )
-        j = e.join(rt, e["_p1"] == rt["pa"]).filter(
-            (F.col("c1s").isNull() | (F.col("_s1") == F.col("c1s")))
-            & (F.col("c1o").isNull() | (F.col("_o1") == F.col("c1o")))
-        )
-        outs.append(j.select(
-            "rule_id",
-            _bindings_map([(F.col("n1s"), F.col("_s1")),
-                           (F.col("n1o"), F.col("_o1"))]).alias("bindings"),
-        ))
-    for (j1, j2), specs in groups.pairs.items():
-        sp = keep(specs, ["pa", "pb"])
-        if not sp:
+    for shape, specs in _shapes(groups):
+        specs = _keep(specs, shape, present_preds)
+        if not specs:
             continue
-        rt = _rules_table(
-            edges,
-            [(s["rule_id"], _v(s["pa"]), _v(s["pb"]), _v(s["c1s"]),
-              _v(s["c1o"]), _v(s["c2s"]), _v(s["c2o"]), s["n1s"], s["n1o"],
-              s["n2s"], s["n2o"]) for s in sp],
-            _CON_PAIR_SCHEMA,
-        )
-        e1 = edges.select(
-            F.col("subj").alias("_s1"), F.col("pred").alias("_p1"),
-            F.col("obj").alias("_o1"),
-        )
-        e2 = edges.select(
-            F.col("subj").alias("_s2"), F.col("pred").alias("_p2"),
-            F.col("obj").alias("_o2"),
-        )
-        left = e1.join(rt, e1["_p1"] == rt["pa"]).filter(
-            (F.col("c1s").isNull() | (F.col("_s1") == F.col("c1s")))
-            & (F.col("c1o").isNull() | (F.col("_o1") == F.col("c1o")))
-        )
-        key1 = F.col("_s1") if j1 == "subj" else F.col("_o1")
-        key2 = F.col("_s2") if j2 == "subj" else F.col("_o2")
-        out = left.join(
-            e2, (F.col("pb") == F.col("_p2")) & (key1 == key2)
-        ).filter(
-            (F.col("c2s").isNull() | (F.col("_s2") == F.col("c2s")))
-            & (F.col("c2o").isNull() | (F.col("_o2") == F.col("c2o")))
-        )
-        outs.append(out.select(
+        pos = _positions(shape)
+        names = _NAME_COLS[: len(pos)]
+        outs.append(_match(edges, edges, shape, specs, names).select(
             "rule_id",
-            _bindings_map([
-                (F.col("n1s"), F.col("_s1")), (F.col("n1o"), F.col("_o1")),
-                (F.col("n2s"), F.col("_s2")), (F.col("n2o"), F.col("_o2")),
-            ]).alias("bindings"),
+            _bindings_map(
+                [(F.col(n), F.col(p)) for n, p in zip(names, pos)]
+            ).alias("bindings"),
         ))
     return outs
