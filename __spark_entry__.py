@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F  # noqa: E402
 from zelph_spark import canon, closure, extract, rules as Rz  # noqa: E402
 from zelph_spark.ops import dedup, sampling, similarity, textops  # noqa: E402
 from zelph_spark.reasoning import evaluate_contradictions, run_fixpoint  # noqa: E402
+from zelph_spark.session import literal  # noqa: E402
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -64,8 +65,8 @@ def _taxonomy_triples(spark, sf_dir):
         F.lit("P279").alias("pred"),
         F.lit("ROOT").alias("obj"),
     )
-    memb = spark.createDataFrame(
-        [("P279", "P31", Rz.TRANSITIVE)], "subj string, pred string, obj string"
+    memb = literal(
+        spark, [("P279", "P31", Rz.TRANSITIVE)], "subj string, pred string, obj string"
     )
     return cust.unionByName(nat).unionByName(reg).unionByName(memb)
 
@@ -234,14 +235,11 @@ def q_kg_entity_link(spark, sf_dir):
     words = docs.select(
         "doc_id", F.explode(F.array_distinct(textops.tokens("text"))).alias("surface")
     )
-    dic = spark.createDataFrame(
-        [
-            ("customer", "Q1", 0.9), ("part", "Q2", 0.8), ("window", "Q3", 0.7),
-            ("join", "Q4", 0.6), ("order", "Q5", 0.5), ("part", "Q9", 0.2),
-            ("window", "Q8", 0.7),
-        ],
-        "surface string, qid string, prior double",
-    )
+    dic = literal(spark, [
+        ("customer", "Q1", 0.9), ("part", "Q2", 0.8), ("window", "Q3", 0.7),
+        ("join", "Q4", 0.6), ("order", "Q5", 0.5), ("part", "Q9", 0.2),
+        ("window", "Q8", 0.7),
+    ], "surface string, qid string, prior double")
     cands = words.join(F.broadcast(dic), "surface")
     w = Window.partitionBy("doc_id", "surface").orderBy(
         F.col("prior").desc(), F.col("qid").asc()
@@ -510,9 +508,7 @@ def q_kg_cluster_drop(spark, sf_dir):
             F.concat(F.lit("N"), F.col("c_nationkey")).alias("obj"),
         ).distinct()
     )
-    empty = spark.createDataFrame([], "subj string, pred string, obj string")
-    membership = clusters.empty_membership(spark)
-    edges, membership = clusters.assert_batch(empty, nat, None, membership)
+    edges, membership = clusters.assert_batch(None, nat)
     edges, membership = clusters.assert_batch(edges, sup, "w", membership)
     edges, membership = clusters.assert_batch(edges, late, None, membership)
     kept, _, _ = clusters.drop_cluster(edges, "w", membership=membership)
@@ -1228,7 +1224,7 @@ def q_text_scrub(spark, sf_dir):
     Java/RE2-identical subset so the DuckDB oracle replays the exact same
     replacement sequence."""
     d = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    planted = spark.createDataFrame(PII_DOCS, "doc_id long, text string")
+    planted = literal(spark, PII_DOCS, "doc_id long, text string")
     out = textops.with_pii_scrubbed(d.unionByName(planted))
     return out.select("doc_id", "scrubbed", "n_pii").orderBy("doc_id")
 

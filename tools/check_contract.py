@@ -1,16 +1,24 @@
 """Local replica of the driver's correctness gate: run each queries() entry
 on Spark at sf0.01, run oracle_sql() in DuckDB on the same parquet views,
-compare rowcount + sorted column names + order-insensitive values."""
-import sys, math
-import pathlib; sys.path.insert(0, str(pathlib.Path(__file__).resolve().parents[1]))
+compare rowcount + sorted column names + order-insensitive values.
+
+The session fits the host: ``local[$SPARK_GRAFT_CPUS]`` (``get_spark``'s
+default) and a pre-touched heap of a quarter of physical memory, at most
+16g, as ``perfbench.host.launch_settings`` sizes it. The Python workers get
+the checkout on PYTHONPATH, so the tool runs from any directory."""
+import os, sys, math
+import pathlib; ROOT = pathlib.Path(__file__).resolve().parents[1]; sys.path.insert(0, str(ROOT))
 import duckdb
 import __spark_entry__ as E
+from perfbench.host import mem_total_mb
 from zelph_spark.session import get_spark
 
 SF = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 only = sys.argv[2:] or None
-spark = get_spark(master="local[16]", shuffle_partitions=16,
-                  extra_conf={"spark.driver.memory": "16g"})
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    p for p in (str(ROOT), os.environ.get("PYTHONPATH", "")) if p)
+heap_mb = min(16 * 1024, mem_total_mb() // 4)
+spark = get_spark(extra_conf={"spark.driver.memory": f"{heap_mb}m"})
 con = duckdb.connect()
 for t in "region nation customer supplier part orders lineitem events documents embeddings".split():
     con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{SF}/{t}.parquet'")

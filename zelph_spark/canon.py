@@ -26,6 +26,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from .session import literal
 from .single_task import run_single_task
 
 
@@ -69,7 +70,7 @@ def connected_components(pairs: DataFrame) -> DataFrame:
     """
     if pairs.isEmpty():
         t = pairs.schema["a"].dataType.simpleString()
-        return pairs.sparkSession.createDataFrame([], f"node {t}, comp {t}")
+        return literal(pairs.sparkSession, [], f"node {t}, comp {t}")
     sym = (
         pairs.select(F.col("a").alias("src"), F.col("b").alias("dst"))
         .union(pairs.select(F.col("b").alias("src"), F.col("a").alias("dst")))
@@ -191,9 +192,8 @@ def relabel_edges(
                 .drop(f"_{role}_old", f"_{role}_new")
             )
     if "prob" not in out.columns:
-        return out.distinct(), edges.sparkSession.createDataFrame(
-            [], "subj string, pred string, obj string"
-        )
+        empty = literal(edges.sparkSession, [], "subj string, pred string, obj string")
+        return out.distinct(), empty
     merged = out.groupBy("subj", "pred", "obj").agg(
         F.min(F.coalesce("prob", F.lit(1.0))).alias("pmin"),
         F.max(F.coalesce("prob", F.lit(1.0))).alias("pmax"),

@@ -30,6 +30,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from .session import literal
+
 EDGE_COLS = ["subj", "pred", "obj"]
 
 
@@ -52,11 +54,11 @@ def _touched_nodes(edges: DataFrame) -> DataFrame:
 
 def empty_membership(spark) -> DataFrame:
     """A fresh ``(cluster, node)`` membership table."""
-    return spark.createDataFrame([], "cluster string, node string")
+    return literal(spark, [], "cluster string, node string")
 
 
 def assert_batch(
-    edges: DataFrame,
+    edges: DataFrame | None,
     new_edges: DataFrame,
     cluster: str | None = None,
     membership: DataFrame | None = None,
@@ -69,9 +71,12 @@ def assert_batch(
     anywhere before the batch are recorded in the membership table —
     creation-time recording, the only moment the information exists
     (ADVICE r3: deriving membership at drop time loses nodes referenced by
-    later outside facts).  Returns ``(edges', membership')``."""
+    later outside facts).  ``edges=None`` starts from an empty edge table.
+    Returns ``(edges', membership')``."""
+    if edges is None:
+        edges = literal(new_edges.sparkSession, [], new_edges.select(*EDGE_COLS).schema)
     if membership is None:
-        membership = empty_membership(edges.sparkSession)
+        membership = empty_membership(new_edges.sparkSession)
     edges = _with_cluster(edges)
     fresh = (
         new_edges.select(*EDGE_COLS)

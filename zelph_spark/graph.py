@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from . import config
+from .session import literal
 
 N_PRED_BUCKETS = 32
 
@@ -29,6 +30,12 @@ WIKIDATA_LANG = "wikidata"
 def nid(col):
     """node id for a wikidata-named node (string QID/PID -> int64)."""
     return config.node_id(col, F.lit(WIKIDATA_LANG))
+
+
+def name_ids(names: DataFrame) -> dict[str, int]:
+    """``{name: nid(name)}`` of a literal ``names`` table, evaluated on the
+    driver: the projection folds into the LocalRelation, so no Spark job."""
+    return dict(names.select("name", nid(F.col("name"))).collect())
 
 
 def build_edges(triples: DataFrame) -> DataFrame:
@@ -142,9 +149,7 @@ def edges_for_pred(edges: DataFrame, pred_name: str) -> DataFrame:
     """Per-predicate slice with bucket pruning — the per-predicate index
     analog (zelph_impl.hpp:90-104): both the bucket filter (partition
     pruning on disk) and the id filter push down to the scan."""
-    pid_df = edges.sparkSession.createDataFrame(
-        [(pred_name,)], "p string"
-    ).select(nid(F.col("p")).alias("pid"), F.pmod(F.xxhash64(nid(F.col("p"))), F.lit(N_PRED_BUCKETS)).alias("bucket"))
+    pid_df = literal(edges.sparkSession, [(pred_name,)], "p string").select(nid(F.col("p")).alias("pid"), F.pmod(F.xxhash64(nid(F.col("p"))), F.lit(N_PRED_BUCKETS)).alias("bucket"))
     row = pid_df.first()
     out = edges
     if "pred_bucket" in edges.columns:

@@ -25,6 +25,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.functions import pandas_udf
 
+from ..session import literal
+
 
 def _sigmoid(z):
     return 1.0 / (1.0 + np.exp(-z))
@@ -210,7 +212,7 @@ class GraphNet:
                 for i in range(len(pre)):
                     if m[j, i]:
                         rows.append((pre[i], post[j], float(wm[j, i])))
-        return spark.createDataFrame(rows, "a string, b string, w double")
+        return literal(spark, rows, "a string, b string, w double")
 
     def batch_eval(self, df: DataFrame, input_col: str,
                    out_col: str = "scores") -> DataFrame:

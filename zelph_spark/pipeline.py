@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from . import canon, extract, graph, link, rules as Rz
 from .checkpoint import StageStore, run_stage
 from .reasoning import contradiction_sweep, run_fixpoint
+from .session import literal
 
 
 @dataclass
@@ -105,9 +106,7 @@ def run_pipeline(
     #    Trusted facts carry prob null (= certain); linked facts keep their
     #    ranking score so reconciliation runs on real probabilities.
     no_prob = F.lit(None).cast("double").alias("prob")
-    base_facts = spark.createDataFrame(
-        Rz.BASE_FACTS, "subj string, pred string, obj string"
-    )
+    base_facts = literal(spark, Rz.BASE_FACTS, "subj string, pred string, obj string")
     all_triples = (
         t.select("subj", "pred", "obj", no_prob)
         .unionByName(link_triples.select("subj", "pred", "obj", "prob"))
@@ -150,18 +149,13 @@ def run_pipeline(
         "edges", lambda: graph.build_edges(with_types), partition_by=["pred_bucket"]
     )
 
-    # rule-constant id resolution (tiny: ~20 constants, one collect) — the
+    # rule-constant id resolution (tiny: ~20 constants, no Spark job) — the
     # same deterministic hash build_edges uses, so rule ids and data ids meet
     rules_pos = Rz.wikidata_rules()
     rules_con = Rz.wikidata_contradiction_rules() + list(constraint_rules or [])
     consts = sorted(Rz.rule_constants(rules_pos + rules_con))
-    consts_df = spark.createDataFrame([(c,) for c in consts], "name string")
-    cmap = {
-        r.name: r.node
-        for r in consts_df.select(
-            "name", graph.nid(F.col("name")).alias("node")
-        ).collect()
-    }
+    consts_df = literal(spark, [(c,) for c in consts], "name string")
+    cmap = graph.name_ids(consts_df)
     # rule-constant names ride build_names' single dedup (extra_names) —
     # no second full-table dropDuplicates after the union. relabel_column
     # may collapse two labelled nodes onto one canon; build_names' en-side
@@ -220,9 +214,7 @@ def run_pipeline(
         saturated_ids = id_edges
         saturated = with_types.select("subj", "pred", "obj")
         deduced = id_edges.limit(0)
-        contradictions = spark.createDataFrame(
-            [], "rule_id string, bindings map<string,string>"
-        )
+        contradictions = literal(spark, [], "rule_id string, bindings map<string,string>")
 
     counters["stage_secs"] = stage_secs
     return PipelineResult(

@@ -68,6 +68,7 @@ from pyspark.sql import DataFrame, Observation, functions as F, types as T
 
 from ..closure import closure_image
 from ..rules import Rule, is_var, resolve_rules, rule_constants
+from ..session import literal
 from ..single_task import run_single_task
 from . import kernel
 from .compiler import compile_rule_body, project_consequence
@@ -263,7 +264,7 @@ def deduced_wrong_contradictions(
     spark = edges.sparkSession
     wrong = wrong_facts.select(*EDGE_COLS).distinct()
     wrong_preds = {r.pred for r in wrong.select("pred").distinct().collect()}
-    empty = spark.createDataFrame([], "rule_id string, bindings map<string,string>")
+    empty = literal(spark, [], "rule_id string, bindings map<string,string>")
     if not wrong_preds:
         return empty
     outs = []
@@ -413,14 +414,8 @@ def _kernel_fixpoint(base: DataFrame, rules: list[Rule]):
     consts = sorted(rule_constants(rules))
     if py_t is None or any(type(c) is not py_t for c in consts):
         return None, "types"
-    # literals, not createDataFrame: a DataFrame made from a Python list
-    # has no size estimate, and the unknown size would reach every plan
-    # over the saturated edges (the contradiction sweep's joins)
-    const_df = spark.range(1).select(
-        F.explode(
-            F.array(*[F.lit(c) for c in consts]).cast(T.ArrayType(id_t))
-        ).alias("c")
-    )
+    # sized: an unknown size would reach every plan over the saturated edges
+    const_df = literal(spark, [(c,) for c in consts], T.StructType([T.StructField("c", id_t)]))
     cap = kernel.ROW_CAP
     sc = spark.sparkContext
     rounds, n_new = (sc.accumulator(0, _MaxParam()) for _ in range(2))
@@ -819,9 +814,7 @@ def evaluate_contradictions(
             )
         )
     out = _union_all(outs)
-    if out is None:
-        return spark.createDataFrame([], "rule_id string, bindings map<string,string>")
-    return out
+    return literal(spark, [], "rule_id string, bindings map<string,string>") if out is None else out
 
 
 def verify_fixpoint(result: FixpointResult, rules: list[Rule]) -> bool:

@@ -42,6 +42,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, functions as F
 
 from ..rules import Rule, is_var
+from ..session import literal
 
 # consequence-term selectors
 _SEL_C1S, _SEL_C1O, _SEL_C2S, _SEL_C2O, _SEL_CONST = "1S", "1O", "2S", "2O", "C"
@@ -186,7 +187,7 @@ def _rules_table(edges: DataFrame, rows, schema: str) -> DataFrame:
 
     Memoized on (session, id type, schema, rows): a semi-naive fixpoint
     round calls this once per fused shape per delta position with the SAME
-    rows round after round, and ``createDataFrame`` + casts is pure driver
+    rows round after round, and the Arrow literal + casts is pure driver
     overhead (local data, no dependence on the evolving extent). The cache
     is tiny (a handful of <100-row local frames per ruleset) and keyed by
     applicationId so frames from a stopped session are never reused."""
@@ -201,7 +202,7 @@ def _rules_table(edges: DataFrame, rows, schema: str) -> DataFrame:
     hit = _RT_CACHE.get(key)
     if hit is not None:
         return hit
-    rt = spark.createDataFrame(rows, schema)
+    rt = literal(spark, rows, schema)
     for c in _VALUE_COLS:
         if c in rt.columns:
             rt = rt.withColumn(c, F.col(c).cast(dt))

@@ -13,7 +13,9 @@ import os
 
 import re
 
-from pyspark.sql import SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 
 def _jvm_size(mem: str) -> str:
@@ -139,6 +141,31 @@ def _prewarm_python_workers(spark: SparkSession) -> None:
         .mapInPandas(lambda it: it, schema="id long")
         .count()
     )
+
+
+def literal(spark: SparkSession, rows, schema) -> DataFrame:
+    """A literal relation (a handful of driver-side rows) whose size the
+    optimizer knows. Every literal the engine builds goes through here.
+
+    ``spark.createDataFrame(<list>, schema)`` is a ``LogicalRDD`` over a
+    pickled Python RDD: its size estimate is ``spark.sql.defaultSizeInBytes``
+    (Long.MaxValue), so no plan that reads it can broadcast and AQE plans
+    sort-merge shuffles instead, and evaluating it is a Python-worker job.
+    An empty literal is ``range(0)`` with typed null columns (size 1; an
+    empty pandas frame falls back to the ``LogicalRDD``). A non-empty one is
+    an Arrow table, which becomes a ``LocalRelation`` sized rows x row width
+    that the driver evaluates without a job, whatever
+    ``spark.sql.execution.arrow.pyspark.enabled`` says. ``schema`` is a DDL
+    string or a ``StructType``."""
+    st = schema if isinstance(schema, T.StructType) else T.StructType.fromDDL(schema)
+    rows = list(rows)
+    if not rows:
+        return spark.range(0).select(
+            *[F.lit(None).cast(f.dataType).alias(f.name) for f in st.fields]
+        )
+    arrow = to_arrow_schema(st)
+    cols = [pa.array(list(c), type=f.type) for c, f in zip(zip(*rows), arrow)]
+    return spark.createDataFrame(pa.Table.from_arrays(cols, schema=arrow))
 
 
 def stop_spark() -> None:

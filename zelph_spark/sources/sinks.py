@@ -23,6 +23,7 @@ from pathlib import Path
 from pyspark.sql import DataFrame, functions as F
 
 from ..closure import transitive_closure
+from ..session import literal
 
 
 def export_taxonomy_json(
@@ -87,7 +88,7 @@ def neighborhood(
     from pyspark.sql import Window
 
     spark = edges.sparkSession
-    frontier = spark.createDataFrame([(focus,)], "node string")
+    frontier = literal(spark, [(focus,)], "node string")
     seen = frontier
     out = None
     for _ in range(depth):

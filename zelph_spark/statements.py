@@ -32,6 +32,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from .rules import P as Pat, Rule
+from .session import literal
 
 STATEMENT_SCHEMA = "subj string, pred string, obj string"
 
@@ -351,8 +352,7 @@ def constraint_rules(statements: DataFrame) -> tuple[list[Rule], DataFrame]:
         elif ctype == SCOPE:
             table_rows.append((prop, "scope", None, d["P2305"][0] if d["P2305"] else None))
 
-    table = statements.sparkSession.createDataFrame(
-        table_rows or [],
+    return rules, literal(
+        statements.sparkSession, table_rows,
         "pred string, rule_kind string, param_prop string, param_value string",
     )
-    return rules, table
