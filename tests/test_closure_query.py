@@ -2,12 +2,17 @@
 
 from __future__ import annotations
 
+import ast
+from pathlib import Path
+
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
 from zelph_spark import closure, query, single_task
 from zelph_spark.rules import P
+
+REPO = Path(__file__).resolve().parents[1]
 
 
 def _pairs(spark, pairs):
@@ -32,7 +37,7 @@ def test_closure_plus(spark, phase, monkeypatch):
     # force the distributed loop (the single-task fast path has its own
     # differential suite, test_local_closure.py). "linear" closes within the
     # one-hop prefix; "doubling" is a chain long enough that the loop also
-    # runs its reach ⋈ reach rounds after AUTO_SWITCH_ROUND
+    # runs its delta ⋈ reach rounds after AUTO_SWITCH_ROUND
     monkeypatch.setattr(single_task, "LOCAL_ROWS", 0)
     if phase == "linear":
         pairs, want = CHAIN, CHAIN_PLUS
@@ -88,14 +93,37 @@ def test_transitive_targets_and_sources(spark):
 
 
 def test_path_sequence(spark):
+    # a sequence path p1/p2/p3 folds its slices with compose + distinct
     p1 = _pairs(spark, [("a", "b"), ("z", "w")])
     p2 = _pairs(spark, [("b", "c")])
     p3 = _pairs(spark, [("c", "d"), ("c", "e")])
-    got = {
-        (r.subj, r.obj)
-        for r in closure.path_sequence([p1, p2, p3]).collect()
-    }
+    acc = p1
+    for nxt in (p2, p3):
+        acc = closure.compose(acc, nxt).distinct()
+    got = {(r.subj, r.obj) for r in acc.collect()}
     assert got == {("a", "d"), ("a", "e")}
+
+
+def test_compose_is_the_only_pair_join():
+    """Every (subj, obj) path composition in the engine goes through
+    ``closure.compose``: a hand-rolled join over renamed ``_rs``/``_ro``
+    (or ``_ls``/``_lo``) pair columns anywhere else would bring back a copy
+    of it."""
+    names = {"_rs", "_ro", "_ls", "_lo"}
+    inside, outside = [], []
+    for p in sorted((REPO / "zelph_spark").rglob("*.py")):
+        tree = ast.parse(p.read_text())
+        helper = set()
+        if p.name == "closure.py":
+            fn = next(n for n in tree.body if getattr(n, "name", None) == "compose")
+            helper = {id(n) for n in ast.walk(fn)}
+        for n in ast.walk(tree):
+            if isinstance(n, ast.Constant) and n.value in names:
+                (inside if id(n) in helper else outside).append(
+                    f"{p.relative_to(REPO)}:{n.lineno}"
+                )
+    assert len(inside) >= 2  # the scan sees compose's own renames
+    assert outside == []
 
 
 # --- SPARQL combinators (mirroring test_sparql.cpp case shapes) -----------

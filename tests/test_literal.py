@@ -82,6 +82,17 @@ def test_literal_shapes(spark):
     assert _size(spark.createDataFrame([("a",)], "s string")) >= FINITE
 
 
+def test_empty_literal_is_a_local_relation(spark):
+    """An empty literal is a 0-row ``LocalRelation`` like a non-empty one:
+    its size estimate is 0 and collecting it runs no job."""
+    df = session.literal(spark, [], "s string, m map<string,string>")
+    plan = df._jdf.queryExecution().optimizedPlan()
+    assert plan.nodeName() == "LocalRelation"
+    assert _size(df) == 0
+    rows, jobs = _jobs(spark, df.collect)
+    assert rows == [] and jobs == 0
+
+
 def test_job_free_sites(spark, built):
     """Sites whose public function reads only literals: the literal is
     sized and the whole call runs no Spark job."""

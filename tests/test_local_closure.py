@@ -130,6 +130,32 @@ def test_seeded_targets_overflow_falls_back(spark, monkeypatch):
     assert run(2_000_000, cap=2) == run(0)
 
 
+def test_distributed_loops_run_no_count_actions(spark, monkeypatch):
+    # each round's size rides its localCheckpoint job as an Observation:
+    # neither loop may spend an isEmpty or count action on it
+    edges = GRAPHS["deep_chain"]
+    pairs = _pairs(spark, edges)
+    seeds = spark.createDataFrame(pd.DataFrame({"node": [0, 60]}))
+    monkeypatch.setattr(single_task, "LOCAL_ROWS", 0)
+
+    def refuse(self, *a, **k):
+        raise AssertionError("count action in the closure loop")
+
+    with monkeypatch.context() as m:
+        # the concrete class: it overrides the abstract pyspark.sql.DataFrame
+        m.setattr(type(pairs), "isEmpty", refuse)
+        m.setattr(type(pairs), "count", refuse)
+        clo = closure.transitive_closure(pairs)
+        tgt = closure.transitive_targets(pairs, seeds)
+    n = len(edges)
+    assert {(r.subj, r.obj) for r in clo.collect()} == {
+        (i, j) for i in range(n + 1) for j in range(i + 1, n + 1)
+    }
+    assert {(r.start, r.node) for r in tgt.collect()} == {
+        (s, j) for s in (0, 60) for j in range(s + 1, n + 1)
+    }
+
+
 @pytest.mark.parametrize("name", ["chain", "cycle", "tree", "hub"])
 def test_closure_image_local_matches_fallback(spark, name, monkeypatch):
     edges = GRAPHS[name]

@@ -24,7 +24,7 @@ the distributed-friendly equivalent of the exception, same information).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Observation, functions as F
 
 from .session import literal
 from .single_task import run_single_task
@@ -121,8 +121,6 @@ def connected_components(pairs: DataFrame) -> DataFrame:
         # metric (same discipline as the fixpoint's delta write): joining
         # the old labels into the plan costs less than the extra
         # changed-count action per round it replaces
-        from pyspark.sql import Observation
-
         old = labels.select(
             F.col("node").alias("o_node"), F.col("comp").alias("o_comp")
         )
@@ -168,7 +166,7 @@ def name_conflict_pairs(names: DataFrame) -> DataFrame:
 
 
 def relabel_edges(
-    edges: DataFrame, merge_map: DataFrame, broadcast_map: bool = True
+    edges: DataFrame, merge_map: DataFrame
 ) -> tuple[DataFrame, DataFrame]:
     """Apply merge_map to (subj, pred, obj [, prob]) edges; returns
     (canonical_edges, prob_conflicts).
@@ -180,7 +178,7 @@ def relabel_edges(
     """
     out = edges
     if not merge_map.isEmpty():
-        mm = F.broadcast(merge_map) if broadcast_map else merge_map
+        mm = F.broadcast(merge_map)
         for role in ("subj", "pred", "obj"):
             m = mm.select(
                 F.col("node").alias(f"_{role}_old"),
@@ -221,13 +219,12 @@ def relabel_edges(
     return resolved, conflicts
 
 
-def relabel_column(
-    df: DataFrame, col: str, merge_map: DataFrame, broadcast_map: bool = True
-) -> DataFrame:
+def relabel_column(df: DataFrame, col: str, merge_map: DataFrame) -> DataFrame:
     """Rewrite one id column through the merge map (names table, mention
     tables, ... — anything that references node ids)."""
-    mm = F.broadcast(merge_map) if broadcast_map else merge_map
-    m = mm.select(F.col("node").alias("_old"), F.col("canon").alias("_new"))
+    m = F.broadcast(merge_map).select(
+        F.col("node").alias("_old"), F.col("canon").alias("_new")
+    )
     return (
         df.join(m, df[col] == m["_old"], "left")
         .withColumn(col, F.coalesce("_new", col))

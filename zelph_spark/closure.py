@@ -1,33 +1,38 @@
 """Transitive closure + property paths (SURVEY.md §2.5 C1-C4, §2.6 Q12).
 
-zelph computes per-predicate closures with level-synchronous BFS over a
-cached per-predicate index (``zelph.cpp:267-296`` transitive_targets/sources,
-``zelph.cpp:49-80`` bfs_over_index, two-stage index strategy
-``zelph.cpp:44-47``). The Spark lowering is an iterative frontier self-join
-over the predicate slice with early dedup (SURVEY.md §7 hard-part 4):
+zelph has one traversal primitive: level-synchronous BFS over a cached
+per-predicate index, seeded or not (``zelph.cpp:267-296``
+transitive_targets/sources, ``zelph.cpp:49-80`` bfs_over_index, two-stage
+index strategy ``zelph.cpp:44-47``). This module has one too,
+:func:`_closure`, with two first deltas: the predicate slice ``base`` for
+the '+' closure, or ``base ⋉ seeds`` for seeded targets and sources.
+Inputs that fit one task run its numpy kernel through
+:func:`zelph_spark.single_task.run_single_task`; past the runner's bounds
+the Spark lowering is an iterative frontier self-join over the slice with
+early dedup (SURVEY.md §7 hard-part 4):
 
-    frontier' = (frontier ⋈ base) \\ reached
+    delta' = compose(delta, base) \\ reach
 
-One adaptive loop, mirroring the direct-scan-vs-index adaptivity: the
-first ``AUTO_SWITCH_ROUND`` rounds expand one hop (frontier ⋈ base, the BFS
-analog — cheapest per round, and shallow taxonomies finish here); later
-rounds join the frontier against everything reached so far, so a deep chain
-costs O(log diameter) further rounds instead of one per level. Inputs that
-fit one task skip the loop: :func:`zelph_spark.single_task.run_single_task`
-runs the numpy kernels below and declines to the loop past its bounds.
+The first ``AUTO_SWITCH_ROUND`` rounds expand one hop (the BFS analog —
+cheapest per round, and shallow taxonomies finish here); later unseeded
+rounds join the delta against everything reached so far, so a deep chain
+costs O(log diameter) further rounds instead of one per level.
+:func:`compose` is the one path-composition join, shared with sparql's
+sequence paths.
 
 Every round localCheckpoints (lineage cut) and dedups *before* expanding —
-hub fan-out otherwise explodes the frontier. The per-predicate input should
-come from :func:`zelph_spark.graph.edges_for_pred` so the scan is
-bucket-pruned; the joins themselves shuffle on the frontier key and AQE
-splits skewed hubs.
+hub fan-out otherwise explodes the frontier — and its row count rides that
+checkpoint job. The per-predicate input should come from
+:func:`zelph_spark.graph.edges_for_pred` so the scan is bucket-pruned; the
+joins themselves shuffle on the frontier key and AQE splits skewed hubs.
 """
 
 from __future__ import annotations
 
+from functools import reduce
 from itertools import count
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Observation, functions as F
 
 from .single_task import run_single_task
 
@@ -149,105 +154,111 @@ def _closure_kernel(src, dst, cap, seeds=None):
     return out // n, out % n
 
 
-def transitive_closure(
-    pairs: DataFrame,
-    prepared: bool = False,
-    local_ok: bool = True,
-) -> DataFrame:
-    """All (subj, obj) with a directed path subj ->+ obj ('+' closure).
+def compose(left: DataFrame, right: DataFrame) -> DataFrame:
+    """Path composition: (left.subj, right.obj) for every left.obj =
+    right.subj, with duplicates kept so each caller dedups where it needs
+    to. The right side is renamed rather than aliased: both sides can be
+    the SAME checkpointed plan, and alias-based self-joins hit
+    attribute-reuse resolution failures (key not found: subj#N)."""
+    r = right.select(F.col("subj").alias("_rs"), F.col("obj").alias("_ro"))
+    return left.join(r, left["obj"] == r["_rs"]).select(
+        "subj", F.col("_ro").alias("obj")
+    )
+
+
+def _checkpoint(df: DataFrame) -> tuple[DataFrame, int]:
+    """``df`` localCheckpointed, with its row count read from the same job
+    as an Observation metric instead of a second action."""
+    obs = Observation()
+    out = df.observe(obs, F.count(F.lit(1)).alias("rows")).localCheckpoint()
+    return out, obs.get["rows"]
+
+
+def _closure(base: DataFrame, seeds: DataFrame | None = None) -> DataFrame:
+    """(subj, obj) pairs of the '+' closure of the distinct ``base``, or
+    with ``seeds`` (one non-null 'node' column) only those whose subj is a
+    seed. Inputs that fit one task run :func:`_closure_kernel`; otherwise,
+    or when the kernel overflows, :func:`_closure_loop` runs. Null-keyed
+    edge sets also take the loop (a null-obj edge composes under a non-null
+    join key there, which the kernel's dense coding does not reproduce)."""
+    cap = LOCAL_PAIR_CAP
+    seeded = seeds is not None
+    local, _ = run_single_task(
+        [base, seeds] if seeded else [base],
+        lambda c, n: _closure_kernel(
+            *c[0], cap, seeds=c[1][0] if seeded else None
+        ),
+        PAIR,
+    )
+    return local if local is not None else _closure_loop(base, seeds)
+
+
+def _closure_loop(base: DataFrame, seeds: DataFrame | None = None) -> DataFrame:
+    """Distributed frontier loop of :func:`_closure`, run until a round
+    adds no pair. Its first delta is ``base``, or ``base ⋉ seeds``.
 
     Mirroring the reference's direct-vs-index adaptivity (zelph.cpp:44-47),
-    the loop runs ``AUTO_SWITCH_ROUND`` cheap linear rounds first — shallow
-    graphs (taxonomies) finish before the switch — then flips to doubling so
-    a deep chain costs O(log diameter) further rounds instead of one per
-    level. Any prefix of linear rounds followed by doubling yields the
-    identical closure (every added pair is a concatenation of real paths).
+    the loop runs ``AUTO_SWITCH_ROUND`` cheap linear rounds (delta ⋈ base)
+    first — shallow graphs (taxonomies) finish before the switch — then an
+    unseeded loop flips to doubling so a deep chain costs O(log diameter)
+    further rounds instead of one per level. Doubling joins delta ⋈ reach,
+    not reach ⋈ reach (which regenerates every known pair O(depth) times);
+    it is complete because any pair at distance L in (hi, 2*hi] splits at
+    the exact-distance-hi midpoint m: d(subj, m) = hi puts (subj, m) in the
+    last delta (range (lo, hi]) and d(m, obj) = L - hi <= hi puts (m, obj)
+    in reach."""
+    first = base
+    if seeds is not None:
+        first = base.join(
+            seeds.select(F.col("node").alias("subj")), "subj", "left_semi"
+        )
+    delta, rows = _checkpoint(first)
+    # reach = union of per-round pieces, each checkpointed once: a reach
+    # re-checkpointed every round re-copies the whole result each round
+    pieces = [delta]
+    reach_rows = rows
+
+    def reach_df():
+        return reduce(DataFrame.unionByName, pieces)
+
+    # a checkpointed piece keeps its join's compounding size estimate
+    # (measured 3e24 bytes for a 5k-row piece after four rounds), so the
+    # planner never broadcasts the reach on its own: hint it while its
+    # exact size is under the 2M-row bound the fixpoint uses for its delta
+    def _small(df):
+        return F.broadcast(df) if reach_rows <= 2_000_000 else df
+
+    for rnd in count():
+        if not rows:
+            return reach_df()
+        # Only the unseeded loop doubles (delta ⋈ reach after
+        # AUTO_SWITCH_ROUND): a seeded reach holds only seed-rooted pairs,
+        # so delta ⋈ reach would miss paths through non-seed nodes. Base
+        # is hinted only when the loop started from it (|base| <= |reach|).
+        if seeds is not None:
+            right = base
+        else:
+            right = _small(reach_df() if rnd >= AUTO_SWITCH_ROUND else base)
+        step = compose(delta, right).distinct()
+        delta, rows = _checkpoint(
+            step.join(_small(reach_df()), on=PAIR, how="left_anti")
+        )
+        if rows:
+            pieces.append(delta)
+            reach_rows += rows
+
+
+def transitive_closure(pairs: DataFrame, prepared: bool = False) -> DataFrame:
+    """All (subj, obj) with a directed path subj ->+ obj ('+' closure).
 
     ``prepared``: the caller guarantees ``pairs`` is already distinct and
     materialized (the analog of zelph's cached per-predicate index,
     zelph.cpp:44-47) — skip the initial dedup+checkpoint so repeated
-    closures over one slice don't re-materialize it.
-
-    ``local_ok=False`` skips the single-task fast path (a caller whose own
-    kernel already overflowed passes this so the doomed kernel is not
-    re-run).
-
-    [r6] Two structural costs of the original loop removed (guide §2.3/§2.4):
-
-    - ``reach`` was ``union(...).localCheckpoint()``-ed EVERY round — an
-      O(rounds x |closure|) serial re-copy of the whole result (at sf1.0
-      kg_closure that is 8 copies of a 2.3M-row table). ``reach`` is now the
-      plain union of per-round checkpointed delta pieces — nothing is ever
-      re-materialized.
-    - doubling rounds joined ``reach x reach``, regenerating every known
-      pair O(depth) times (~21M candidate rows/round at sf1.0 before the
-      dedup). They now join ``delta x reach`` ("smart" TC): complete because
-      any pair at distance L in (hi, 2*hi] splits at the exact-distance-hi
-      midpoint m — d(subj,m) = hi puts (subj,m) in the last delta (range
-      (lo, hi]) and d(m,obj) = L - hi <= hi puts (m,obj) in reach. Candidate
-      volume drops to |new paths| x avg-degree instead of |reach| x
-      avg-degree."""
+    closures over one slice don't re-materialize it."""
     base = (
         pairs if prepared else pairs.select(*PAIR).distinct().localCheckpoint()
     )
-    # [r6] single-task fast path (see _closure_kernel); null-keyed edge sets
-    # keep the distributed plan (a null-obj edge composes under a non-null
-    # join key in the shuffle plan, which the kernel's dense coding does not
-    # reproduce)
-    if local_ok:
-        cap = LOCAL_PAIR_CAP
-        local, _ = run_single_task(
-            [base], lambda c, n: _closure_kernel(*c[0], cap), PAIR
-        )
-        if local is not None:
-            return local
-
-    pieces = [base]  # reach = union of pieces; each piece checkpointed once
-
-    def reach_df():
-        out = pieces[0]
-        for p in pieces[1:]:
-            out = out.unionByName(p)
-        return out
-
-    # [r6] Broadcast the reach side while it is provably small. The pieces
-    # are checkpointed RDDs with NO size statistics, so the planner never
-    # broadcasts them: every round paid a full shuffle+sort of the entire
-    # accumulated reach for the anti-join (and again for the doubling
-    # join) even when the step was a handful of rows — the dominant cost
-    # of small/medium closures (kg_sparql_cycle: a 10k-edge graph read
-    # 26 s). Counting a just-materialized piece is one cheap job, so the
-    # loop tracks |reach| exactly and broadcast-hints both reach-side
-    # joins below the same 2M-row bound the fixpoint uses for its delta;
-    # past the bound it falls back to the shuffle plan unchanged.
-    reach_rows = base.count()
-
-    def _reach(df):
-        return F.broadcast(df) if reach_rows <= 2_000_000 else df
-
-    delta = base
-    for rnd in count():
-        # rename the build side instead of DataFrame aliases: delta and
-        # base can be the SAME checkpointed plan, and alias-based self-joins
-        # hit attribute-reuse resolution failures (key not found: subj#N)
-        right = (reach_df() if rnd >= AUTO_SWITCH_ROUND else base).select(
-            F.col("subj").alias("_rs"),
-            F.col("obj").alias("_ro"),
-        )
-        step = (
-            delta.join(_reach(right), delta["obj"] == right["_rs"])
-            .select("subj", F.col("_ro").alias("obj"))
-            .distinct()
-        )
-        new = step.join(
-            _reach(reach_df()), on=PAIR, how="left_anti"
-        ).localCheckpoint()
-        if new.isEmpty():
-            return reach_df()
-        pieces.append(new)
-        delta = new
-        if reach_rows <= 2_000_000:
-            reach_rows += new.count()
+    return _closure(base)
 
 
 def closure_with_start(pairs: DataFrame, prepared: bool = False) -> DataFrame:
@@ -326,14 +337,11 @@ def closure_image(pairs: DataFrame, facts: DataFrame) -> DataFrame:
     )
     if img is not None:
         return img
-    # closure-stage overflow: the same kernel inside transitive_closure
-    # would grind to the identical overflow — skip straight to the
-    # distributed loop. Otherwise (image-stage overflow, facts over the
-    # budget) the closure alone may still fit, so only the join goes
-    # distributed.
-    clo = transitive_closure(
-        base, prepared=True, local_ok=reason != _OVERFLOW
-    )
+    # closure-stage overflow: the same closure kernel would grind to the
+    # identical overflow — skip straight to the distributed loop. Otherwise
+    # (image-stage overflow, facts over the budget) the closure alone may
+    # still fit, so only the join goes distributed.
+    clo = (_closure_loop if reason == _OVERFLOW else _closure)(base)
     right = facts.select(F.col("subj").alias("_k"), "pred", "obj")
     return (
         clo.select("subj", F.col("obj").alias("_k"))
@@ -350,65 +358,21 @@ def transitive_targets(
     prepared: bool = False,
 ) -> DataFrame:
     """Forward closure from a seed set (zelph.cpp:267-281): returns
-    (start, target) rows. ``start`` is a one-column DF named 'node'.
+    (start, node) rows. ``start`` is a one-column DF named 'node'.
     ``prepared``: see :func:`transitive_closure`."""
     base = (
         pairs if prepared else pairs.select(*PAIR).distinct().localCheckpoint()
     )
-    # [r6] single-task fast path: the kernel's initial delta is the
-    # seed-restricted base slice; the seeds ride into the task as a second
-    # input
-    cap = LOCAL_PAIR_CAP
-    visited, _ = run_single_task(
-        [base, start.select("node").where(F.col("node").isNotNull())],
-        lambda c, n: _closure_kernel(*c[0], cap, seeds=c[1][0]),
-        ["start", "node"],
+    seeds = start.select("node").where(F.col("node").isNotNull())
+    visited = _closure(base, seeds).select(
+        F.col("subj").alias("start"), F.col("obj").alias("node")
     )
-    if visited is None:
-        visited = _targets_loop(base, start)
     if include_start:
-        seeds = start.select(
+        ident = start.select(
             F.col("node").alias("start"), F.col("node").alias("node")
         )
-        visited = visited.unionByName(seeds).distinct()
+        visited = visited.unionByName(ident).distinct()
     return visited
-
-
-def _targets_loop(base: DataFrame, start: DataFrame) -> DataFrame:
-    """Distributed frontier loop of :func:`transitive_targets`, run until
-    no new (start, node) pair appears."""
-    frontier = (
-        start.select(F.col("node").alias("subj"))
-        .distinct()
-        .join(base, on="subj")
-        .select(F.col("subj").alias("start"), F.col("obj").alias("node"))
-        .distinct()
-        .localCheckpoint()
-    )
-    # visited = union of per-round checkpointed pieces (r6, same fix as
-    # transitive_closure: the old per-round union+localCheckpoint re-copied
-    # the whole visited set every round)
-    pieces = [frontier]
-
-    def visited_df():
-        out = pieces[0]
-        for p in pieces[1:]:
-            out = out.unionByName(p)
-        return out
-
-    while True:
-        step = (
-            frontier.join(base, frontier.node == base.subj)
-            .select("start", F.col("obj").alias("node"))
-            .distinct()
-        )
-        new = step.join(
-            visited_df(), on=["start", "node"], how="left_anti"
-        ).localCheckpoint()
-        if new.isEmpty():
-            return visited_df()
-        pieces.append(new)
-        frontier = new
 
 
 def transitive_sources(pairs: DataFrame, start: DataFrame, **kw) -> DataFrame:
@@ -416,18 +380,3 @@ def transitive_sources(pairs: DataFrame, start: DataFrame, **kw) -> DataFrame:
     rev = pairs.select(F.col("obj").alias("subj"), F.col("subj").alias("obj"))
     out = transitive_targets(rev, start, **kw)
     return out
-
-
-def path_sequence(edge_slices: list[DataFrame]) -> DataFrame:
-    """SPARQL sequence path p1/p2/.../pn (sparql.zph:792-811): chained joins
-    through generated intermediates; each element is a (subj, obj) slice
-    (possibly itself a closure)."""
-    acc = edge_slices[0].select(*PAIR)
-    for nxt in edge_slices[1:]:
-        right = nxt.select(F.col("subj").alias("_rs"), F.col("obj").alias("_ro"))
-        acc = (
-            acc.join(right, acc["obj"] == right["_rs"])
-            .select("subj", F.col("_ro").alias("obj"))
-            .distinct()
-        )
-    return acc

@@ -154,11 +154,7 @@ def drop_cluster(
         ),
         doomed,
     )
-    kept_membership = (
-        membership.filter(F.col("cluster") != name)
-        if membership is not None
-        else None
-    )
+    kept_membership = membership.filter(F.col("cluster") != name)
     if names is None:
         return kept, None, kept_membership
     kept_names = names.join(

@@ -223,7 +223,6 @@ def minhash_verified_pairs(
     num_hashes: int = 64,
     bands: int = 32,
     threshold: float = 0.5,
-    reuse: str = "cache",
 ) -> DataFrame:
     """MinHash+LSH blocking with EXACT Jaccard verification: (a, b, jaccard
     >= threshold), a < b. The LSH banding only generates candidates; every
@@ -235,15 +234,11 @@ def minhash_verified_pairs(
     equi-join on (band, bucket), the verify join touches candidate pairs
     only, never all pairs."""
     # shingles feeds four branches (signatures, verify join x2, sizes).
-    # reuse="cache" persists the explode once while KEEPING the logical
-    # plan, so AQE still sees real size stats and the verify join keeps its
+    # cache persists the explode once while KEEPING the logical plan, so
+    # AQE still sees real size stats and the verify join keeps its
     # broadcast (measured 2x at sf0.1; a localCheckpoint loses the stats
-    # and the broadcast — that variant measured slower than recompute).
-    # reuse="recompute" is the extreme-scale escape hatch: when the
-    # exploded shingle set is a multiple of a 100 TB input, re-deriving it
-    # from the columnar scan can beat spilling the cache to executor disks.
-    if reuse == "cache":
-        shingles = shingles.cache()
+    # and the broadcast — that variant measured slower than recomputing).
+    shingles = shingles.cache()
     # the signature table is tiny (one row per doc) but feeds FOUR plan
     # branches (banding left/right + the est attach joins); materialize it
     # once instead of re-running the 64-way min aggregation per branch (r6)
@@ -280,13 +275,12 @@ def minhash_verified_pairs(
         )
         .filter(F.col("jaccard") >= threshold)
     )
-    if reuse == "cache":
-        # materialize the (small) verified-pairs result, then release the
-        # cached shingle partitions — a long-lived session (bench runs every
-        # query multiple passes) otherwise accumulates dead cache entries in
-        # executor memory/disk across calls
-        out = out.localCheckpoint()
-        shingles.unpersist()
+    # materialize the (small) verified-pairs result, then release the
+    # cached shingle partitions — a long-lived session (bench runs every
+    # query multiple passes) otherwise accumulates dead cache entries in
+    # executor memory/disk across calls
+    out = out.localCheckpoint()
+    shingles.unpersist()
     return out
 
 

@@ -14,7 +14,7 @@ import os
 import re
 
 import pyarrow as pa
-from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
+from pyspark.sql import DataFrame, SparkSession, types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 
 
@@ -151,20 +151,16 @@ def literal(spark: SparkSession, rows, schema) -> DataFrame:
     pickled Python RDD: its size estimate is ``spark.sql.defaultSizeInBytes``
     (Long.MaxValue), so no plan that reads it can broadcast and AQE plans
     sort-merge shuffles instead, and evaluating it is a Python-worker job.
-    An empty literal is ``range(0)`` with typed null columns (size 1; an
-    empty pandas frame falls back to the ``LogicalRDD``). A non-empty one is
-    an Arrow table, which becomes a ``LocalRelation`` sized rows x row width
-    that the driver evaluates without a job, whatever
-    ``spark.sql.execution.arrow.pyspark.enabled`` says. ``schema`` is a DDL
-    string or a ``StructType``."""
+    Here every literal, empty or not, is an Arrow table built column by
+    column from the schema's fields, which becomes a ``LocalRelation`` sized
+    rows x row width (0 when empty) that the driver evaluates without a
+    job, whatever ``spark.sql.execution.arrow.pyspark.enabled`` says (an
+    empty pandas frame would fall back to the ``LogicalRDD``). ``schema`` is
+    a DDL string or a ``StructType``."""
     st = schema if isinstance(schema, T.StructType) else T.StructType.fromDDL(schema)
     rows = list(rows)
-    if not rows:
-        return spark.range(0).select(
-            *[F.lit(None).cast(f.dataType).alias(f.name) for f in st.fields]
-        )
     arrow = to_arrow_schema(st)
-    cols = [pa.array(list(c), type=f.type) for c, f in zip(zip(*rows), arrow)]
+    cols = [pa.array([r[i] for r in rows], type=f.type) for i, f in enumerate(arrow)]
     return spark.createDataFrame(pa.Table.from_arrays(cols, schema=arrow))
 
 

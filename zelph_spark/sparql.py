@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame, functions as F
 from . import query as Q
 from .closure import (
     closure_with_start,
+    compose,
     transitive_closure,
     transitive_sources,
     transitive_targets,
@@ -436,12 +437,7 @@ def _edges_for_path(edges: DataFrame, pred: str, memo: dict) -> DataFrame:
             # which under-returned x nodes with rest edges but no p edges).
             rest = _edges_for_path(edges, PATH_SEP.join(parts[1:]), memo)
             plus = _edges_for_path(edges, parts[0][:-1] + "+", memo)
-            right = rest.select(
-                F.col("subj").alias("_rs"), F.col("obj").alias("_ro")
-            )
-            ext = plus.join(right, plus["obj"] == right["_rs"]).select(
-                "subj", F.col("_ro").alias("obj")
-            )
+            ext = compose(plus, rest)
             out = rest.select("subj", "obj").unionByName(ext).distinct()
         else:
             acc = _edges_for_path(edges, parts[0], memo)
@@ -471,19 +467,9 @@ def _chain_step(
     (sparql.zph:792-811 chains elements against the current solution)."""
     if el.endswith("*"):
         plus = _edges_for_path(edges, el[:-1] + "+", memo)
-        right = plus.select(F.col("subj").alias("_rs"), F.col("obj").alias("_ro"))
-        ext = (
-            acc.join(right, acc["obj"] == right["_rs"])
-            .select("subj", F.col("_ro").alias("obj"))
-        )
+        ext = compose(acc, plus)
         return acc.select("subj", "obj").unionByName(ext).distinct()
-    nxt = _edges_for_path(edges, el, memo)
-    right = nxt.select(F.col("subj").alias("_rs"), F.col("obj").alias("_ro"))
-    return (
-        acc.join(right, acc["obj"] == right["_rs"])
-        .select("subj", F.col("_ro").alias("obj"))
-        .distinct()
-    )
+    return compose(acc, _edges_for_path(edges, el, memo)).distinct()
 
 
 def _seeded_path_pairs(
@@ -548,23 +534,9 @@ def _seeded_sequence_pairs(
         if acc is None:
             acc = step
         elif forward:
-            right = step.select(
-                F.col("subj").alias("_rs"), F.col("obj").alias("_ro")
-            )
-            acc = (
-                acc.join(right, acc["obj"] == right["_rs"])
-                .select("subj", F.col("_ro").alias("obj"))
-                .distinct()
-            )
+            acc = compose(acc, step).distinct()
         else:
-            left = step.select(
-                F.col("subj").alias("_ls"), F.col("obj").alias("_lo")
-            )
-            acc = (
-                left.join(acc, F.col("_lo") == acc["subj"])
-                .select(F.col("_ls").alias("subj"), "obj")
-                .distinct()
-            )
+            acc = compose(step, acc).distinct()
     return acc
 
 
