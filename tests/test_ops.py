@@ -88,7 +88,7 @@ def test_minhash_estimates_match_exact_jaccard(spark):
     sh = dedup.word_shingles(df, n=2)
     sig = dedup.minhash_signatures(sh, num_hashes=64)
     got = {(r.a, r.b): r.est_jaccard for r in dedup.minhash_lsh_pairs(
-        sig, bands=16, threshold=0.4).collect()}
+        sig, num_hashes=64, bands=16, threshold=0.4).collect()}
     exact = {(r.a, r.b): r.jaccard for r in dedup.jaccard_pairs(sh, threshold=0.0).collect()}
     assert got[(1, 4)] == 1.0
     assert abs(got[(1, 2)] - exact[(1, 2)]) < 0.25  # 64-hash estimator noise
@@ -176,6 +176,82 @@ def test_winnow_overlap_pairs_shared_passage(spark):
     assert not any(3 in p for p in pairs)
     shared = _py_winnow(docs.text[0]) & _py_winnow(docs.text[1])
     assert pairs[(1, 2)][0] == len(shared)
+
+
+STOP_DOCS = pd.DataFrame({
+    "doc_id": [1, 2, 3, 4, 5],
+    "text": [
+        "subscribe to our newsletter for weekly deals and more offers today "
+        "the quick brown fox jumps over the lazy dog near the river bank",
+        "subscribe to our newsletter for weekly deals and more offers today "
+        "a completely different document about spark query engines and joins",
+        "subscribe to our newsletter for weekly deals and more offers today "
+        "notes on winnowing fingerprints for partial overlap detection",
+        "the quick brown fox jumps over the lazy dog near the river bend",
+        "an unrelated closing document with nothing in common at all",
+    ],
+})
+
+
+def _py_stop_filtered(items: dict, max_df) -> dict:
+    """Per-doc item sets after dropping items in more than max_df docs."""
+    df = {}
+    for s in items.values():
+        for x in s:
+            df[x] = df.get(x, 0) + 1
+    return {
+        d: {x for x in s if max_df is None or df[x] <= max_df}
+        for d, s in items.items()
+    }
+
+
+@pytest.mark.parametrize("max_df", [None, 2])
+def test_stop_item_guard_matches_python(spark, max_df):
+    """jaccard_pairs and winnow_overlap_pairs against a pure-Python
+    computation over the max_df-filtered item sets, sizes included: the
+    boilerplate sentence (3 docs) drops out at max_df=2."""
+    docs = spark.createDataFrame(STOP_DOCS)
+    texts = dict(zip(STOP_DOCS.doc_id, STOP_DOCS.text))
+
+    def py_shingles(t):
+        toks = t.lower().split()
+        return {" ".join(toks[i : i + 2]) for i in range(len(toks) - 1)}
+
+    pairs = [(a, b) for a in texts for b in texts if a < b]
+    sh = _py_stop_filtered({d: py_shingles(t) for d, t in texts.items()}, max_df)
+    want = {}
+    for a, b in pairs:
+        inter = len(sh[a] & sh[b])
+        if inter:
+            want[(a, b)] = inter / (len(sh[a]) + len(sh[b]) - inter)
+    got = {
+        (r.a, r.b): r.jaccard
+        for r in dedup.jaccard_pairs(
+            dedup.word_shingles(docs, n=2), threshold=0.0, max_df=max_df
+        ).collect()
+    }
+    assert got.keys() == want.keys()
+    assert all(abs(got[p] - want[p]) <= 1e-6 for p in want)
+    # the boilerplate-only pair exists unfiltered and vanishes at max_df=2
+    assert ((1, 2) in want) == (max_df is None)
+
+    fps = _py_stop_filtered({d: _py_winnow(t) for d, t in texts.items()}, max_df)
+    want = {}
+    for a, b in pairs:
+        n = len(fps[a] & fps[b])
+        if n >= 1:
+            want[(a, b)] = (n, n / min(len(fps[a]), len(fps[b])))
+    got = {
+        (r.a, r.b): (r.n_shared, r.containment)
+        for r in dedup.winnow_overlap_pairs(
+            dedup.winnow_fingerprints(docs), min_shared=1, max_df=max_df
+        ).collect()
+    }
+    assert got.keys() == want.keys()
+    assert all(
+        got[p][0] == want[p][0] and abs(got[p][1] - want[p][1]) <= 1e-6
+        for p in want
+    )
 
 
 def test_topk_bruteforce_is_exact(spark, emb):
@@ -269,6 +345,20 @@ def test_embedding_near_dup_pairs_self_consistency(spark, emb):
     pairs = similarity.embedding_near_dup_pairs(both, threshold=0.999)
     hits = [r for r in pairs.collect() if r.b == 999999]
     assert len(hits) == 1 and hits[0].cos >= 0.999
+
+
+def test_embedding_near_dup_pairs_compiles_without_fallback(spark, emb):
+    """The verify step must fit whole-stage codegen. With the fallback off,
+    generated code over Janino's 64 KB method limit raises instead of
+    silently running interpreted (a per-pair cosine of three 64-term
+    chains did)."""
+    key = "spark.sql.codegen.fallback"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        test_embedding_near_dup_pairs_self_consistency(spark, emb)
+    finally:
+        spark.conf.set(key, prev)
 
 
 def test_multimodal_plumbing(spark, fixture_docs_df):

@@ -1,5 +1,5 @@
-"""Deduplication operators: exact, n-gram Jaccard, MinHash+LSH, SimHash,
-embedding-cosine near-dup.
+"""Deduplication operators: exact, n-gram Jaccard, MinHash+LSH, winnowing,
+SimHash, and cluster assignment over the resulting pairs.
 
 Design for 100 TB: every variant is a pure DataFrame plan —
 
@@ -12,10 +12,16 @@ Design for 100 TB: every variant is a pure DataFrame plan —
   banded into LSH buckets -> candidate pairs join within buckets only —
   the linear-scale path; signatures verify candidates without re-reading
   text;
+- winnow:    shared-passage pairs from winnowed k-gram fingerprints;
 - simhash:   64 sign-sum bits from token hashes, bucketed by 16-bit chunks
-  (Hamming-distance blocking);
-- embedding: cosine over LSH sign-buckets (random-hyperplane sketch) with
-  exact verify, or brute-force within small blocks.
+  (Hamming-distance blocking).
+
+Every pair operator is candidate generation plus verification over the
+same few pair primitives: :func:`colliding_pairs` (the ``a < b`` blocking
+self-join), :func:`attach` (per-document columns onto both ends of a
+pair), ``_jaccard`` (exact-Jaccard verify) and ``_drop_frequent`` (the
+stop-item guard). ``similarity.embedding_near_dup_pairs`` (embedding-cosine
+near-dups) is built from the same primitives.
 
 No Python in the hot path: hashing via xxhash64, aggregation via built-ins.
 """
@@ -25,6 +31,50 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from .textops import tokens
+
+
+def colliding_pairs(rows: DataFrame, key: str, on: list[str]) -> DataFrame:
+    """(a, b, *on) for every two keys a < b of ``rows`` that agree on every
+    ``on`` column — the blocking self-join. A pair colliding on several
+    ``on`` values appears once per value; callers count or deduplicate."""
+    left = rows.select(F.col(key).alias("a"), *on)
+    right = rows.select(F.col(key).alias("b"), *on)
+    return left.join(right, on).filter(F.col("a") < F.col("b")).select("a", "b", *on)
+
+
+def attach(pairs: DataFrame, per_key: DataFrame, key: str) -> DataFrame:
+    """Join every non-key column c of ``per_key`` onto both ends of
+    ``pairs``, as ``c + "a"`` and ``c + "b"`` — one join per end."""
+    cols = [c for c in per_key.columns if c != key]
+    for end in ("a", "b"):
+        ends = [F.col(c).alias(c + end) for c in cols]
+        pairs = pairs.join(per_key.select(F.col(key).alias(end), *ends), end)
+    return pairs
+
+
+def _sizes(rows: DataFrame, key: str) -> DataFrame:
+    """(key, sz): the number of item rows per key."""
+    return rows.groupBy(key).agg(F.count(F.lit(1)).alias("sz"))
+
+
+def _drop_frequent(rows: DataFrame, item: str, max_df: int | None) -> DataFrame:
+    """The stop-item skew guard: drop the rows whose ``item`` occurs in more
+    than ``max_df`` keys (an item in d keys makes d^2 colliding pairs)."""
+    if max_df is None:
+        return rows
+    df_counts = rows.groupBy(item).agg(F.count(F.lit(1)).alias("df"))
+    return rows.join(df_counts.filter(F.col("df") <= max_df).select(item), item)
+
+
+def _jaccard(inter: DataFrame, items: DataFrame, key: str, threshold: float) -> DataFrame:
+    """Exact-Jaccard verify: (a, b, jaccard >= threshold) from the pairs'
+    intersection counts ``inter`` and the (key, item) rows they count."""
+    union = F.col("sza") + F.col("szb") - F.col("inter")
+    return (
+        attach(inter, _sizes(items, key), key)
+        .select("a", "b", F.round(F.col("inter") / union, 6).alias("jaccard"))
+        .filter(F.col("jaccard") >= threshold)
+    )
 
 
 def exact_duplicates(df: DataFrame, col: str = "text", key: str = "doc_id") -> DataFrame:
@@ -79,34 +129,13 @@ def jaccard_pairs(
     # after the (small) result materializes.
     sh = shingles.cache()
     sh.count()
-    if max_df is not None:
-        df_counts = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
-        kept = sh.join(
-            df_counts.filter(F.col("df") <= max_df).select("shingle"), "shingle"
-        )
-    else:
-        kept = sh
-    sizes = kept.groupBy(key).agg(F.count(F.lit(1)).alias("sz"))
-    a = kept.select(F.col(key).alias("a"), "shingle")
-    b = kept.select(F.col(key).alias("b"), "shingle")
+    kept = _drop_frequent(sh, "shingle", max_df)
     inter = (
-        a.join(b, "shingle")
-        .filter(F.col("a") < F.col("b"))
+        colliding_pairs(kept, key, ["shingle"])
         .groupBy("a", "b")
         .agg(F.count(F.lit(1)).alias("inter"))
     )
-    out = (
-        inter.join(sizes.select(F.col(key).alias("a"), F.col("sz").alias("sza")), "a")
-        .join(sizes.select(F.col(key).alias("b"), F.col("sz").alias("szb")), "b")
-        .select(
-            "a",
-            "b",
-            F.round(
-                F.col("inter") / (F.col("sza") + F.col("szb") - F.col("inter")), 6
-            ).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= threshold)
-    ).localCheckpoint()
+    out = _jaccard(inter, kept, key, threshold).localCheckpoint()
     sh.unpersist()
     return out
 
@@ -137,19 +166,18 @@ def minhash_signatures(
 
 def minhash_lsh_pairs(
     signatures: DataFrame,
+    num_hashes: int,
     key: str = "doc_id",
     bands: int = 16,
     threshold: float = 0.5,
-    num_hashes: int | None = None,
 ) -> DataFrame:
-    """LSH banding: split each signature into ``bands`` rows, bucket by the
-    band hash, generate candidate pairs inside buckets only, then estimate
-    jaccard as the fraction of matching signature positions.
+    """LSH banding: split each ``num_hashes``-long signature into ``bands``
+    rows, bucket by the band hash, generate candidate pairs inside buckets
+    only, then estimate jaccard as the fraction of matching signature
+    positions.
 
     Returns (a, b, est_jaccard >= threshold). Scale path: candidates are
     produced by an equi-join on (band, band_hash) — never a cross join.
-    Pass ``num_hashes`` when known: the fallback peeks at one row, which
-    costs a full evaluation of the signature aggregation.
 
     [r6] The bucket self-join pairs BARE (key, band, bucket) rows and the
     signatures are attached to the surviving distinct pairs afterwards
@@ -159,8 +187,6 @@ def minhash_lsh_pairs(
     arrays (~1 KB/row) through that join + dropDuplicates shuffled ~60x
     more bytes than the 16-byte id pairs do. Same candidate set, same
     est_jaccard, measured 39.4 s -> 4.2 s for the candidate stage."""
-    if num_hashes is None:
-        num_hashes = len(signatures.select("sig").first().sig)
     rows_per_band = num_hashes // bands
     # bucket = hash of the band's signature longs DIRECTLY (r6) — the old
     # slice->cast-to-string->concat->hash chain evaluated interpreted
@@ -191,17 +217,12 @@ def minhash_lsh_pairs(
     # would otherwise re-run the whole signature aggregation + banding per
     # side (measured: ~4 s/side at sf1.0 for a 38 MB table)
     banded = banded.localCheckpoint()
-    left = banded.select(F.col(key).alias("a"), "band", "bucket")
-    right = banded.select(F.col(key).alias("b"), "band", "bucket")
     pairs = (
-        left.join(right, ["band", "bucket"])
-        .filter(F.col("a") < F.col("b"))
+        colliding_pairs(banded, key, ["band", "bucket"])
         .select("a", "b")
         .dropDuplicates(["a", "b"])
     )
-    sig_a = signatures.select(F.col(key).alias("a"), F.col("sig").alias("siga"))
-    sig_b = signatures.select(F.col(key).alias("b"), F.col("sig").alias("sigb"))
-    cands = pairs.join(sig_a, "a").join(sig_b, "b")
+    cands = attach(pairs, signatures, key)
     est = F.round(
         F.size(
             F.filter(
@@ -251,10 +272,8 @@ def minhash_verified_pairs(
     # 4 sigma below the verify threshold for 64 hashes — prunes that noise
     # before the (much costlier) exact shingle-set verification join.
     cands = minhash_lsh_pairs(
-        sig, key=key, bands=bands, threshold=threshold / 2,
-        num_hashes=num_hashes,
+        sig, num_hashes, key=key, bands=bands, threshold=threshold / 2
     ).select("a", "b")
-    sizes = shingles.groupBy(key).agg(F.count(F.lit(1)).alias("sz"))
     a_sh = cands.join(shingles.select(F.col(key).alias("a"), "shingle"), "a")
     inter = (
         a_sh.join(
@@ -263,23 +282,11 @@ def minhash_verified_pairs(
         .groupBy("a", "b")
         .agg(F.count(F.lit(1)).alias("inter"))
     )
-    out = (
-        inter.join(sizes.select(F.col(key).alias("a"), F.col("sz").alias("sza")), "a")
-        .join(sizes.select(F.col(key).alias("b"), F.col("sz").alias("szb")), "b")
-        .select(
-            "a",
-            "b",
-            F.round(
-                F.col("inter") / (F.col("sza") + F.col("szb") - F.col("inter")), 6
-            ).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= threshold)
-    )
     # materialize the (small) verified-pairs result, then release the
     # cached shingle partitions — a long-lived session (bench runs every
     # query multiple passes) otherwise accumulates dead cache entries in
     # executor memory/disk across calls
-    out = out.localCheckpoint()
+    out = _jaccard(inter, shingles, key, threshold).localCheckpoint()
     shingles.unpersist()
     return out
 
@@ -380,24 +387,15 @@ def winnow_overlap_pairs(
     # joins keep their broadcast) and every branch then reads it.
     fps = fps.cache()
     fps.count()
-    if max_df is not None:
-        dfc = fps.groupBy("fp").agg(F.count(F.lit(1)).alias("df"))
-        kept = fps.join(dfc.filter(F.col("df") <= max_df).select("fp"), "fp")
-    else:
-        kept = fps
-    sizes = kept.groupBy(key).agg(F.count(F.lit(1)).alias("sz"))
-    a = kept.select(F.col(key).alias("a"), "fp")
-    b = kept.select(F.col(key).alias("b"), "fp")
+    kept = _drop_frequent(fps, "fp", max_df)
     shared = (
-        a.join(b, "fp")
-        .filter(F.col("a") < F.col("b"))
+        colliding_pairs(kept, key, ["fp"])
         .groupBy("a", "b")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n_shared"))
+        .agg(F.count(F.lit(1)).alias("n_shared"))
         .filter(F.col("n_shared") >= min_shared)
     )
     out = (
-        shared.join(sizes.select(F.col(key).alias("a"), F.col("sz").alias("sza")), "a")
-        .join(sizes.select(F.col(key).alias("b"), F.col("sz").alias("szb")), "b")
+        attach(shared, _sizes(kept, key), key)
         .select(
             "a",
             "b",

@@ -4,16 +4,22 @@ Baseline: brute-force cosine top-k — broadcast the (small) query side,
 JVM-side dot products via zip_with/aggregate, one window for top-k.
 Scale path: random-hyperplane LSH bucketing (sign sketch) so candidate
 generation is an equi-join on bucket ids instead of a cross join, plus an
-IVF-style variant with deterministic centroids. Exact verify in both.
+IVF-style variant with deterministic centroids. Exact verify in both;
+the near-dup pair join reuses ``dedup``'s pair primitives.
 
-All expressions are built-in columnar functions (whole-stage codegen),
-no Python UDFs — at 1e9 vectors the cross join is the enemy, not the
-arithmetic.
+Scoring uses built-in columnar functions (whole-stage codegen); the one
+Python UDF is the LSH sign sketch, a single Arrow-batched numpy matmul —
+at 1e9 vectors the cross join is the enemy, not the arithmetic.
 """
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import Column, DataFrame, Window, functions as F
+from pyspark.sql.functions import pandas_udf
+
+from .dedup import attach, colliding_pairs
 
 
 def dot(a, b, dim: int | None = None) -> Column:
@@ -47,6 +53,21 @@ def cosine(a, b, dim: int | None = None) -> Column:
     return dot(a, b, dim) / (norm(a, dim) * norm(b, dim))
 
 
+def _top_k(cands: DataFrame, k: int) -> DataFrame:
+    """(query_id, neighbor_id, cos, rn): score each (query_id, qvec,
+    neighbor_id, nvec) candidate by exact cosine and keep the ``k`` best per
+    query, ties broken by neighbor id."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("cos").desc(), F.col("neighbor_id").asc()
+    )
+    return (
+        cands.withColumn("cos", F.round(cosine("qvec", "nvec"), 6))
+        .withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") <= k)
+        .select("query_id", "neighbor_id", "cos", "rn")
+    )
+
+
 def topk_bruteforce(
     embeddings: DataFrame,
     queries: DataFrame,
@@ -63,17 +84,8 @@ def topk_bruteforce(
     e = embeddings.select(
         F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("nvec")
     )
-    scored = (
-        e.join(F.broadcast(q), F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("cos", F.round(cosine("qvec", "nvec"), 6))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select("query_id", "neighbor_id", "cos", "rn")
+    return _top_k(
+        e.join(F.broadcast(q), F.col("query_id") != F.col("neighbor_id")), k
     )
 
 
@@ -86,23 +98,6 @@ def _hyperplane(dim: int, seed: int) -> list[float]:
         math.sin(0.7 * seed + 0.311 * j) + math.cos(1.3 * seed - 0.17 * j)
         for j in range(dim)
     ]
-
-
-def lsh_bucket(
-    embeddings: DataFrame,
-    n_planes: int = 16,
-    dim: int = 64,
-    vec_col: str = "embedding",
-    table: int = 0,
-) -> DataFrame:
-    """Random-hyperplane sign sketch -> integer bucket id per vector.
-    ``table`` seeds an independent plane set (multi-table LSH)."""
-    bucket = F.lit(0).cast("long")
-    for i in range(n_planes):
-        plane = F.array(*[F.lit(v) for v in _hyperplane(dim, 1000 * table + i)])
-        bit = (dot(F.col(vec_col), plane) > 0).cast("long")
-        bucket = bucket.bitwiseOR(F.shiftleft(bit, i))
-    return embeddings.withColumn("bucket", bucket)
 
 
 def lsh_buckets_multi(
@@ -123,10 +118,6 @@ def lsh_buckets_multi(
     lambda per element per plane: ~n_tables*n_planes*dim interpreted calls
     per row). Plane values are identical to :func:`_hyperplane`, so bucket
     ids are unchanged."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import PandasUDFType, pandas_udf
-
     weights = np.array(
         [
             _hyperplane(dim, 1000 * t + i)
@@ -136,29 +127,18 @@ def lsh_buckets_multi(
     ).T  # (dim, n_tables*n_planes)
     bit_mult = 1 << np.arange(n_planes, dtype=np.int64)
 
-    def _buckets(v):
+    def _buckets(v: pd.Series) -> pd.Series:
         mat = np.vstack(v.to_numpy()).astype(np.float64)  # (n, dim)
         bits = (mat @ weights > 0).astype(np.int64)
         per_table = bits.reshape(len(v), -1, len(bit_mult)) * bit_mult
         return pd.Series(list(per_table.sum(axis=2)))
 
-    # explicit eval type: `from __future__ import annotations` stringifies
-    # hints, so inference can't see pd.Series -> pd.Series
-    buckets = pandas_udf(_buckets, "array<long>", PandasUDFType.SCALAR)
+    buckets = pandas_udf(_buckets, "array<long>")
 
     out = embeddings.withColumn("_bkts", buckets(F.col(vec_col)))
     return out.select(
         *embeddings.columns, F.posexplode("_bkts").alias("table", "bucket")
     )
-
-
-def _bucket_expr(vec_col: str, n_planes: int, dim: int, table: int):
-    bucket = F.lit(0).cast("long")
-    for i in range(n_planes):
-        plane = F.array(*[F.lit(v) for v in _hyperplane(dim, 1000 * table + i)])
-        bit = (dot(F.col(vec_col), plane) > 0).cast("long")
-        bucket = bucket.bitwiseOR(F.shiftleft(bit, i))
-    return bucket
 
 
 def topk_lsh(
@@ -183,20 +163,12 @@ def topk_lsh(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec"),
         "table", "bucket",
     )
-    scored = (
+    cands = (
         eb.join(F.broadcast(qb), ["table", "bucket"])
         .filter(F.col("query_id") != F.col("neighbor_id"))
         .dropDuplicates(["query_id", "neighbor_id"])
-        .withColumn("cos", F.round(cosine("qvec", "nvec"), 6))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select("query_id", "neighbor_id", "cos", "rn")
-    )
+    return _top_k(cands, k)
 
 
 def ivf_assign(
@@ -292,16 +264,8 @@ def topk_ivf(
         )
         .join(F.broadcast(probes), "centroid_id")
         .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("cos", F.round(cosine("qvec", "nvec"), 6))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        cand.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select("query_id", "neighbor_id", "cos", "rn")
-    )
+    return _top_k(cand, k)
 
 
 def embedding_near_dup_pairs(
@@ -327,29 +291,29 @@ def embedding_near_dup_pairs(
     #   distinct pairs afterwards, so the dedup shuffle carries ids
     #   instead of ~n_tables x |collisions| x 1 KB of payload
     #   (measured at 50k docs/64 dims: 25-42 s -> ~7 s, identical pairs).
-    eb = lsh_buckets_multi(embeddings, n_planes, n_tables, dim, vec_col)
-    bk = eb.select(
-        F.col(id_col).alias("a"), "table", "bucket"
+    bk = lsh_buckets_multi(embeddings, n_planes, n_tables, dim, vec_col).select(
+        id_col, "table", "bucket"
     ).localCheckpoint()
     # candidate dedup on BARE id pairs first, verify after (A/B'd both
     # orders at replica sf1.0: verify-first reads 49-54 s because the raw
     # multi-table collision stream then drags two 0.5 KB vectors per row
     # through the attach joins; dedup-first reads 14-17 s)
     pairs = (
-        bk.join(
-            bk.select(F.col("a").alias("b"), "table", "bucket"),
-            ["table", "bucket"],
-        )
-        .filter(F.col("a") < F.col("b"))
+        colliding_pairs(bk, id_col, ["table", "bucket"])
         .select("a", "b")
         .dropDuplicates(["a", "b"])
     )
-    va = embeddings.select(F.col(id_col).alias("a"), F.col(vec_col).alias("va"))
-    vb = embeddings.select(F.col(id_col).alias("b"), F.col(vec_col).alias("vb"))
+    # norms once per vector, not per pair: a per-pair cosine is three
+    # dim-term chains, whose generated code outgrows Janino's 64 KB method
+    # limit and runs interpreted. Same expressions in the same fold order,
+    # so cos is bit-identical to cosine(va, vb, dim).
+    per_vec = embeddings.select(
+        id_col, F.col(vec_col).alias("v"), norm(vec_col, dim).alias("n")
+    )
+    cos = dot("va", "vb", dim) / (F.col("na") * F.col("nb"))
     return (
-        pairs.join(va, "a")
-        .join(vb, "b")
-        .withColumn("cos", F.round(cosine("va", "vb", dim), 6))
+        attach(pairs, per_vec, id_col)
+        .withColumn("cos", F.round(cos, 6))
         .filter(F.col("cos") >= threshold)
         .select("a", "b", "cos")
     )
