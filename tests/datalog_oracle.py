@@ -92,3 +92,24 @@ def contradiction_bindings(
         for b in _eval_body(facts, r):
             out.add((r.rule_id, frozenset((k[1:], v) for k, v in b.items())))
     return out
+
+
+def deduced_wrong_bindings(
+    facts: set[Triple], rules: list[Rule], wrong: set[Triple]
+) -> set[tuple[str, frozenset]]:
+    """Rule firings whose consequence is a known-wrong fact, as
+    (``<rule_id>#deduced-wrong``, bindings)."""
+    out = set()
+    for r in rules:
+        for b in _eval_body(facts, r):
+            for cons in r.consequences:
+                fact = tuple(
+                    b[t] if is_var(t) else t
+                    for t in (cons.subj, cons.pred, cons.obj)
+                )
+                if fact in wrong:
+                    out.add((
+                        f"{r.rule_id}#deduced-wrong",
+                        frozenset((k[1:], v) for k, v in b.items()),
+                    ))
+    return out

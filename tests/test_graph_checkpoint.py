@@ -91,3 +91,48 @@ def test_stage_store_resume(spark, string_triples, tmp_path):
     # force re-run works
     run_stage(store, spark, "edges", compute, force=True)
     assert calls["n"] == 2
+
+
+def _jobs_in_group(spark, group, fn):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.parametrize("partition_by", [None, ["pred_bucket"]],
+                         ids=["flat", "partitioned"])
+def test_stage_commit_runs_one_job_beyond_the_write(
+    spark, string_triples, tmp_path, partition_by
+):
+    """A commit runs the write's own jobs plus at most one (the schema
+    read); the manifest's per-file rows add up to the table's count, and
+    the returned table has the schema a fresh read of the stage sees."""
+    df = graph.build_edges(string_triples).localCheckpoint()
+    tag = "-".join(partition_by or ["flat"])
+
+    def plain():
+        w = df.write.mode("overwrite")
+        if partition_by:
+            w = w.partitionBy(*partition_by)
+        w.parquet(str(tmp_path / "plain"))
+
+    _, write_jobs = _jobs_in_group(spark, f"plain-write-{tag}", plain)
+    store = StageStore(tmp_path / "stages")
+    out, commit_jobs = _jobs_in_group(
+        spark, f"stage-commit-{tag}",
+        lambda: store.write(df, "edges", partition_by=partition_by),
+    )
+    assert commit_jobs <= write_jobs + 1
+    man = store.manifest("edges")
+    assert man["rows"] == out.count() == df.count()
+    assert len(man["partitions"]) == len(
+        list((tmp_path / "stages" / "edges").rglob("*.parquet"))
+    )
+    assert all(set(p) == {"file", "rows"} for p in man["partitions"])
+    reread = spark.read.parquet(str(tmp_path / "stages" / "edges"))
+    assert out.schema == reread.schema
+    assert man["schema"] == reread.schema.jsonValue()

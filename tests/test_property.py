@@ -21,7 +21,8 @@ from hypothesis import given, settings, strategies as st
 import datalog_oracle as oracle
 from zelph_spark import rules as Rz
 from zelph_spark.extract import extract_mentions, parse_entity_line
-from zelph_spark.reasoning.kernel import saturate
+from zelph_spark.reasoning.fused import binding_keys
+from zelph_spark.reasoning.kernel import saturate, sweep
 from zelph_spark.rules import P, R
 from zelph_spark.session import _jvm_size
 from zelph_spark.sparql import SparqlError, _tokenize
@@ -195,9 +196,10 @@ def _saturate(facts, rules, cap=10**6):
         np.array([code[f[k]] for f in facts], dtype=np.int64)
         for k in range(3)
     )
-    ds, dp, do, rounds = saturate(
+    facts_out, rounds = saturate(
         s, p, o, len(names), Rz.resolve_rules(rules, code), cap
     )
+    ds, dp, do = facts_out.deduced()
     deduced = {
         (names[a], names[b], names[c])
         for a, b, c in zip(ds.tolist(), dp.tolist(), do.tolist())
@@ -228,6 +230,80 @@ def test_kernel_matches_oracle_on_wikidata_rules(facts, core):
     facts = facts | core | set(Rz.BASE_FACTS)
     got, _ = _saturate(facts, Rz.wikidata_rules())
     assert got == oracle.stratified_fixpoint(facts, Rz.wikidata_rules())
+
+
+# the wikidata contradiction rules plus an inequality guard
+_CONTRA_RULES = Rz.wikidata_contradiction_rules() + [
+    R("c-two-supers", [P("?X", Rz.SUB, "?Y"), P("?X", Rz.SUB, "?Z")],
+      unequals=(("?Y", "?Z"),)),
+]
+
+
+@COMMON
+@given(
+    facts=st.sets(
+        st.tuples(
+            st.sampled_from(_WD_ENTS),
+            st.sampled_from(_WD_PREDS),
+            st.sampled_from(_WD_ENTS),
+        ),
+        max_size=24,
+    ),
+    core=st.sets(st.sampled_from(Rz.WIKIDATA_CORE_FACTS)),
+    wrong=st.sets(
+        st.tuples(
+            st.sampled_from(_WD_ENTS),
+            st.sampled_from(_WD_PREDS),
+            st.sampled_from(_WD_ENTS),
+        ),
+        max_size=6,
+    ),
+)
+def test_kernel_sweep_matches_oracle(facts, core, wrong):
+    """The in-task sweep over the saturated facts: every contradiction
+    rule's bindings (fused and per-rule key orders, the inequality as a
+    binding filter) and every #deduced-wrong firing, each distinct binding
+    once per check."""
+    rules = Rz.wikidata_rules()
+    facts = facts | core | set(Rz.BASE_FACTS) | wrong
+    names = sorted({t for f in facts for t in f}
+                   | Rz.rule_constants(rules + _CONTRA_RULES))
+    code = {v: i for i, v in enumerate(names)}
+
+    def arrays(triples):
+        return tuple(
+            np.array([code[f[k]] for f in triples], dtype=np.int64)
+            for k in range(3)
+        )
+
+    sat, _ = saturate(
+        *arrays(facts), len(names), Rz.resolve_rules(rules, code), 10**6
+    )
+    checks = [(r, None) for r in _CONTRA_RULES] + [
+        (r, j) for r in rules for j in range(len(r.consequences))
+    ]
+    coded = Rz.resolve_rules([r for r, _ in checks], code)
+    found = sweep(
+        sat,
+        [(c, binding_keys(r), None if j is None else c.consequences[j])
+         for (r, j), c in zip(checks, coded)],
+        arrays(wrong),
+        10**6,
+    )
+    got = set()
+    for (r, j), vals in zip(checks, found):
+        rows = {tuple(v) for v in vals.tolist()}
+        assert len(rows) == len(vals)  # each binding once per check
+        rid = r.rule_id if j is None else f"{r.rule_id}#deduced-wrong"
+        got |= {
+            (rid, frozenset(zip(binding_keys(r), (names[x] for x in row))))
+            for row in rows
+        }
+    saturated = oracle.stratified_fixpoint(facts, rules)
+    assert got == (
+        oracle.contradiction_bindings(saturated, _CONTRA_RULES)
+        | oracle.deduced_wrong_bindings(saturated, rules, wrong)
+    )
 
 
 # hand rules for the shapes the wikidata set lacks

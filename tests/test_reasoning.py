@@ -4,6 +4,7 @@ test_stratified / test_seminaive suites)."""
 
 from __future__ import annotations
 
+import json
 import math
 
 import pandas as pd
@@ -32,14 +33,19 @@ def _edge_set(df):
     return {(r.subj, r.pred, r.obj) for r in df.collect()}
 
 
-def _both_paths(spark, monkeypatch, facts, rules, wrong_facts=None):
+def _both_paths(
+    spark, monkeypatch, facts, rules, wrong_facts=None, contradiction_rules=None
+):
     """The fixpoint of ``facts`` on both paths: the in-task kernel (the
     default budget) and the distributed loop (``LOCAL_ROWS = 0``)."""
     edges = _df(spark, facts)
     out = []
     for rows, declined in ((single_task.LOCAL_ROWS, None), (0, "budget")):
         monkeypatch.setattr(single_task, "LOCAL_ROWS", rows)
-        res = run_fixpoint(edges, rules, wrong_facts=wrong_facts)
+        res = run_fixpoint(
+            edges, rules, contradiction_rules=contradiction_rules,
+            wrong_facts=wrong_facts,
+        )
         assert res.log[0].get("declined") == declined
         out.append(res)
     return out
@@ -528,6 +534,142 @@ def test_kernel_overflow_leaves_no_failed_task(spark, monkeypatch):
     assert sum(st.numFailedTasks for st in stages if st) == 0
     assert res.log[0] == {"stratum": "kernel", "declined": "fixpoint overflow"}
     assert got == oracle.stratified_fixpoint(set(facts), [META_TRANS])
+
+
+def _sweep_log(res):
+    (entry,) = [e for e in res.log if e["stratum"] == "contra-plan"]
+    return entry["sweep"]
+
+
+def _contradiction_rows(res):
+    """Every contradiction row as (rule_id, bindings JSON), duplicates kept
+    and key order included, sorted."""
+    return sorted(
+        (r.rule_id, r.b) for r in res.contradictions.select(
+            "rule_id", F.to_json("bindings").alias("b")
+        ).collect()
+    )
+
+
+@pytest.mark.parametrize("ids", ["string", "long"])
+def test_kernel_sweep_matches_spark_sweep(spark, fixture_facts, monkeypatch, ids):
+    """The saturate task's contradiction sweep equals the Spark sweep row
+    for row, bindings JSON included: contradiction rules of both key orders
+    (fused c-isa-and-sub keeps n1s, n1o, n2o; per-rule c-isa-cycle sorts)
+    and #deduced-wrong firings of known-wrong facts."""
+    rules, crules = Rz.wikidata_rules(), Rz.wikidata_contradiction_rules()
+    wrong = {("Q100", "P31", "Q215627"), ("Q213", "P527", "Q212"),
+             ("Q202", "P461", "Q201")}
+    facts = fixture_facts | wrong
+    if ids == "long":
+        names = sorted({t for f in facts for t in f}
+                       | Rz.rule_constants(rules + crules))
+        node = {v: 10**12 - 7 * i for i, v in enumerate(names)}
+        facts = {tuple(node[t] for t in f) for f in facts}
+        wrong = {tuple(node[t] for t in f) for f in wrong}
+        rules, crules = (Rz.resolve_rules(r, node) for r in (rules, crules))
+    kern, loop = _both_paths(
+        spark, monkeypatch, sorted(facts), rules, _df(spark, sorted(wrong)),
+        crules,
+    )
+    assert (_sweep_log(kern), _sweep_log(loop)) == ("kernel", "loop")
+    got = _contradiction_rows(kern)
+    assert got == _contradiction_rows(loop)
+    assert {r for r, _ in got} >= {
+        "c-isa-cycle", "c-isa-and-sub", "subclass-lift#deduced-wrong",
+        "opp-sym#deduced-wrong",
+    }
+    keys = {r: list(json.loads(b)) for r, b in got}
+    assert keys["c-isa-and-sub"] == ["X", "A", "B"]
+    assert keys["c-isa-cycle"] == ["A", "B"]
+    want = oracle.contradiction_bindings(
+        oracle.stratified_fixpoint(facts, rules), crules
+    )
+    plain = {
+        (r.rule_id, frozenset((k, str(v)) for k, v in r.bindings.items()))
+        for r in kern.contradictions.collect() if "#" not in r.rule_id
+    }
+    assert plain == {(r, frozenset((k, str(v)) for k, v in b)) for r, b in want}
+
+
+def test_wrong_facts_over_budget_keep_the_saturation(
+    spark, fixture_facts, monkeypatch
+):
+    """The distinct facts and the rule constants fit LOCAL_ROWS but the
+    (duplicated) known-wrong facts would not: the saturation still runs in
+    the task, without the wrong facts, and the whole sweep runs in Spark,
+    row for row the loop's."""
+    rules, crules = Rz.wikidata_rules(), Rz.wikidata_contradiction_rules()
+    wrong = [("Q100", "P31", "Q215627"), ("Q213", "P527", "Q212")] * 2
+    facts = sorted(fixture_facts | set(wrong))
+    fits = len(facts) + len(Rz.rule_constants(rules + crules))
+    (loop,) = _both_paths(
+        spark, monkeypatch, facts, rules, _df(spark, wrong), crules
+    )[1:]
+    monkeypatch.setattr(single_task, "LOCAL_ROWS", fits)
+    res = run_fixpoint(
+        _df(spark, facts), rules, contradiction_rules=crules,
+        wrong_facts=_df(spark, wrong),
+    )
+    assert res.log[0]["stratum"] == "kernel" and "declined" not in res.log[0]
+    assert _sweep_log(res) == "budget"
+    assert _edge_set(res.edges) == _edge_set(loop.edges)
+    got = _contradiction_rows(res)
+    assert got == _contradiction_rows(loop)
+    assert {r for r, _ in got} >= {"subclass-lift#deduced-wrong"}
+    # one more wrong row fits: the task sweeps
+    monkeypatch.setattr(single_task, "LOCAL_ROWS", fits + len(wrong))
+    res = run_fixpoint(
+        _df(spark, facts), rules, contradiction_rules=crules,
+        wrong_facts=_df(spark, wrong),
+    )
+    assert _sweep_log(res) == "kernel"
+    assert _contradiction_rows(res) == got
+
+
+def test_sweep_overflow_keeps_the_saturation(spark, monkeypatch):
+    """A contradiction rule whose cross product outgrows ROW_CAP while the
+    saturation fits: the kernel's saturation stands, only the sweep falls
+    back to Spark, and no task fails."""
+    facts = [(f"a{i}", "p", f"b{i}") for i in range(20)]
+    facts += [(f"c{i}", "q", f"d{i}") for i in range(20)]
+    rule = R("pq", [P("?X", "p", "?Y")], P("?Y", "r", "?X"))
+    cross = R("c-cross", [P("?A", "p", "?B"), P("?C", "q", "?D")])
+    monkeypatch.setattr(kernel, "ROW_CAP", 100)
+    sc = spark.sparkContext
+    group = "test-fixpoint-sweep-overflow"
+    sc.setJobGroup(group, "fixpoint sweep overflow")
+    try:
+        res = run_fixpoint(_df(spark, facts), [rule], contradiction_rules=[cross])
+        got = _edge_set(res.edges)
+        n_contra = res.contradictions.count()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    tracker = sc.statusTracker()
+    stages = [
+        tracker.getStageInfo(sid)
+        for jid in tracker.getJobIdsForGroup(group)
+        for sid in tracker.getJobInfo(jid).stageIds
+    ]
+    assert sum(st.numFailedTasks for st in stages if st) == 0
+    assert res.log[0]["stratum"] == "kernel" and "declined" not in res.log[0]
+    assert _sweep_log(res) == "overflow"
+    assert got == oracle.stratified_fixpoint(set(facts), [rule])
+    assert res.n_deduced == 20
+    assert n_contra == 400
+
+
+def test_naf_contradiction_rule_takes_the_spark_sweep(spark):
+    facts = [("a", "p", "b"), ("c", "p", "d"), ("c", "q", "d")]
+    lonely = R("c-lonely", [P("?X", "p", "?Y"), P("?X", "q", "?Y")],
+               negated=(1,))
+    res = run_fixpoint(_df(spark, facts), [], contradiction_rules=[lonely])
+    assert res.log[0]["stratum"] == "kernel" and "declined" not in res.log[0]
+    assert _sweep_log(res) == "naf"
+    got = {(r.rule_id, frozenset(r.bindings.items()))
+           for r in res.contradictions.collect()}
+    assert got == oracle.contradiction_bindings(set(facts), [lonely])
+    assert got == {("c-lonely", frozenset({("X", "a"), ("Y", "b")}))}
 
 
 @pytest.mark.parametrize("rows", [2_000_000, 0], ids=["kernel", "loop"])

@@ -83,3 +83,35 @@ def test_null_ids_decline(spark):
         [edges], _closure_kernel, closure.PAIR
     )
     assert (out, reason) == (None, "nulls")
+
+
+def test_optional_input_left_out_over_budget(spark, monkeypatch):
+    """An ``optional`` last input that alone breaks the budget is left out
+    of the task (the kernel gets one input, one size comes back); once it
+    fits, it is loaded. ``passthrough`` columns come back undecoded."""
+    edges = _df(spark, CHAIN)
+    facts = _df(spark, FACTS, ("subj", "pred", "obj"))
+
+    def kernel(c, n):
+        import numpy as np
+
+        (s, o), *rest = c
+        return [np.full(len(s), len(rest), np.int64), s]
+
+    for budget, given in ((40, 1), (50, 2)):
+        monkeypatch.setattr(single_task, "LOCAL_ROWS", budget)
+        out, sizes = single_task.run_single_task(
+            [edges, facts], kernel, ["inputs", "subj"],
+            passthrough=("inputs",), optional=1,
+        )
+        assert sizes == [len(CHAIN), len(FACTS)][:given]
+        assert dict(out.dtypes)["inputs"] == "bigint"
+        assert {tuple(r) for r in out.collect()} == {
+            (given - 1, s) for s, _ in CHAIN
+        }
+    monkeypatch.setattr(single_task, "LOCAL_ROWS", 19)
+    out, reason = single_task.run_single_task(
+        [edges, facts], kernel, ["inputs", "subj"],
+        passthrough=("inputs",), optional=1,
+    )
+    assert (out, reason) == (None, "budget")

@@ -1,7 +1,7 @@
 """Per-stage checkpointing with lineage counters and resume.
 
 The resumability contract (BASELINE.json north_rule): each pipeline stage
-writes its output table plus a manifest (row count, per-partition counters,
+writes its output table plus a manifest (row count, per-file counters,
 schema) before the next stage starts; a killed run re-executes only the
 stages whose manifest is missing. This is the parquet-backed stand-in for
 Iceberg snapshot commits (SURVEY.md §2.1 S6/S7 — on a cluster the writer
@@ -19,7 +19,8 @@ import shutil
 import time
 from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+import pyarrow.parquet as pq
+from pyspark.sql import DataFrame, SparkSession
 
 MANIFEST = "_zelph_manifest.json"
 
@@ -46,8 +47,9 @@ class StageStore:
         stage: str,
         partition_by: list[str] | None = None,
     ) -> DataFrame:
-        """Write df atomically with lineage counters; returns the re-read
-        (checkpointed) DataFrame so downstream lineage starts at the scan."""
+        """Write df atomically with lineage counters; returns the written
+        table so downstream lineage starts at the scan. ``partitions`` has
+        one entry per written file (path, footer row count)."""
         final = self._dir(stage)
         tmp = self.root / f"{stage}.tmp"
         if tmp.exists():
@@ -56,27 +58,28 @@ class StageStore:
         if partition_by:
             writer = writer.partitionBy(*partition_by)
         writer.parquet(str(tmp))
-        # per-partition lineage counters (north_rule: lineage + metrics)
-        reread = df.sparkSession.read.parquet(str(tmp))
-        part_counts = [
-            {"partition": int(r.pid), "rows": int(r.cnt)}
-            for r in reread.groupBy(
-                F.spark_partition_id().alias("pid")
-            ).agg(F.count(F.lit(1)).alias("cnt")).collect()
+        # per-file lineage counters (north_rule: lineage + metrics) from
+        # the footers, no job: Iceberg manifests count data files this way
+        files = [
+            {"file": str(f.relative_to(tmp)),
+             "rows": pq.read_metadata(f).num_rows}
+            for f in sorted(tmp.rglob("*.parquet"))
         ]
+        # as a reader sees it (partition columns last), inferred once
+        schema = df.sparkSession.read.parquet(str(tmp)).schema
         manifest = {
             "stage": stage,
-            "rows": sum(p["rows"] for p in part_counts),
-            "partitions": part_counts,
+            "rows": sum(f["rows"] for f in files),
+            "partitions": files,
             "partition_by": partition_by or [],
-            "schema": reread.schema.jsonValue(),
+            "schema": schema.jsonValue(),
             "written_at": time.time(),
         }
         (tmp / MANIFEST).write_text(json.dumps(manifest, indent=1))
         if final.exists():
             shutil.rmtree(final)
         tmp.rename(final)
-        return df.sparkSession.read.parquet(str(final))
+        return df.sparkSession.read.schema(schema).parquet(str(final))
 
     def read(self, spark: SparkSession, stage: str) -> DataFrame:
         return spark.read.parquet(str(self._dir(stage)))

@@ -222,7 +222,7 @@ class GraphNet:
         ws = [w.copy() for w in self._w]
         n_layers = len(ws)
 
-        def _fwd(v):
+        def _fwd(v: pd.Series) -> pd.Series:
             mat = np.vstack(v.to_numpy()).astype(np.float64)
             for k, wm in enumerate(ws):
                 mat = mat @ wm.T
@@ -230,9 +230,7 @@ class GraphNet:
                     mat = np.maximum(0.0, mat)
             return pd.Series(list(mat))
 
-        from pyspark.sql.functions import PandasUDFType
-
-        fwd = pandas_udf(_fwd, "array<double>", PandasUDFType.SCALAR)
+        fwd = pandas_udf(_fwd, "array<double>")
         return df.withColumn(out_col, fwd(F.col(input_col)))
 
 

@@ -2,9 +2,12 @@
 
 A bounded positive ruleset saturates in one task:
 :func:`zelph_spark.reasoning.kernel.saturate` through
-:func:`zelph_spark.single_task.run_single_task`, over two inputs, the
-distinct edges and the rule constants (so a constant no fact mentions still
-gets a code). The saturated set is ``base ∪ deduced``. The first
+:func:`zelph_spark.single_task.run_single_task`, over the distinct edges,
+the rule constants (so a constant no fact mentions still gets a code) and
+the known-wrong facts. The same task then sweeps the saturated facts for
+contradictions (:func:`zelph_spark.reasoning.kernel.sweep`), and its rows
+come back tagged: tag 0 is a deduced fact, tag k a contradiction of the
+k-th check. The saturated set is ``base ∪ deduced``. The first
 ``fixpoint_log`` entry records the choice (stratum ``kernel``).
 
 On any decline the semi-naive loop below runs instead: a ruleset outside
@@ -43,12 +46,18 @@ distributed analog of ``Reasoning::run`` (``reasoning.cpp:57-211``) and
   plus the delta files — fixpoint lineage otherwise grows linearly and
   re-executes from scratch (§7 hard part 1).
 
-Either way, contradictions never feed the saturation:
-:func:`contradiction_sweep` evaluates the contradiction rules (consequence
-``!``) once against the saturated graph, together with rule firings that
-re-deduce a known-wrong fact, and returns (rule_id, bindings) rows — the
-distributed form of zelph's counted ``contradiction_error`` records
-(``reasoning_deduce.cpp:131-133``).
+Either way, contradictions never feed the saturation: they are evaluated
+once against the saturated graph — the contradiction rules (consequence
+``!``) together with rule firings that re-deduce a known-wrong fact — and
+come back as (rule_id, bindings) rows, the distributed form of zelph's
+counted ``contradiction_error`` records (``reasoning_deduce.cpp:131-133``).
+The kernel sweeps inside the saturate task; the Spark sweep
+(:func:`contradiction_sweep`) runs after the loop, for a contradiction
+rule with NAF, when the known-wrong facts alone would break the task's
+``LOCAL_ROWS`` budget or the kernel's sweep overflows ``kernel.ROW_CAP``
+(either way the task's saturation stands), and on the pipeline's resume
+path. The
+``contra-plan`` log entry's ``sweep`` says which ran and why.
 
 :func:`verify_fixpoint` ports the reference's semi-naive safety net
 (``reasoning_seminaive.cpp:386-407``): one classic pass over the result must
@@ -72,9 +81,14 @@ from ..session import literal
 from ..single_task import run_single_task
 from . import kernel
 from .compiler import compile_rule_body, project_consequence
-from .fused import fire_contradictions_fused, fire_fused, fuse_contradiction_rules, fuse_rules
+from .fused import (
+    binding_keys, fire_contradictions_fused, fire_fused,
+    fuse_contradiction_rules, fuse_rules,
+)
 
 EDGE_COLS = ["subj", "pred", "obj"]
+# the saturate task's row tag: 0 a deduced fact, k >= 1 a row of check k
+_TAG = "_tag"
 _PARALLELISM_FIRST = "spark.sql.adaptive.coalescePartitions.parallelismFirst"
 
 
@@ -290,7 +304,7 @@ def deduced_wrong_contradictions(
         if not cons:
             continue
         b = compile_rule_body(rule, edges)
-        bcols = sorted(b.columns)
+        bcols = binding_keys(rule)
         for c in cons:
             def term(t):
                 return F.col(t[1:]) if is_var(t) else F.lit(t)
@@ -400,9 +414,19 @@ class _MaxParam(AccumulatorParam):
         return max(a, b)
 
 
-def _kernel_fixpoint(base: DataFrame, rules: list[Rule]):
-    """Saturate ``base`` in one task (module docstring). Returns
-    ``(deduced, (rounds, n_deduced))``, or ``(None, reason)``."""
+def _kernel_fixpoint(
+    base: DataFrame,
+    rules: list[Rule],
+    contradiction_rules: list[Rule],
+    wrong_facts: DataFrame | None,
+):
+    """Saturate ``base`` in one task and sweep the result in the same task
+    (module docstring). Returns ``(deduced, (rounds, n_deduced,
+    contradictions, sweep))``, where ``contradictions`` is None when the
+    sweep must run in Spark and ``sweep`` says where it ran, or ``(None,
+    reason)``. The known-wrong facts are an optional input: when they alone
+    break the task's budget, the saturation still runs in the task and the
+    whole sweep runs in Spark (``sweep`` = ``budget``)."""
     if not kernel.in_fragment(rules):
         return None, "fragment"
     spark = base.sparkSession
@@ -411,31 +435,95 @@ def _kernel_fixpoint(base: DataFrame, rules: list[Rule]):
         str if isinstance(id_t, T.StringType)
         else int if isinstance(id_t, T.IntegralType) else None
     )
-    consts = sorted(rule_constants(rules))
+    # a NAF contradiction rule keeps the whole sweep in Spark
+    sweep = "naf" if any(r.negated for r in contradiction_rules) else "kernel"
+    checks = []
+    if sweep == "kernel":
+        checks = [(r, binding_keys(r), None) for r in contradiction_rules]
+        if wrong_facts is not None:
+            checks += [
+                (r, binding_keys(r), j)
+                for r in rules for j in range(len(r.consequences))
+            ]
+    consts = sorted(rule_constants(rules + [c[0] for c in checks]))
     if py_t is None or any(type(c) is not py_t for c in consts):
         return None, "types"
     # sized: an unknown size would reach every plan over the saturated edges
     const_df = literal(spark, [(c,) for c in consts], T.StructType([T.StructField("c", id_t)]))
+    inputs = [base, const_df]
+    need_wrong = any(j is not None for _, _, j in checks)
+    if need_wrong:
+        inputs.append(wrong_facts.select(*EDGE_COLS))
+    width = max([3] + [len(keys) for _, keys, _ in checks])
+    columns = [_TAG, *EDGE_COLS] + [f"_b{j}" for j in range(3, width)]
     cap = kernel.ROW_CAP
     sc = spark.sparkContext
-    rounds, n_new = (sc.accumulator(0, _MaxParam()) for _ in range(2))
+    rounds, n_new, swept_over = (
+        sc.accumulator(0, _MaxParam()) for _ in range(3)
+    )
 
     def run(codes, n):
         import numpy as np
 
-        (s, p, o), (c,) = codes
+        (s, p, o), (c,), *wrong = codes
         # codes follow id order, so the sorted distinct constant codes line
         # up with the sorted constants
-        coded = resolve_rules(rules, dict(zip(consts, np.unique(c).tolist())))
-        ds, dp, do, r = kernel.saturate(s, p, o, n, coded, cap)
-        rounds.add(r)
+        code = dict(zip(consts, np.unique(c).tolist()))
+        facts, n_rounds = kernel.saturate(
+            s, p, o, n, resolve_rules(rules, code), cap
+        )
+        ds, dp, do = facts.deduced()
+        rounds.add(n_rounds)
         n_new.add(len(ds))
-        return ds, dp, do
+        found = [np.column_stack((ds, dp, do))]
+        coded = [
+            (r, keys, None if j is None else r.consequences[j])
+            for r, (_, keys, j) in zip(
+                resolve_rules([r for r, _, _ in checks], code), checks
+            )
+        ]
+        # wrong facts left out of the task (budget): Spark sweeps
+        if wrong or not need_wrong:
+            try:
+                found += kernel.sweep(
+                    facts, coded, wrong[0] if wrong else None, cap
+                )
+            except OverflowError:
+                swept_over.add(1)
+        # tag k: row k-1 of checks (0: deduced); short rows pad with code 0
+        tags = np.repeat(np.arange(len(found)), [len(v) for v in found])
+        vals = np.vstack(
+            [np.pad(v, ((0, 0), (0, width - v.shape[1]))) for v in found]
+        )
+        return [tags, *vals.T]
 
-    deduced, reason = run_single_task([base, const_df], run, EDGE_COLS)
-    if deduced is None:
-        return None, reason
-    return deduced, (rounds.value, n_new.value)
+    out, sizes = run_single_task(
+        inputs, run, columns, passthrough=(_TAG,), optional=int(need_wrong)
+    )
+    if out is None:
+        return None, sizes
+    deduced = out.where(F.col(_TAG) == 0).select(*EDGE_COLS)
+    contradictions = None
+    if len(sizes) < len(inputs):
+        sweep = "budget"
+    elif swept_over.value:
+        sweep = "overflow"
+    elif sweep == "kernel":
+        tagged = literal(
+            spark,
+            [(k, r.rule_id if j is None else f"{r.rule_id}#deduced-wrong",
+              keys)
+             for k, (r, keys, j) in enumerate(checks, 1)],
+            f"{_TAG} long, rule_id string, keys array<string>",
+        )
+        values = F.array(*[F.col(c).cast("string") for c in columns[1:]])
+        contradictions = out.join(F.broadcast(tagged), _TAG).select(
+            "rule_id",
+            F.map_from_arrays(
+                "keys", F.slice(values, 1, F.size("keys"))
+            ).alias("bindings"),
+        )
+    return deduced, (rounds.value, n_new.value, contradictions, sweep)
 
 
 def _run_fixpoint_inner(
@@ -444,20 +532,25 @@ def _run_fixpoint_inner(
     spark = edges.sparkSession
     base = edges.select(*EDGE_COLS).dropDuplicates(EDGE_COLS).localCheckpoint()
     _t0 = time.time()
-    deduced, info = _kernel_fixpoint(base, rules)
+    deduced, info = _kernel_fixpoint(
+        base, rules, contradiction_rules or [], wrong_facts
+    )
     if deduced is not None:
-        rounds, n_new = info
+        rounds, n_new, contradictions, sweep = info
         log = [{"iter": rounds, "stratum": "kernel", "new": n_new,
                 "sec": round(time.time() - _t0, 2)}]
         full = base.unionByName(deduced)
-        # the predicate set in one scan without a shuffle
-        obs = Observation()
-        full.observe(obs, F.collect_set("pred").alias("preds")).write.format(
-            "noop"
-        ).mode("overwrite").save()
+        present = None
+        if contradictions is None:
+            # the Spark sweep's predicate set in one scan without a shuffle
+            obs = Observation()
+            full.observe(obs, F.collect_set("pred").alias("preds")).write.format(
+                "noop"
+            ).mode("overwrite").save()
+            present = set(obs.get["preds"])
         return _finish(
-            full, deduced, set(obs.get["preds"]), rules,
-            contradiction_rules, wrong_facts, rounds, n_new, log,
+            full, deduced, present, rules, contradiction_rules, wrong_facts,
+            rounds, n_new, log, contradictions, sweep,
         )
     log = [{"stratum": "kernel", "declined": info}]
     positive = [r for r in rules if not r.negated]
@@ -735,24 +828,28 @@ def _run_fixpoint_inner(
     deduced = full.join(base, on=EDGE_COLS, how="left_anti")
     return _finish(
         full, deduced, present, rules, contradiction_rules, wrong_facts,
-        iterations, total_new, log,
+        iterations, total_new, log, None, "loop",
     )
 
 
 def _finish(
     full, deduced, present, rules, contradiction_rules, wrong_facts,
-    iterations, n_deduced, log,
+    iterations, n_deduced, log, contradictions, sweep,
 ) -> FixpointResult:
-    """Plan the contradiction sweep over the saturated ``full`` and wrap
-    the result."""
-    # plan construction is lazy but deduced_wrong_contradictions runs one
-    # EAGER job (the wrong-predicate collect) — timed so the e2e
-    # decomposition can see the sweep's driver-side share
+    """Plan the Spark contradiction sweep over the saturated ``full``
+    unless the kernel already swept it, and wrap the result. ``sweep``
+    (``kernel``, or why the Spark sweep runs: ``naf``, ``budget``,
+    ``overflow``, ``loop``) lands in the ``contra-plan`` log entry."""
+    # the Spark sweep's plan construction is lazy but
+    # deduced_wrong_contradictions runs one EAGER job (the wrong-predicate
+    # collect) — timed so the e2e decomposition can see its driver share
     _t0 = time.time()
-    contradictions = contradiction_sweep(
-        full, rules, contradiction_rules or [], wrong_facts, present
-    )
-    log.append({"stratum": "contra-plan", "sec": round(time.time() - _t0, 2)})
+    if contradictions is None:
+        contradictions = contradiction_sweep(
+            full, rules, contradiction_rules or [], wrong_facts, present
+        )
+    log.append({"stratum": "contra-plan", "sweep": sweep,
+                "sec": round(time.time() - _t0, 2)})
     return FixpointResult(
         edges=full,
         deduced=deduced,
@@ -805,7 +902,7 @@ def evaluate_contradictions(
             continue
         b = compile_rule_body(rule, edges)
         kvs = []
-        for c in sorted(b.columns):
+        for c in binding_keys(rule):
             kvs += [F.lit(c), F.col(c).cast("string")]
         outs.append(
             b.select(

@@ -160,6 +160,20 @@ def _binding_names(r: Rule, shape) -> dict | None:
     return names
 
 
+def binding_keys(rule: Rule) -> list[str]:
+    """Key order of the ``bindings`` map a rule's contradiction rows carry
+    (``to_json`` keeps it): a fused contradiction rule's name columns n1s,
+    n1o, n2s, n2o, skipping NULLs; any other rule's body variables, sorted
+    (per-rule contradictions and ``#deduced-wrong`` rows)."""
+    shaped = _shape(rule)
+    names = shaped and _binding_names(rule, shaped[0])
+    if not names:
+        return sorted(
+            {v[1:] for i in rule.positive for v in rule.conditions[i].variables}
+        )
+    return [names[c] for c in _NAME_COLS if names.get(c) is not None]
+
+
 def fuse_rules(rules: list[Rule]) -> FusedGroups:
     """Split a deduction ruleset into fused groups + leftover (per-rule)."""
     return _group(rules, _consequence_cols)

@@ -21,6 +21,14 @@ the whole stratum there. It is the vectorized form of
 - a round's new facts are its candidates minus the known facts, a sorted
   set difference.
 
+Every rule body, deduction or contradiction, goes through one matcher,
+:func:`_bindings` (``unequals`` is a binding filter there). After the
+fixpoint, :func:`sweep` runs the contradiction sweep in the same task over
+the saturated facts: each contradiction rule's matches, and each
+deduction consequence fired once and tested against the known-wrong facts
+(the ``#deduced-wrong`` check). Its overflow leaves the saturation
+standing; ``run_fixpoint`` then sweeps in Spark.
+
 The fragment is :func:`in_fragment`: no NAF, no ``unequals``, no fresh
 variables; extra consequences and variable predicates are fine, which
 covers all 22 wikidata.zph deduction rules.
@@ -81,6 +89,7 @@ class _Facts:
     def __init__(self, n: int):
         self.n = n
         self.key: dict[int, np.ndarray] = {}
+        self.base: dict[int, np.ndarray] = {}
         self._rev: dict[int, np.ndarray] = {}
 
     def add(self, p: int, keys):
@@ -96,6 +105,27 @@ class _Facts:
                 np.concatenate((self._rev[p], _swap(keys, self.n))),
                 kind="stable",
             )
+
+    @classmethod
+    def of(cls, s, p, o, n: int) -> "_Facts":
+        """The distinct facts of code arrays ``(s, p, o)``."""
+        facts = cls(n)
+        for pv, rows in _groups(p):
+            facts.add(pv, np.unique(s[rows] * n + o[rows]))
+        return facts
+
+    def deduced(self):
+        """``(s, p, o)`` code arrays of every key not in ``self.base``."""
+        new = {
+            pv: k[~_member(self.base[pv], k)] if pv in self.base else k
+            for pv, k in self.key.items()
+        }
+        keys = np.concatenate(list(new.values()) + [np.empty(0, np.int64)])
+        preds = np.repeat(
+            np.fromiter(new, dtype=np.int64, count=len(new)),
+            [len(k) for k in new.values()],
+        )
+        return keys // self.n, preds, keys % self.n
 
     def rev(self, p: int):
         if p not in self._rev:
@@ -182,24 +212,40 @@ def _condition(tab, m, pat, facts, cap):
     }
 
 
+def _term(tab, m, t):
+    """A rule term's value per binding row: its column, or the constant."""
+    return tab[t] if is_var(t) else np.full(m, t, dtype=np.int64)
+
+
+def _bindings(rule, facts, cap, order=None, delta=None, at=None):
+    """The one body matcher: ``rule``'s positive conditions joined in
+    ``order`` (default :func:`~.compiler.order_conditions`), position
+    ``at`` over ``delta`` and the rest over ``facts``, then its
+    ``unequals`` as a binding filter. Returns ``(rows, {var: values})``;
+    the table is incomplete when rows is 0."""
+    tab, m = {}, 1
+    for i in order_conditions(rule) if order is None else order:
+        m, tab = _condition(
+            tab, m, rule.conditions[i], delta if i == at else facts, cap
+        )
+        if m == 0:
+            return 0, tab
+    for a, b in rule.unequals:
+        keep = _term(tab, m, a) != _term(tab, m, b)
+        m, tab = int(keep.sum()), {v: x[keep] for v, x in tab.items()}
+    return m, tab
+
+
 def _fire(rule, order, facts, delta, at, cands, cap):
     """Evaluate one rule body (position ``at`` over ``delta``, the rest
     over ``facts``), add its consequence keys to ``cands[pred]`` and return
     how many it added."""
     n = facts.n
-    tab, m = {}, 1
-    for i in order:
-        m, tab = _condition(
-            tab, m, rule.conditions[i], delta if i == at else facts, cap
-        )
-        if m == 0:
-            return 0
-
-    def term(t):
-        return tab[t] if is_var(t) else np.full(m, t, dtype=np.int64)
-
+    m, tab = _bindings(rule, facts, cap, order, delta, at)
+    if m == 0:
+        return 0
     for c in rule.consequences:
-        key = term(c.subj) * n + term(c.obj)
+        key = _term(tab, m, c.subj) * n + _term(tab, m, c.obj)
         if is_var(c.pred):
             for p, rows in _groups(tab[c.pred]):
                 cands.setdefault(p, []).append(key[rows])
@@ -212,18 +258,17 @@ def saturate(s, p, o, n: int, rules: list[Rule], cap: int):
     """Positive fixpoint of the facts ``(s, p, o)`` (int64 code arrays,
     codes below ``n``) under ``rules``, whose constants are codes too.
 
-    Returns ``(ds, dp, do, rounds)``: the deduced facts only, and the
-    number of evaluation rounds (the last one deduces nothing). Raises
+    Returns ``(facts, rounds)``: the saturated :class:`_Facts` (its
+    :meth:`~_Facts.deduced` are the new facts only) and the number of
+    evaluation rounds (the last one deduces nothing). Raises
     ``OverflowError`` when pair keys would overflow int64, or when the
     known facts, any binding table or one round's candidates exceed
     ``cap`` rows."""
     if n * n >= 1 << 62:
         raise OverflowError(_OVERFLOW)
-    facts = _Facts(n)
-    for pv, rows in _groups(p):
-        facts.add(pv, np.unique(s[rows] * n + o[rows]))
-    base = dict(facts.key)
-    known = sum(len(k) for k in base.values())
+    facts = _Facts.of(s, p, o, n)
+    facts.base = dict(facts.key)
+    known = sum(len(k) for k in facts.base.values())
     if known > cap:
         raise OverflowError(_OVERFLOW)
     seeded = [
@@ -257,20 +302,48 @@ def saturate(s, p, o, n: int, rules: list[Rule], cap: int):
             if len(k):
                 delta.add(pv, k)
         if not delta.key:
-            break
+            return facts, rounds
         known += sum(len(k) for k in delta.key.values())
         if known > cap:
             raise OverflowError(_OVERFLOW)
         for pv, k in delta.key.items():
             facts.add(pv, k)
-    # the deduced facts: every known key minus the base keys
-    new = {
-        pv: k[~_member(base[pv], k)] if pv in base else k
-        for pv, k in facts.key.items()
-    }
-    keys = np.concatenate(list(new.values()) + [np.empty(0, np.int64)])
-    preds = np.repeat(
-        np.fromiter(new, dtype=np.int64, count=len(new)),
-        [len(k) for k in new.values()],
-    )
-    return keys // n, preds, keys % n, rounds
+
+
+def sweep(facts, checks, wrong, cap: int) -> list:
+    """The contradiction sweep over saturated ``facts``, one binding table
+    per entry of ``checks``, each a ``(rule, keys, consequence)`` triple:
+
+    - ``consequence`` None: every match of the contradiction ``rule``;
+    - else the ``#deduced-wrong`` check: each firing of the deduction
+      ``rule`` whose ``consequence`` is one of the ``wrong`` facts
+      (``(s, p, o)`` code arrays, or None), each distinct binding once.
+
+    Returns, per check, an int64 array with one row per hit and one
+    column per variable name in ``keys``. Raises ``OverflowError`` when a
+    binding table, or all hits together, exceed ``cap`` rows."""
+    n = facts.n
+    wrong = _Facts(n) if wrong is None else _Facts.of(*wrong, n)
+    out, total = [], 0
+    for rule, keys, cons in checks:
+        if cons is not None and not wrong.key:
+            out.append(np.empty((0, len(keys)), dtype=np.int64))
+            continue
+        m, tab = _bindings(rule, facts, cap)
+        if m and cons is not None:
+            key = _term(tab, m, cons.subj) * n + _term(tab, m, cons.obj)
+            hit = np.zeros(m, dtype=bool)
+            for pv, rows in _groups(_term(tab, m, cons.pred)):
+                if pv in wrong.key:
+                    hit[rows] = _member(wrong.key[pv], key[rows])
+            m, tab = int(hit.sum()), {v: x[hit] for v, x in tab.items()}
+        vals = np.empty((m, len(keys)), dtype=np.int64)
+        for j, k in enumerate(keys if m else ()):  # no rows: tab incomplete
+            vals[:, j] = tab[f"?{k}"]
+        if cons is not None:
+            vals = np.unique(vals, axis=0)
+        total += len(vals)
+        if total > cap:
+            raise OverflowError(_OVERFLOW)
+        out.append(vals)
+    return out

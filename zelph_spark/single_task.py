@@ -22,7 +22,13 @@ LOCAL_ROWS = 2_000_000
 _CHUNK = 1_000_000
 
 
-def run_single_task(inputs: list[DataFrame], kernel, columns: list[str]):
+def run_single_task(
+    inputs: list[DataFrame],
+    kernel,
+    columns: list[str],
+    passthrough: tuple[str, ...] = (),
+    optional: int = 0,
+):
     """Run ``kernel`` over all of ``inputs`` in one task.
 
     Every column of every input is an id column, all of one type.
@@ -30,11 +36,16 @@ def run_single_task(inputs: list[DataFrame], kernel, columns: list[str]):
     per column, row-aligned) over ``n`` distinct ids; code order is id
     order (factorize ``sort=True``), so min code == min id. It returns one
     code array per output column in ``columns``, or raises
-    ``OverflowError(reason)``.
+    ``OverflowError(reason)``. The output columns named in ``passthrough``
+    are not id columns: their int64 values pass through undecoded.
 
-    Returns ``(checkpointed DataFrame, rows per input)``, or ``(None,
-    reason)`` with reason ``"types"``, ``"nulls"``, ``"budget"`` or the
-    kernel's overflow reason.
+    The last ``optional`` inputs are left out when all inputs exceed
+    ``LOCAL_ROWS`` but the others fit: the kernel then gets fewer inputs,
+    and fewer sizes come back.
+
+    Returns ``(checkpointed DataFrame, rows per input given to the
+    kernel)``, or ``(None, reason)`` with reason ``"types"``, ``"nulls"``,
+    ``"budget"`` or the kernel's overflow reason.
     """
     types = {f.dataType for df in inputs for f in df.schema.fields}
     if len(types) != 1:
@@ -64,8 +75,14 @@ def run_single_task(inputs: list[DataFrame], kernel, columns: list[str]):
     sizes, nulls = list(row[:-1]), row[-1]
     if nulls:
         return None, "nulls"
-    if sum(sizes) > LOCAL_ROWS:
-        return None, "budget"
+    keep = len(inputs)
+    while sum(sizes[:keep]) > LOCAL_ROWS:
+        if keep == len(inputs) - optional:
+            return None, "budget"
+        keep -= 1
+    if keep < len(inputs):
+        sizes, widths = sizes[:keep], widths[:keep]
+        tagged = tagged.where(F.col("_k") < keep)
 
     def task(batches):
         import numpy as np
@@ -99,14 +116,16 @@ def run_single_task(inputs: list[DataFrame], kernel, columns: list[str]):
             )
             return
         out = pd.DataFrame(
-            {c: uniques.take(a) for c, a in zip(columns, res)}
+            {c: a if c in passthrough else uniques.take(a)
+             for c, a in zip(columns, res)}
         )
         out["_overflow"] = None
         for i in range(0, len(out), _CHUNK):
             yield out.iloc[i : i + _CHUNK]
 
     schema = T.StructType(
-        [T.StructField(c, id_t) for c in columns]
+        [T.StructField(c, T.LongType() if c in passthrough else id_t)
+         for c in columns]
         + [T.StructField("_overflow", T.StringType())]
     )
     obs = Observation()
